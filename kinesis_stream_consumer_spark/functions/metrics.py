@@ -69,6 +69,23 @@ def shuffle_stats(df: DataFrame) -> dict:
     return stats
 
 
+def _count_value(value, caller: str) -> int:
+    """A sum-typed SQL metric ('shuffle records written', 'number of
+    output rows'), rendered as a plain (comma-separated) integer. The
+    sweeps feed exact and UPPER-bound gates, so a lenient parse fails in
+    the PERMISSIVE direction: treating an unrecognized format as 0 or
+    truncating "2.0 KiB" to 2 would let a real regression pass
+    vacuously. Parse strictly and raise loudly on anything that is not a
+    leading integer — a format change should break the gate, not silence
+    it."""
+    raw = str(value).strip()
+    if re.fullmatch(r"\d[\d,]*", raw) is None:
+        raise ValueError(
+            f"{caller}: unparseable metric value {raw!r} — update the parser"
+        )
+    return int(raw.replace(",", ""))
+
+
 def last_execution_id(spark) -> int:
     """Most recent SQL execution id in this session (-1 if none) — the
     'before' cursor for :func:`session_shuffle_records`."""
@@ -96,40 +113,60 @@ def session_shuffle_records(spark, before_execution_id: int) -> int:
     metric descriptor list repeats a node's accumulators once per AQE
     re-plan, so dedupe by accumulator id or the sweep overcounts ~6-8x.
     """
+    return _sweep(spark, before_execution_id, "shuffle records written")
+
+
+def session_generated_rows(spark, before_execution_id: int, generator: str) -> int:
+    """Rows emitted by every Generate node whose description contains
+    ``generator`` (e.g. ``"explode(shingles"``), summed over ALL SQL
+    executions with id greater than ``before_execution_id``.
+
+    A pass counter that job and stage counts cannot give: however many
+    AQE stage jobs an operator's build splits into, exploding its input
+    once emits exactly one pass's rows here, and a second pass doubles
+    them.
+    """
+    return _sweep(
+        spark,
+        before_execution_id,
+        "number of output rows",
+        lambda node: node.name() == "Generate" and generator in node.desc(),
+    )
+
+
+def _sweep(spark, before_execution_id: int, metric_name: str, node_filter=None) -> int:
+    """Sum ``metric_name`` over the SQL executions after the cursor,
+    deduped by accumulator id within each execution. With ``node_filter``
+    only the metrics of matching plan-graph nodes count."""
+    # the status store is fed asynchronously by the listener bus
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     store = spark._jsparkSession.sharedState().statusStore()
     lst = store.executionsList()
     total = 0
     for i in range(lst.size()):
         e = lst.apply(i)
-        if e.executionId() <= before_execution_id:
+        eid = e.executionId()
+        if eid <= before_execution_id:
             continue
-        mets = e.metrics()
-        vals = store.executionMetrics(e.executionId())
-        it = mets.iterator()
+        if node_filter is None:
+            mets = [e.metrics()]
+        else:
+            nodes = store.planGraph(eid).allNodes()
+            mets = [
+                n.metrics()
+                for n in (nodes.apply(j) for j in range(nodes.size()))
+                if node_filter(n)
+            ]
+        vals = store.executionMetrics(eid)
         seen = set()
-        while it.hasNext():
-            m = it.next()
-            acc = m.accumulatorId()
-            if m.name() == "shuffle records written" and acc not in seen:
-                seen.add(acc)
-                v = vals.get(acc)
-                if not v.isEmpty():
-                    # 'shuffle records written' is a sum-typed metric
-                    # rendered as a plain (comma-separated) integer. The
-                    # sweep feeds UPPER-bound gates (assert total <=
-                    # bound), so a lenient parse fails in the PERMISSIVE
-                    # direction: treating an unrecognized format as 0
-                    # (ADVICE r13's suggestion) or truncating "2.0 KiB"
-                    # to 2 would let a real map-side-combine regression
-                    # pass vacuously. Parse strictly and raise loudly on
-                    # anything that is not a leading integer — a format
-                    # change should break the gate, not silence it
-                    # (r14 code review, refining the ADVICE fix).
-                    raw = str(v.get()).strip()
-                    if re.fullmatch(r"\d[\d,]*", raw) is None:
-                        raise ValueError(
-                            "session_shuffle_records: unparseable "
-                            f"metric value {raw!r} — update the parser"
-                        )
-                    total += int(raw.replace(",", ""))
+        for seq in mets:
+            it = seq.iterator()
+            while it.hasNext():
+                m = it.next()
+                acc = m.accumulatorId()
+                if m.name() == metric_name and acc not in seen:
+                    seen.add(acc)
+                    v = vals.get(acc)
+                    if not v.isEmpty():
+                        total += _count_value(v.get(), metric_name)
     return total

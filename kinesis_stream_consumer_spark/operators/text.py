@@ -112,12 +112,6 @@ def lang_id_from_tokens(lowered_toks: Column) -> Column:
     return expr
 
 
-def lang_id(text: Column) -> Column:
-    """lang_id_from_tokens over an inline tokenization — convenient form;
-    prefer the two-step in hot paths (see lang_id_from_tokens)."""
-    return lang_id_from_tokens(tokens(F.lower(text)))
-
-
 def char_ngram_min_fingerprint(text: Column, n: int = 5) -> Column:
     """Document fingerprint: min-of-md5 over all character n-grams
     (winnowing-style selection with window = whole doc). Deterministic,
@@ -188,14 +182,6 @@ def repetition_gram_rows(df, text_col: str, id_col: str):
 # tokens, or where words inside repeated bigrams exceed 50%, are flagged.
 REPETITION_TOP_UNIGRAM_MAX = 0.2
 REPETITION_DUP_BIGRAM_MAX = 0.5
-
-
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles as an array<string> — the unit set for
-    Jaccard / MinHash dedup. Convenience single-expression form; for hot
-    paths prefer dedup.shingle_sets, which materializes the token array
-    first (linear time — see shingles_from_tokens)."""
-    return shingles_from_tokens(tokens(text), k)
 
 
 def _cms_bucket_pairs(width: int, depth: int):

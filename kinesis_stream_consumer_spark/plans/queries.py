@@ -78,13 +78,7 @@ def _rebalance_scan(
     the repartition costs +40-52% on scan-dominated queries whose
     post-scan work is a cheap aggregate, while buying 8-30x on shingle /
     HOF / Arrow-UDF paths). Scan-bound queries leave it False.
-    SPARK_GRAFT_REBALANCE=always|never overrides for A/B measurement.
     """
-    mode = os.environ.get("SPARK_GRAFT_REBALANCE", "")
-    if mode == "always":
-        enabled = True
-    elif mode == "never":
-        enabled = False
     if not enabled:
         return df
     if not os.path.isfile(path):

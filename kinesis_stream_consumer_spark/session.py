@@ -97,15 +97,3 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Read the driver-generated parquet tables and register temp views."""
-    out = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

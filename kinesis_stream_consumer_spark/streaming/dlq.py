@@ -105,16 +105,6 @@ def dead_message_envelope_cols(
     ]
 
 
-def dead_message_envelopes(
-    rejected: DataFrame, stream_consumer_id: str, stream_type_tag: str = "K"
-) -> DataFrame:
-    """D3: rejected/discarded/abandoned messages → 'DM|K|2.0' envelopes;
-    reasonRejected ≙ batch.findReasonRejected (kinesis-processing.js:715)."""
-    return rejected.select(
-        *dead_message_envelope_cols(stream_consumer_id, stream_type_tag)
-    )
-
-
 def append_to_queue(
     envelopes: DataFrame, path: str, n_rows: int | None = None
 ) -> None:

@@ -29,11 +29,12 @@ test/kinesis-consumer.test.js:746-845).
 from __future__ import annotations
 
 import json
+import time
 from dataclasses import dataclass
-from typing import Callable, Dict, Iterator, List, Optional, Sequence, Tuple
+from typing import Callable, Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -88,6 +89,29 @@ _FINAL_SCHEMA = T.StructType(
 )
 
 _PASS_COLS = [n for n, _ in _PASSTHROUGH]
+# per-message output columns: of the exec stage, and of finalise (the
+# order of tasks.finalise_outputs' tuple)
+_EXEC_COLS = ["tasks_json", "_one_fully_finalised"]
+_FINAL_COLS = [
+    "tasks_json", "fully_finalised", "rejectedish", "incomplete", "reason_rejected"
+]
+
+
+def _assign_rows(out: pd.DataFrame, names: List[str], rows: list) -> None:
+    """Set columns ``names`` of ``out`` from one tuple per row."""
+    columns = list(zip(*rows)) if rows else [()] * len(names)
+    for name, values in zip(names, columns):
+        out[name] = list(values)
+
+
+class _SavedState(NamedTuple):
+    """What the last default state save wrote: the (consumer, shard)
+    partitions it replaced, the ``states`` frame those partitions now
+    equal on disk, and that frame's pre-planned revive slice."""
+
+    shards: frozenset
+    states: DataFrame
+    revive_slice: DataFrame
 
 
 class BatchReplayError(RuntimeError):
@@ -160,25 +184,23 @@ class Engine:
         # whole partitions), so the next batch's T1 load can serve from it
         # instead of re-reading parquet — valid only while the requested
         # shard set is covered and nothing else rewrites those partitions
-        # (custom save seams and compaction invalidate it). The frame is
-        # lazy over already-checkpointed inputs, so caching costs no job.
-        self._saved_state_cache: Optional[Tuple[frozenset, DataFrame]] = None
-        # Pre-planned revive slice (r8, from the overlap_plan sub-mark:
-        # the stats job always finishes BEFORE the speculative phase-2
-        # build — overlap_stats_wait measured 0.000 every steady batch —
-        # so every ms of Catalyst analysis inside the build is pure
-        # critical-path driver time while the cluster idles). The revive
-        # join needs only (shardOrEventID, identity, msg_md5, tasks_json)
-        # of live message/rejected rows, but embedding cache[1] put the
-        # WHOLE states union tree (t4 select forests, sketch branches)
-        # through per-batch re-analysis. Instead, at cache-set time the
-        # slim projection is wrapped in a lazy localCheckpoint: planning
-        # happens ONCE per batch at set time, and the next batch's build
-        # analyzes a single LogicalRDD leaf. Computation still runs
-        # inside the next batch's first action over already-checkpointed
-        # inputs — no extra job, and no parquet read the save could
-        # overwrite.
-        self._revive_slice_cache: Optional[DataFrame] = None
+        # (custom save seams, zero-row saves and compaction reset it to
+        # None). The frame is lazy over already-checkpointed inputs, so
+        # caching costs no job.
+        # The revive slice rides in the same tuple (r8, from the
+        # overlap_plan sub-mark: the stats job always finishes BEFORE the
+        # speculative phase-2 build, so every ms of Catalyst analysis
+        # inside the build is critical-path driver time). The revive join
+        # needs only (shardOrEventID, identity, msg_md5, tasks_json) of
+        # live message/rejected rows; at set time that slim projection is
+        # wrapped in a lazy localCheckpoint, so planning happens ONCE per
+        # batch and the next batch's build analyzes a single LogicalRDD
+        # leaf instead of the whole states union tree. Computation still
+        # runs inside the next batch's first action over already-
+        # checkpointed inputs — no extra job, and no parquet read the save
+        # could overwrite. One attribute, so the slice can never outlive
+        # the states it was cut from.
+        self._saved_state: Optional[_SavedState] = None
         # Stats/plan overlap (see process_batch): the previous batch's
         # message-count seeds the next batch's exec task sizing so the
         # whole phase-2 plan can be built while the stats job runs; the
@@ -238,10 +260,6 @@ class Engine:
 
         cfg = config
         self._t4_tag = "K" if cfg.stream_type == StreamType.kinesis else "D"
-        state_key_col = F.concat(
-            F.lit("E|" if cfg.batch_keyed_on_event_id else "S|"),
-            F.col("event_id" if cfg.batch_keyed_on_event_id else "shard_id"),
-        )
         _passthrough = [
             "identity",
             "id",
@@ -257,7 +275,7 @@ class Engine:
         nul_long = F.lit(None).cast("long")
         self._t4_msg_head = [
             F.lit(cfg.stream_consumer_id).alias("streamConsumerId"),
-            state_key_col.alias("shardOrEventID"),
+            self._shard_or_event_col.alias("shardOrEventID"),
             F.when(F.col("rejectedish"), "rejected")
             .otherwise("message")
             .alias("kind"),
@@ -287,29 +305,52 @@ class Engine:
             cfg.stream_consumer_id, self._t4_tag
         )
 
-    # --- phase 2a: processOne via per-chain ordered applyInPandas ----------
+    # --- phase 2a: processOne via per-chain ordered mapInPandas ------------
 
-    def _make_message_executor(self, deadline_epoch: Optional[float]):
-        """(prior_json, data_str, blocked[, raw]) → (tasks_json,
-        one_incomplete, fully_finalised), or with ``raw`` the parsed task
-        tree itself — the fused exec+finalise path finalises in place
-        instead of re-parsing the serialized tree in a second Python
-        stage. The shared X1/X5/D1 per-message execution core, closed
-        over picklable state only."""
+    def _exec_fn(
+        self,
+        deadline_epoch: Optional[float] = None,
+        fused_finalise: bool = False,
+        chain_col: str = "chain_key",
+    ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+        """Ordered per-chain execution as a STREAMING mapInPandas over
+        partitions hash-partitioned by ``chain_col`` and sorted by
+        (chain_col, *sequencing.chain_order_columns()) — seq_index does
+        NOT exist on the input; this fn assigns it as a per-chain running
+        counter while walking the sorted chain (r7: the per-batch
+        sequencing window is gone). Unlike groupBy().applyInPandas — which
+        materializes each chain as one pandas DataFrame — this processes
+        Arrow batches incrementally, so a giant chain (per-shard mode, the
+        reference's own serialization hazard) streams through bounded
+        memory instead of OOMing. Chain-blocking state is a per-chain
+        boolean carried across batch boundaries.
+
+        ``chain_col`` is ``identity`` in Q5 unsequenced mode: the input is
+        already deduplicated on identity, so every message is a chain of
+        one — seq_index 1, no duplicate drops, no blocking.
+
+        ``fused_finalise``: with no processAll defs nothing between
+        execution and the finalise-merge needs whole-batch scope, so the
+        finalise rules run here on the still-parsed task tree and the
+        batch crosses Arrow ONCE (emitting _FINAL_SCHEMA) instead of
+        serializing, re-parsing, and re-crossing in a second Python
+        stage."""
         one_defs, all_defs = self.one_defs, self.all_defs
         one_names = [d.name for d in one_defs]
+        max_attempts = self.config.max_number_of_attempts
+        out_cols = _FINAL_COLS if fused_finalise else _EXEC_COLS
+        dropped_row = (
+            ("", False, False, False, None) if fused_finalise else ("", False)
+        )
 
-        def execute_message(prior_json, data_str, blocked, raw=False):
-            import time as _time
-
+        def execute_message(prior_json, data_str, blocked):
+            """X1/X5/D1 per-message execution: (task tree, whether a
+            processOne task is left incomplete)."""
             tasks = tk.init_tasks(prior_json, one_defs, all_defs)
             # X5 timeout race: past the deadline, unfinished tasks become
             # TimedOut (attempts reset at finalise), state still saved,
             # batch fails ⇒ replay (test/kinesis-consumer.test.js:2884-3030)
-            timed_out = (
-                deadline_epoch is not None and _time.time() >= deadline_epoch
-            )
-            if timed_out:
+            if deadline_epoch is not None and time.time() >= deadline_epoch:
                 for d in one_defs:
                     st = tasks[d.name]
                     statuses = [st["status"]] + [
@@ -325,41 +366,7 @@ class Engine:
                 for d in one_defs:
                     tk.execute_one_task(tasks[d.name], d, message)
             one_part = {n: tasks[n] for n in one_names if n in tasks}
-            if raw:
-                return (tasks, tk.is_incomplete(one_part))
-            return (
-                tk.dumps(tasks),
-                tk.is_incomplete(one_part),
-                tk.is_fully_finalised(tasks),
-            )
-
-        return execute_message
-
-    def _exec_fn(
-        self,
-        deadline_epoch: Optional[float] = None,
-        fused_finalise: bool = False,
-    ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-        """Ordered per-chain execution as a STREAMING mapInPandas over
-        partitions hash-partitioned by chain_key and sorted by
-        (chain_key, *sequencing.chain_order_columns()) — seq_index does
-        NOT exist on the input; this fn assigns it as a per-chain running
-        counter while walking the sorted chain (r7: the per-batch
-        sequencing window is gone). Unlike groupBy().applyInPandas — which
-        materializes each chain as one pandas DataFrame — this processes
-        Arrow batches incrementally, so a giant chain (per-shard mode, the
-        reference's own serialization hazard) streams through bounded
-        memory instead of OOMing. Chain-blocking state is a per-chain
-        boolean carried across batch boundaries.
-
-        ``fused_finalise``: with no processAll defs nothing between
-        execution and the finalise-merge needs whole-batch scope, so the
-        finalise rules run here on the still-parsed task tree and the
-        batch crosses Arrow ONCE (emitting _FINAL_SCHEMA) instead of
-        serializing, re-parsing, and re-crossing in a second Python
-        stage."""
-        execute_message = self._make_message_executor(deadline_epoch)
-        max_attempts = self.config.max_number_of_attempts
+            return tasks, tk.is_incomplete(one_part)
 
         def run_sorted_partition(
             batches: Iterator[pd.DataFrame],
@@ -371,20 +378,16 @@ class Engine:
             # (duplicate deliveries are numbered before being dropped,
             # matching window numbering over all rows). Carried across
             # Arrow batches like `blocked`; chains never span partitions
-            # (the exec shuffle hash-partitions on chain_key).
+            # (the exec shuffle hash-partitions on the chain column).
             seq_no: Dict[str, int] = {}
             for pdf in batches:
                 out_seq: List[int] = []
-                out_tasks: List[str] = []
-                out_ff: List[bool] = []
-                out_rej: List[bool] = []
-                out_inc: List[bool] = []
-                out_reason: List[Optional[str]] = []
+                rows: list = []
                 keep: List[bool] = []
                 # zip over plain lists, not iterrows — per-row Series
                 # construction dominates at 10^5+ messages per partition
                 for chain, ident, prior_json, data_str in zip(
-                    pdf["chain_key"].tolist(),
+                    pdf[chain_col].tolist(),
                     pdf["identity"].tolist(),
                     pdf["prior_tasks_json"].tolist(),
                     pdf["data_str"].tolist(),
@@ -398,135 +401,32 @@ class Engine:
                     # shuffle (reference: dropDuplicates on ids/md5s).
                     if last_identity.get(chain) == ident:
                         keep.append(False)
-                        out_tasks.append("")
-                        out_ff.append(False)
-                        out_rej.append(False)
-                        out_inc.append(False)
-                        out_reason.append(None)
+                        rows.append(dropped_row)
                         continue
                     last_identity[chain] = ident
                     keep.append(True)
-                    if fused_finalise:
-                        tasks, one_incomplete = execute_message(
-                            prior_json, data_str, blocked.get(chain, False),
-                            raw=True,
-                        )
-                        # blocking is decided on the PRE-finalise state,
-                        # exactly like the two-stage path (a message whose
-                        # tasks the rules then discard still blocked its
-                        # chain successors this batch)
-                        if one_incomplete:
-                            blocked[chain] = True
-                        tk.apply_finalise_rules(tasks, max_attempts)
-                        out_reason.append(
-                            next(
-                                (
-                                    node.get("reason")
-                                    for st in tasks.values()
-                                    for node in [
-                                        st,
-                                        *st.get("subtasks", {}).values(),
-                                    ]
-                                    if node["status"]
-                                    in tk.FULLY_FINALISED_TERMINAL
-                                ),
-                                None,
-                            )
-                        )
-                        out_tasks.append(tk.dumps(tasks))
-                        out_ff.append(tk.is_fully_finalised(tasks))
-                        out_rej.append(tk.is_rejectedish(tasks))
-                        out_inc.append(tk.is_incomplete(tasks))
-                        continue
-                    tasks_json, one_incomplete, fully_fin = execute_message(
+                    tasks, one_incomplete = execute_message(
                         prior_json, data_str, blocked.get(chain, False)
                     )
                     # X1 chain blocking: an incomplete message blocks its
                     # chain successors (implied by Q3/Q4 +
                     # firstMessagesToProcess, test/kinesis-consumer.test.js:505)
+                    # — decided on the PRE-finalise state on both paths (a
+                    # message whose tasks the rules then discard still
+                    # blocked its chain successors this batch)
                     if one_incomplete:
                         blocked[chain] = True
-                    out_tasks.append(tasks_json)
-                    out_ff.append(fully_fin)
+                    rows.append(
+                        tk.finalise_outputs(tasks, max_attempts)
+                        if fused_finalise
+                        else (tk.dumps(tasks), tk.is_fully_finalised(tasks))
+                    )
                 out = pdf[[c for c in _PASS_COLS if c != "seq_index"]].copy()
                 out["seq_index"] = pd.array(out_seq, dtype="int32")
-                out["tasks_json"] = out_tasks
-                if fused_finalise:
-                    out["fully_finalised"] = out_ff
-                    out["rejectedish"] = out_rej
-                    out["incomplete"] = out_inc
-                    out["reason_rejected"] = out_reason
-                else:
-                    out["_one_fully_finalised"] = out_ff
-                out = out[pd.Series(keep, index=out.index)]
-                yield out
+                _assign_rows(out, out_cols, rows)
+                yield out[pd.Series(keep, index=out.index)]
 
         return run_sorted_partition
-
-    def _exec_map_fn(
-        self,
-        deadline_epoch: Optional[float] = None,
-        fused_finalise: bool = False,
-    ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-        """Q5 unsequenced fast path: every message is its own chain, so no
-        ordering and no blocking — mapInPandas over the scan partitions,
-        ZERO shuffle (the per-chain path would shuffle on chain_key just to
-        build 1-row groups). ``fused_finalise`` as in _exec_fn."""
-        execute_message = self._make_message_executor(deadline_epoch)
-        max_attempts = self.config.max_number_of_attempts
-
-        def run_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = pdf[_PASS_COLS].copy()
-                if fused_finalise:
-                    out_tasks, out_ff, out_rej, out_inc, out_reason = (
-                        [], [], [], [], []
-                    )
-                    for prior_json, data_str in zip(
-                        pdf["prior_tasks_json"].tolist(),
-                        pdf["data_str"].tolist(),
-                    ):
-                        tasks, _ = execute_message(
-                            prior_json, data_str, False, raw=True
-                        )
-                        tk.apply_finalise_rules(tasks, max_attempts)
-                        out_reason.append(
-                            next(
-                                (
-                                    node.get("reason")
-                                    for st in tasks.values()
-                                    for node in [
-                                        st,
-                                        *st.get("subtasks", {}).values(),
-                                    ]
-                                    if node["status"]
-                                    in tk.FULLY_FINALISED_TERMINAL
-                                ),
-                                None,
-                            )
-                        )
-                        out_tasks.append(tk.dumps(tasks))
-                        out_ff.append(tk.is_fully_finalised(tasks))
-                        out_rej.append(tk.is_rejectedish(tasks))
-                        out_inc.append(tk.is_incomplete(tasks))
-                    out["tasks_json"] = out_tasks
-                    out["fully_finalised"] = out_ff
-                    out["rejectedish"] = out_rej
-                    out["incomplete"] = out_inc
-                    out["reason_rejected"] = out_reason
-                    yield out
-                    continue
-                results = [
-                    execute_message(prior_json, data_str, False)
-                    for prior_json, data_str in zip(
-                        pdf["prior_tasks_json"].tolist(), pdf["data_str"].tolist()
-                    )
-                ]
-                out["tasks_json"] = [r[0] for r in results]
-                out["_one_fully_finalised"] = [r[2] for r in results]
-                yield out
-
-        return run_rows
 
     # --- phase 2b/2c: processAll master + finalise-merge -------------------
 
@@ -563,7 +463,7 @@ class Engine:
 
         def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                out_tasks, out_ff, out_rej, out_inc, out_reason = [], [], [], [], []
+                rows = []
                 for tasks_json, ident in zip(
                     pdf["tasks_json"].tolist(), pdf["identity"].tolist()
                 ):
@@ -589,28 +489,9 @@ class Engine:
                             slave["status"] = status
                             slave["error"] = error
                             slave["reason"] = reason
-                    tk.apply_finalise_rules(tasks, max_attempts)
-                    out_reason.append(
-                        next(
-                            (
-                                node.get("reason")
-                                for st in tasks.values()
-                                for node in [st, *st.get("subtasks", {}).values()]
-                                if node["status"] in tk.FULLY_FINALISED_TERMINAL
-                            ),
-                            None,
-                        )
-                    )
-                    out_tasks.append(tk.dumps(tasks))
-                    out_ff.append(tk.is_fully_finalised(tasks))
-                    out_rej.append(tk.is_rejectedish(tasks))
-                    out_inc.append(tk.is_incomplete(tasks))
+                    rows.append(tk.finalise_outputs(tasks, max_attempts))
                 out = pdf[_PASS_COLS].copy()
-                out["tasks_json"] = out_tasks
-                out["fully_finalised"] = out_ff
-                out["rejectedish"] = out_rej
-                out["incomplete"] = out_inc
-                out["reason_rejected"] = out_reason
+                _assign_rows(out, _FINAL_COLS, rows)
                 yield out
 
         return merge
@@ -639,7 +520,6 @@ class Engine:
         that batch's contribution — the honest additive-counter bound,
         pinned in tests (the distinct sketch is HLL max-merge for exactly
         this reason)."""
-        cfg = self.config
         # eager checkpoint of the delta FIRST: it feeds both the merge
         # below and the save rows, and without the checkpoint the
         # row-scaled counting pass would run twice per micro-batch
@@ -676,30 +556,42 @@ class Engine:
                 .localCheckpoint(eager=True)
             )
 
-        def rows(frame: DataFrame, kind: str) -> DataFrame:
-            nul = F.lit(None).cast("string")
-            return frame.select(
-                F.lit(cfg.stream_consumer_id).alias("streamConsumerId"),
-                F.col("g").alias("shardOrEventID"),
-                F.lit(kind).alias("kind"),
-                F.concat(F.lit(id_prefix), F.col("idx")).alias("identity"),
-                nul.alias("id"),
-                nul.alias("key"),
-                nul.alias("seqNo"),
-                nul.alias("event_id"),
-                nul.alias("event_seq_no"),
-                F.lit(None).cast("long").alias("event_sub_seq_no"),
-                nul.alias("msg_md5"),
-                nul.alias("rec_md5"),
-                nul.alias("data_md5"),
-                nul.alias("tasks_json"),
-                nul.alias("reason"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                F.col("idx").cast("long").alias("sketch_bucket"),
-                F.col("cnt").cast("long").alias("sketch_r"),
+        ident = F.concat(F.lit(id_prefix), F.col("idx"))
+        return self._sketch_state_rows(
+            cum, batch_id, kind_cum, ident, F.col("idx"), F.col("cnt")
+        ).unionByName(
+            self._sketch_state_rows(
+                delta, batch_id, kind_delta, ident, F.col("idx"), F.col("cnt")
             )
+        )
 
-        return rows(cum, kind_cum).unionByName(rows(delta, kind_delta))
+    def _sketch_state_rows(
+        self,
+        regs: DataFrame,
+        batch_id: int,
+        kind: str,
+        identity: Column,
+        bucket: Column,
+        register: Column,
+    ) -> DataFrame:
+        """STATE_SCHEMA rows for a sketch register frame keyed by shard
+        column ``g``: every message column NULL, the register in
+        (sketch_bucket, sketch_r)."""
+        given = {
+            "streamConsumerId": F.lit(self.config.stream_consumer_id),
+            "shardOrEventID": F.col("g"),
+            "kind": F.lit(kind),
+            "identity": identity,
+            "batch_id": F.lit(batch_id).cast("long"),
+            "sketch_bucket": bucket.cast("long"),
+            "sketch_r": register.cast("long"),
+        }
+        return regs.select(
+            *[
+                given.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
+                for f in STATE_SCHEMA.fields
+            ]
+        )
 
     # --- the 3-phase batch lifecycle ---------------------------------------
 
@@ -740,23 +632,16 @@ class Engine:
         deadline, unfinished tasks become TimedOut (attempts reset), state
         is still saved, and the batch fails for replay.
 
-        SPARK_GRAFT_ENGINE_TIMING=1 prints per-section wall times to
-        stderr — the profiling surface for micro-batch fixed costs.
+        Per-section wall times land in ``self.last_section_times``.
         """
-        import os as _os
-        import sys as _sys
-        import time as _time
-
-        _timing = _os.environ.get("SPARK_GRAFT_ENGINE_TIMING") == "1"
         _marks: list[tuple[str, float]] = []
-        _last = _time.perf_counter()
+        _last = time.perf_counter()
 
         def _mark(label: str) -> None:
-            # always collected (a handful of perf_counter calls per batch);
-            # exposed as self.last_section_times for the scale-soak test,
-            # printed to stderr only under SPARK_GRAFT_ENGINE_TIMING=1
+            # a handful of perf_counter calls per batch, exposed as
+            # self.last_section_times
             nonlocal _last
-            now = _time.perf_counter()
+            now = time.perf_counter()
             _marks.append((label, now - _last))
             _last = now
 
@@ -767,7 +652,7 @@ class Engine:
         # finish, so this join is ~free in steady state.
         self.drain_discard_sinks()
         deadline = (
-            _time.time()
+            time.time()
             + cfg.timeout_at_percentage_of_remaining_time * remaining_time_ms / 1000.0
             if remaining_time_ms is not None
             else None
@@ -950,23 +835,22 @@ class Engine:
                     chain_order_columns,
                 )
 
-                executed = (
+                ordered = (
                     revived.repartition(n_parts, "chain_key")
                     .sortWithinPartitions("chain_key", *chain_order_columns())
                     .drop("sort_key")
-                    .mapInPandas(
-                        self._exec_fn(deadline, fused_finalise=fused),
-                        schema=exec_schema,
-                    )
                 )
+                chain_col = "chain_key"
             else:
                 # Q5: no ordering ⇒ map straight over the scan; D1
                 # within-batch dedup needs one shuffle here (no chain sort
-                # to make duplicate identities adjacent)
-                executed = revived.dropDuplicates(["identity"]).mapInPandas(
-                    self._exec_map_fn(deadline, fused_finalise=fused),
-                    schema=exec_schema,
-                )
+                # to make duplicate identities adjacent), after which each
+                # identity is its own chain
+                ordered = revived.dropDuplicates(["identity"])
+                chain_col = "identity"
+            executed = ordered.mapInPandas(
+                self._exec_fn(deadline, fused, chain_col), schema=exec_schema
+            )
             # _one_fully_finalised (processAll scoping, X2) is emitted by
             # the exec fn itself — the executor already holds the parsed
             # task tree, so the flag is free and phase 2b's plan stays
@@ -1017,7 +901,7 @@ class Engine:
         # path: the processAll variant runs an aggregate action during
         # plan construction, which must not race the stats job for the
         # phase-1 checkpoint materialization.
-        cache = self._saved_state_cache
+        cache = self._saved_state
         overlap = None
         empty_prior = None
         _mark("phase1_plan")
@@ -1048,17 +932,11 @@ class Engine:
                 self._plan_pool = ThreadPoolExecutor(1)
             stats_fut = self._plan_pool.submit(stats_df.collect)
             if warm_overlap:
-                # pre-planned slim slice when available (set with the
-                # cache): already kind-filtered and projected, and a
-                # checkpoint LEAF — the build below re-analyzes four
-                # columns instead of the whole prior states union tree
-                prior_src = (
-                    self._revive_slice_cache
-                    if self._revive_slice_cache is not None
-                    else cache[1].where(
-                        F.col("kind").isin("message", "rejected")
-                    )
-                )
+                # the pre-planned slim slice: already kind-filtered and
+                # projected, and a checkpoint LEAF — the build below
+                # re-analyzes four columns instead of the whole prior
+                # states union tree
+                prior_src = cache.revive_slice
                 est = self._last_n_records
             else:
                 empty_prior = self.spark.createDataFrame([], STATE_SCHEMA)
@@ -1096,7 +974,7 @@ class Engine:
         if (
             overlap is not None
             and shards
-            and (empty_prior is not None or shards <= cache[0])
+            and (empty_prior is not None or shards <= cache.shards)
         ):
             # the optimistic plan's prior slice covers this batch: keep it
             # (an empty-state build covers ANY shard set by construction)
@@ -1104,7 +982,7 @@ class Engine:
             prior_all = (
                 empty_prior
                 if empty_prior is not None
-                else cache[1].where(
+                else cache.states.where(
                     F.col("shardOrEventID").isin(list(shards))
                 )
             )
@@ -1114,8 +992,8 @@ class Engine:
             if cfg.load_batch_state is not None:
                 prior = cfg.load_batch_state(self, shards or None)
             else:
-                if cache is not None and shards and shards <= cache[0]:
-                    prior_all = cache[1].where(
+                if cache is not None and shards and shards <= cache.shards:
+                    prior_all = cache.states.where(
                         F.col("shardOrEventID").isin(list(shards))
                     )
                 else:
@@ -1186,22 +1064,22 @@ class Engine:
         # computing the checkpoint through the revive join's prior-state
         # scan — has finished. With a custom save seam or an empty batch,
         # the legacy separate counters aggregate runs first, sinks after.
+        flags = {"n_rejected": "rejectedish", "n_ff": "fully_finalised",
+                 "n_inc": "incomplete"}
+        counters = [F.count(F.lit(1)).alias("n_messages")] + [
+            F.sum(F.when(F.col(flag), 1).otherwise(0)).alias(name)
+            for name, flag in flags.items()
+        ]
+
+        def _read_counters(row) -> tuple:
+            # (n_messages, n_rejected, n_ff, n_inc), from the agg Row or the
+            # Observation's dict alike
+            return tuple(int(row[name] or 0) for name in ["n_messages", *flags])
+
         obs: Optional[Observation] = None
         if cfg.save_batch_state is None and (n_records or n_unusable):
             obs = Observation()
-            finalised = finalised.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_messages"),
-                F.sum(F.when(F.col("rejectedish"), 1).otherwise(0)).alias(
-                    "n_rejected"
-                ),
-                F.sum(F.when(F.col("fully_finalised"), 1).otherwise(0)).alias(
-                    "n_ff"
-                ),
-                F.sum(F.when(F.col("incomplete"), 1).otherwise(0)).alias(
-                    "n_inc"
-                ),
-            )
+            finalised = finalised.observe(obs, *counters)
         rejected = finalised.where(F.col("rejectedish"))
 
         def _default_dmq() -> None:
@@ -1215,16 +1093,9 @@ class Engine:
             )
 
         if obs is None:
-            counts = finalised.agg(
-                F.count(F.lit(1)),
-                F.sum(F.when(F.col("rejectedish"), 1).otherwise(0)),
-                F.sum(F.when(F.col("fully_finalised"), 1).otherwise(0)),
-                F.sum(F.when(F.col("incomplete"), 1).otherwise(0)),
-            ).first()
-            n_messages = counts[0]
-            n_rejected = counts[1] or 0
-            n_fully_finalised = counts[2] or 0
-            n_incomplete = counts[3] or 0
+            n_messages, n_rejected, n_fully_finalised, n_incomplete = (
+                _read_counters(finalised.agg(*counters).first())
+            )
         _mark("exec_finalise_and_counters")
         if obs is None and n_rejected:
             # D3 seam: discardRejectedMessage (kinesis-processing.js:297).
@@ -1298,28 +1169,16 @@ class Engine:
                         .agg(F.max("r").alias("r"))
                         .localCheckpoint(eager=True)
                     )
-                nul = F.lit(None).cast("string")
-                sketch_states = batch_regs.select(
-                    F.lit(cfg.stream_consumer_id).alias("streamConsumerId"),
-                    F.col("g").alias("shardOrEventID"),
-                    F.lit("sketch").alias("kind"),
-                    F.concat(F.lit("HLL|"), F.col("bucket")).alias("identity"),
-                    nul.alias("id"),
-                    nul.alias("key"),
-                    nul.alias("seqNo"),
-                    nul.alias("event_id"),
-                    nul.alias("event_seq_no"),
-                    F.lit(None).cast("long").alias("event_sub_seq_no"),
-                    nul.alias("msg_md5"),
-                    nul.alias("rec_md5"),
-                    nul.alias("data_md5"),
-                    nul.alias("tasks_json"),
-                    nul.alias("reason"),
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    F.col("bucket").cast("long").alias("sketch_bucket"),
-                    F.col("r").cast("long").alias("sketch_r"),
+                states = states.unionByName(
+                    self._sketch_state_rows(
+                        batch_regs,
+                        batch_id,
+                        "sketch",
+                        F.concat(F.lit("HLL|"), F.col("bucket")),
+                        F.col("bucket"),
+                        F.col("r"),
+                    )
                 )
-                states = states.unionByName(sketch_states)
             # Additive sketches count PROCESSED messages — the delta
             # sources from the checkpointed post-exec `finalised` frame,
             # which the D1 within-batch dedup has already filtered, so a
@@ -1331,12 +1190,6 @@ class Engine:
             # custom load_batch_state leaves prior_all None, and merging
             # nothing before a save that REPLACES the shard partitions
             # would silently destroy the accumulated counters.
-            sketch_shard = F.concat(
-                F.lit("E|" if cfg.batch_keyed_on_event_id else "S|"),
-                F.col(
-                    "event_id" if cfg.batch_keyed_on_event_id else "shard_id"
-                ),
-            )
             default_seams = (
                 cfg.save_batch_state is None and cfg.load_batch_state is None
             )
@@ -1358,7 +1211,8 @@ class Engine:
                             # merges additively forever (mirror the qsketch
                             # isNotNull guard)
                             finalised.select(
-                                sketch_shard.alias("shardOrEventID"), "key"
+                                self._shard_or_event_col.alias("shardOrEventID"),
+                                "key",
                             ).where(F.col("key").isNotNull()),
                             "shardOrEventID",
                             F.col("key"),
@@ -1381,7 +1235,7 @@ class Engine:
                 )
 
                 qs_src = finalised.select(
-                    sketch_shard.alias("shardOrEventID"),
+                    self._shard_or_event_col.alias("shardOrEventID"),
                     F.expr(
                         "CAST(substring(event_seq_no,"
                         " greatest(length(event_seq_no) - 14, 1), 15)"
@@ -1417,7 +1271,7 @@ class Engine:
 
                 n_rsv = cfg.sample_sketch_n
                 batch_keys = finalised.select(
-                    sketch_shard.alias("g"),
+                    self._shard_or_event_col.alias("g"),
                     F.col("identity").alias("id"),
                     F.lit(1).cast("long").alias("w"),
                     # uniform draw: pri = u div 1 = the 56-bit md5 integer
@@ -1440,32 +1294,19 @@ class Engine:
                     # register was read from; the frame is <= n+1 rows
                     # per shard, so this is a tiny job
                     regs = regs.localCheckpoint(eager=True)
-                rnul = F.lit(None).cast("string")
-                rsv_states = regs.select(
-                    F.lit(cfg.stream_consumer_id).alias("streamConsumerId"),
-                    F.col("g").alias("shardOrEventID"),
-                    F.lit("rsv").alias("kind"),
-                    F.concat(F.lit("RSV|"), F.col("id")).alias("identity"),
-                    rnul.alias("id"),
-                    rnul.alias("key"),
-                    rnul.alias("seqNo"),
-                    rnul.alias("event_id"),
-                    rnul.alias("event_seq_no"),
-                    F.lit(None).cast("long").alias("event_sub_seq_no"),
-                    rnul.alias("msg_md5"),
-                    rnul.alias("rec_md5"),
-                    rnul.alias("data_md5"),
-                    rnul.alias("tasks_json"),
-                    rnul.alias("reason"),
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    F.col("rank").cast("long").alias("sketch_bucket"),
-                    F.col("pri").cast("long").alias("sketch_r"),
+                states = states.unionByName(
+                    self._sketch_state_rows(
+                        regs,
+                        batch_id,
+                        "rsv",
+                        F.concat(F.lit("RSV|"), F.col("id")),
+                        F.col("rank"),
+                        F.col("pri"),
+                    )
                 )
-                states = states.unionByName(rsv_states)
             if cfg.save_batch_state is not None:
                 cfg.save_batch_state(states, self)
-                self._saved_state_cache = None  # unknown destination
-                self._revive_slice_cache = None
+                self._saved_state = None  # unknown destination
             else:
                 sink_jobs.append(
                     lambda: self.state.save(
@@ -1489,17 +1330,18 @@ class Engine:
         _mark("t4_save_write")
         if default_saved:
             # the written partitions now equal `states` exactly — serve the
-            # next batch's T1 load from it (lazy over checkpointed inputs)
-            self._saved_state_cache = (frozenset(shards), states)
-            # pre-plan the next batch's revive slice HERE (see __init__):
-            # the lazy localCheckpoint runs Catalyst once over the slim
-            # 4-column projection and hands the next overlap build a
-            # checkpoint leaf. No job runs — computation happens inside
-            # the next batch's first action over checkpointed inputs.
-            self._revive_slice_cache = (
+            # next batch's T1 load from it (lazy over checkpointed inputs),
+            # and pre-plan its revive slice HERE (see __init__): the lazy
+            # localCheckpoint runs Catalyst once over the slim 4-column
+            # projection and hands the next overlap build a checkpoint
+            # leaf. No job runs — computation happens inside the next
+            # batch's first action over checkpointed inputs.
+            self._saved_state = _SavedState(
+                frozenset(shards),
+                states,
                 states.where(F.col("kind").isin("message", "rejected"))
                 .select("shardOrEventID", "identity", "msg_md5", "tasks_json")
-                .localCheckpoint(eager=False)
+                .localCheckpoint(eager=False),
             )
         _mark("revive_slice_plan")
         if obs is not None:
@@ -1508,16 +1350,13 @@ class Engine:
             # action returns. DMQ runs after the counters on this path —
             # its job reads the now-materialized checkpoint, so the only
             # serialization cost is the (small) envelope write itself.
-            row = obs.get
-            n_messages = int(row["n_messages"] or 0)
-            n_rejected = int(row["n_rejected"] or 0)
-            n_fully_finalised = int(row["n_ff"] or 0)
-            n_incomplete = int(row["n_inc"] or 0)
+            n_messages, n_rejected, n_fully_finalised, n_incomplete = (
+                _read_counters(obs.get)
+            )
             if default_saved and not (n_messages or n_unusable):
                 # zero rows were written: the cache would claim these
                 # shards hold nothing while disk still has their old rows
-                self._saved_state_cache = None
-                self._revive_slice_cache = None
+                self._saved_state = None
         _mark("obs_counters")
         if obs is not None and n_rejected:
             if cfg.discard_rejected_message is not None:
@@ -1531,13 +1370,6 @@ class Engine:
                 _default_dmq()
         _mark("dlq_and_state_save")
 
-        if _timing:
-            total = sum(d for _, d in _marks)
-            _sys.stderr.write(
-                "ENGINE_TIMING batch=%s total=%.3f %s\n"
-                % (batch_id, total,
-                   " ".join(f"{k}={d:.3f}" for k, d in _marks))
-            )
         result = BatchResult(
             batch_id=batch_id,
             records=n_records,
@@ -1560,8 +1392,7 @@ class Engine:
             and batch_id % self.compact_every_n_batches == 0
         ):
             self.state.compact(batch_id - self.compact_retention_batches)
-            self._saved_state_cache = None  # disk rewritten under the cache
-            self._revive_slice_cache = None
+            self._saved_state = None  # disk rewritten under the cache
         if n_incomplete:
             # F2: in unsequenced mode with a resubmit sink configured,
             # incomplete messages are resubmitted to the source instead of

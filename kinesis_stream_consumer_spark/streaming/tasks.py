@@ -24,7 +24,7 @@ from __future__ import annotations
 import json
 import time
 from dataclasses import dataclass, field
-from typing import Any, Callable, Dict, List, Optional, Sequence
+from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
 
 # --- statuses ----------------------------------------------------------------
 
@@ -231,6 +231,31 @@ def apply_finalise_rules(tasks: Dict[str, Any], max_attempts: int) -> None:
                     f"discarded after {node['attempts']} attempts "
                     f"(maxNumberOfAttempts={max_attempts})"
                 )
+
+
+def finalise_outputs(
+    tasks: Dict[str, Any], max_attempts: int
+) -> Tuple[str, bool, bool, bool, Optional[str]]:
+    """Apply the finalise rules in place, then emit one message's finalise
+    row: (tasks_json, fully_finalised, rejectedish, incomplete, reason) —
+    ``reason`` is the first Rejected/Discarded/Abandoned node's."""
+    apply_finalise_rules(tasks, max_attempts)
+    reason = next(
+        (
+            node.get("reason")
+            for st in tasks.values()
+            for node in [st, *st.get("subtasks", {}).values()]
+            if node["status"] in FULLY_FINALISED_TERMINAL
+        ),
+        None,
+    )
+    return (
+        dumps(tasks),
+        is_fully_finalised(tasks),
+        is_rejectedish(tasks),
+        is_incomplete(tasks),
+        reason,
+    )
 
 
 def dumps(tasks: Dict[str, Any]) -> str:

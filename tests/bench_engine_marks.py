@@ -3,11 +3,11 @@
 End-to-end msg/s over an 8-second window sits inside this host's drift
 envelope (r8 recorded within-arm spreads up to 2.4x), so the end-to-end
 `--ab` mode could not resolve even a real ~1.17x engine win. The signal
-that DID resolve it — interleaved ENGINE_TIMING steady-batch totals —
+that DID resolve it — interleaved steady-batch section-mark totals —
 is what this script measures: one engine, one state dir, N consecutive
 distinct 5k-message batches driven straight through `process_batch`,
 each batch's mark-total taken from `engine.last_section_times` (the sum
-of the per-section walls the ENGINE_TIMING stderr line prints). Batches
+of the per-section walls process_batch records). Batches
 after the first two are "steady" (state populated, Python workers warm,
 plans compiled); their totals are the adjudication unit.
 

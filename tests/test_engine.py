@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import base64
 import json
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -77,6 +78,43 @@ def make_engine(spark, tmp_path, one_defs=(), all_defs=(), **cfg_kw):
 
 def noop(message, task):
     return None
+
+
+UNSEQUENCED = {
+    "sequencing_required": False,
+    "sequencing_per_key": False,
+    "key_property_names": [],
+    "seq_no_property_names": [],
+}
+
+
+def kpl_records_df(spark, rows):
+    """Kinesis records from (eventID, base64 data, partitionKey) rows."""
+    return spark.createDataFrame(
+        [
+            {
+                "eventID": eid,
+                "eventVersion": "1.0",
+                "eventName": "aws:kinesis:record",
+                "eventSource": "aws:kinesis",
+                "eventSourceARN": "arn:aws:kinesis:us-west-2:1:stream/TestStream",
+                "awsRegion": "us-west-2",
+                "invokeIdentityArn": "arn",
+                "kinesis": {
+                    "kinesisSchemaVersion": "1.0",
+                    "partitionKey": pk,
+                    "explicitHashKey": None,
+                    "sequenceNumber": eid.split(":")[1].rjust(56, "0"),
+                    "data": data,
+                },
+            }
+            for eid, data, pk in rows
+        ],
+        schema="eventID string, eventVersion string, eventName string, eventSource string, "
+        "eventSourceARN string, awsRegion string, invokeIdentityArn string, "
+        "kinesis struct<kinesisSchemaVersion:string, partitionKey:string, "
+        "explicitHashKey:string, sequenceNumber:string, data:string>",
+    )
 
 
 def tasks_of(engine, identity=None):
@@ -307,7 +345,10 @@ def test_stale_task_defs_abandoned(spark, tmp_path):
     assert res.rejected_to_dmq == 5
 
 
-def test_process_all_master_slave(spark, tmp_path):
+@pytest.mark.parametrize(
+    "mode_kw", [{}, UNSEQUENCED], ids=["per-key", "unsequenced"]
+)
+def test_process_all_master_slave(spark, tmp_path, mode_kw):
     """X2: processAll master task runs once per batch over incomplete
     messages; its state fans out to per-message slave tasks."""
     seen = {}
@@ -321,6 +362,7 @@ def test_process_all_master_slave(spark, tmp_path):
         tmp_path,
         one_defs=[TaskDef("t1", noop)],
         all_defs=[TaskDef("agg", master)],
+        **mode_kw,
     )
     res = eng.process_batch(records_df(spark, 15), batch_id=1)
     assert seen["n"] == 15  # master saw the whole incomplete set once
@@ -354,34 +396,12 @@ def test_kpl_encoded_pipeline(spark, tmp_path):
     ]
     blob = kpl_aggregate([("1", json.dumps(m).encode()) for m in msgs])
     plain = {"id1": 999, "k1": 2, "k2": "signup", "n1": "2024-01-02T00:00:00", "n2": 999}
-    rows = [
-        ("shardId-0:1", base64.b64encode(blob).decode(), "1"),
-        ("shardId-0:2", base64.b64encode(json.dumps(plain).encode()).decode(), "2"),
-    ]
-    recs = spark.createDataFrame(
+    recs = kpl_records_df(
+        spark,
         [
-            {
-                "eventID": eid,
-                "eventVersion": "1.0",
-                "eventName": "aws:kinesis:record",
-                "eventSource": "aws:kinesis",
-                "eventSourceARN": "arn:aws:kinesis:us-west-2:1:stream/TestStream",
-                "awsRegion": "us-west-2",
-                "invokeIdentityArn": "arn",
-                "kinesis": {
-                    "kinesisSchemaVersion": "1.0",
-                    "partitionKey": pk,
-                    "explicitHashKey": None,
-                    "sequenceNumber": eid.split(":")[1].rjust(56, "0"),
-                    "data": data,
-                },
-            }
-            for eid, data, pk in rows
+            ("shardId-0:1", base64.b64encode(blob).decode(), "1"),
+            ("shardId-0:2", base64.b64encode(json.dumps(plain).encode()).decode(), "2"),
         ],
-        schema="eventID string, eventVersion string, eventName string, eventSource string, "
-        "eventSourceARN string, awsRegion string, invokeIdentityArn string, "
-        "kinesis struct<kinesisSchemaVersion:string, partitionKey:string, "
-        "explicitHashKey:string, sequenceNumber:string, data:string>",
     )
     eng = make_engine(
         spark, tmp_path, one_defs=[TaskDef("t1", noop)], kpl_encoded=True
@@ -421,6 +441,42 @@ def test_kpl_encoded_pipeline(spark, tmp_path):
     assert all(u["partitionKey"] == "1" for u in urs)
     # the sub-object's payload is the deaggregated user data, not the blob
     assert {json.loads(u["data"])["id1"] for u in urs} == {100, 101, 102, 103}
+
+
+def test_unsequenced_kpl_siblings_never_block(spark, tmp_path):
+    """Q5: in unsequenced mode every message is its own chain. KPL user
+    records of one event share their event id, which with no id property
+    is also their chain_key, yet a failing sibling must not block the
+    others — the exec stage chains on identity, not chain_key."""
+    msgs = [
+        {"id1": i, "k1": 1, "k2": "boom" if i % 2 else "ok",
+         "n1": f"2024-01-01T00:00:{i:02d}", "n2": i}
+        for i in range(10)
+    ]
+    blob = kpl_aggregate([("1", json.dumps(m).encode()) for m in msgs])
+    recs = kpl_records_df(
+        spark, [("shardId-0:1", base64.b64encode(blob).decode(), "1")]
+    )
+
+    def flaky(message, task):
+        if message["k2"] == "boom":
+            raise RuntimeError("boom")
+
+    eng = make_engine(
+        spark,
+        tmp_path,
+        one_defs=[TaskDef("t1", flaky)],
+        kpl_encoded=True,
+        id_property_names=[],
+        **UNSEQUENCED,
+    )
+    with pytest.raises(BatchReplayError) as ei:
+        eng.process_batch(recs, batch_id=1)
+    assert ei.value.result.messages == 10
+    assert ei.value.result.incomplete == 5
+    states = [t["t1"] for t in tasks_of(eng).values()]
+    assert all(t["attempts"] == 1 for t in states)  # every sibling ran
+    assert Counter(t["status"] for t in states) == {"Completed": 5, "Failed": 5}
 
 
 def test_timeout_race_marks_timed_out(spark, tmp_path):
@@ -784,7 +840,9 @@ def test_fused_finalise_equals_two_stage(spark, tmp_path):
     two-stage path (exec -> _finalise_fn with no processAll results) on
     the same input: completing, failing, rejecting, duplicate-delivery,
     chain-blocked, and max-attempts-discard messages all produce the same
-    tasks_json and flags either way."""
+    tasks_json and flags either way — for sequenced chains, and for the
+    unsequenced (Q5) input, where the chain column holds each message's
+    own identity."""
     import json as _json
 
     import pandas as pd
@@ -809,37 +867,6 @@ def test_fused_finalise_equals_two_stage(spark, tmp_path):
     prior["t1"]["attempts"] = 2
     prior_json = tk.dumps(prior)
 
-    rows = [
-        # chain A: ok, then boom (fails + blocks), then ok (blocked)
-        ("A", "a1", None, '{"k2": "ok"}'),
-        ("A", "a2", None, '{"k2": "boom"}'),
-        ("A", "a3", None, '{"k2": "ok"}'),
-        # chain B: duplicate delivery of the same identity
-        ("B", "b1", None, '{"k2": "ok"}'),
-        ("B", "b1", None, '{"k2": "ok"}'),
-        # chain C: rejected; chain D: revived at the discard threshold
-        ("C", "c1", None, '{"k2": "reject"}'),
-        ("D", "d1", prior_json, '{"k2": "boom"}'),
-    ]
-    pdf = pd.DataFrame(
-        {c: ["x"] * len(rows) for c in _PASS_COLS}
-        | {
-            "chain_key": [r[0] for r in rows],
-            "identity": [r[1] for r in rows],
-            "prior_tasks_json": [r[2] for r in rows],
-            "data_str": [r[3] for r in rows],
-            "seq_index": list(range(len(rows))),
-        }
-    )
-
-    fused_out = pd.concat(list(eng._exec_fn(None, fused_finalise=True)([pdf])))
-    exec_out = pd.concat(list(eng._exec_fn(None, fused_finalise=False)([pdf])))
-    two_stage = pd.concat(
-        list(eng._finalise_fn([])([exec_out.drop(columns=["_one_fully_finalised"])]))
-    )
-
-    assert list(fused_out["identity"]) == list(two_stage["identity"])
-
     def _stable(tj):
         def scrub(node):
             node.pop("took_ms", None)
@@ -852,15 +879,56 @@ def test_fused_finalise_equals_two_stage(spark, tmp_path):
             scrub(st)
         return _json.dumps(tasks, sort_keys=True)
 
-    assert [_stable(t) for t in fused_out["tasks_json"]] == [
-        _stable(t) for t in two_stage["tasks_json"]
-    ]
-    for col in ["fully_finalised", "rejectedish", "incomplete",
-                "reason_rejected"]:
-        assert list(fused_out[col]) == list(two_stage[col]), col
+    def fused_vs_two_stage(rows, n_out):
+        """Run both paths over (chain_key, identity, prior, data) rows,
+        assert they agree and emit ``n_out`` rows, return the fused
+        output by identity."""
+        pdf = pd.DataFrame(
+            {c: ["x"] * len(rows) for c in _PASS_COLS}
+            | {
+                "chain_key": [r[0] for r in rows],
+                "identity": [r[1] for r in rows],
+                "prior_tasks_json": [r[2] for r in rows],
+                "data_str": [r[3] for r in rows],
+                "seq_index": list(range(len(rows))),
+            }
+        )
+        fused_out = pd.concat(list(eng._exec_fn(None, fused_finalise=True)([pdf])))
+        exec_out = pd.concat(list(eng._exec_fn(None, fused_finalise=False)([pdf])))
+        two_stage = pd.concat(
+            list(
+                eng._finalise_fn([])(
+                    [exec_out.drop(columns=["_one_fully_finalised"])]
+                )
+            )
+        )
+        assert len(fused_out) == n_out
+        assert list(fused_out["identity"]) == list(two_stage["identity"])
+        assert list(fused_out["seq_index"]) == list(two_stage["seq_index"])
+        assert [_stable(t) for t in fused_out["tasks_json"]] == [
+            _stable(t) for t in two_stage["tasks_json"]
+        ]
+        for col in ["fully_finalised", "rejectedish", "incomplete",
+                    "reason_rejected"]:
+            assert list(fused_out[col]) == list(two_stage[col]), col
+        return {r["identity"]: r for _, r in fused_out.iterrows()}
 
+    by_id = fused_vs_two_stage(
+        [
+            # chain A: ok, then boom (fails + blocks), then ok (blocked)
+            ("A", "a1", None, '{"k2": "ok"}'),
+            ("A", "a2", None, '{"k2": "boom"}'),
+            ("A", "a3", None, '{"k2": "ok"}'),
+            # chain B: duplicate delivery of the same identity
+            ("B", "b1", None, '{"k2": "ok"}'),
+            ("B", "b1", None, '{"k2": "ok"}'),
+            # chain C: rejected; chain D: revived at the discard threshold
+            ("C", "c1", None, '{"k2": "reject"}'),
+            ("D", "d1", prior_json, '{"k2": "boom"}'),
+        ],
+        n_out=6,                                           # dup dropped
+    )
     # sanity: the scenarios actually exercised distinct outcomes
-    by_id = {r["identity"]: r for _, r in fused_out.iterrows()}
     assert by_id["a2"]["incomplete"]                       # failed
     assert by_id["a3"]["incomplete"]                       # chain-blocked
     assert by_id["c1"]["rejectedish"]                      # rejected
@@ -868,7 +936,28 @@ def test_fused_finalise_equals_two_stage(spark, tmp_path):
     assert "discarded after 3 attempts" in _json.dumps(
         _json.loads(by_id["d1"]["tasks_json"])
     )
-    assert "b1" in by_id and len(fused_out) == 6           # dup dropped
+    assert "b1" in by_id
+
+    # unsequenced: identities already deduplicated, each its own chain
+    by_id = fused_vs_two_stage(
+        [
+            (ident, ident, prior, data)
+            for ident, prior, data in [
+                ("u1", None, '{"k2": "ok"}'),
+                ("u2", None, '{"k2": "boom"}'),
+                ("u3", None, '{"k2": "ok"}'),
+                ("u4", None, '{"k2": "reject"}'),
+                ("u5", prior_json, '{"k2": "boom"}'),
+            ]
+        ],
+        n_out=5,                                           # nothing dropped
+    )
+    assert {r["seq_index"] for r in by_id.values()} == {1}
+    assert by_id["u2"]["incomplete"]                       # failed
+    assert by_id["u3"]["fully_finalised"]                  # not blocked
+    assert by_id["u4"]["rejectedish"]                      # rejected
+    assert by_id["u5"]["fully_finalised"]                  # discarded at max
+    assert by_id["u5"]["reason_rejected"].startswith("discarded after 3")
 
 
 def test_fused_save_overwrite_under_read(spark, tmp_path):

@@ -1,13 +1,21 @@
 """The stream-consumer engine — reference §3's 3-phase lifecycle on Spark.
 
     Phase 1 initiateBatch:  ingest (S3–S7, I1–I3, P1) → sequence (Q1–Q5)
-                            → load state (T1) → revive (T2)
-    Phase 2 processBatch:   processOne per chain via applyInPandas (X1, X3,
-                            D1 idempotent skip) → processAll master/slave
-                            (X2) → finalise-merge pass (X4 max-attempts →
+                            → batch stats (I4)            [_ingest,
+                                                  _stats_and_speculate]
+    Phase 2 processBatch:   load state (T1) → revive (T2) → processOne per
+                            chain via mapInPandas (X1, X3, D1 idempotent
+                            skip) → processAll master/slave (X2) →
+                            finalise-merge pass (X4 max-attempts →
                             Discarded, T3 Unusable → Abandoned)
-    Phase 3 finaliseBatch:  DRQ (D2) + DMQ (D3) appends → save state (T4)
-                            → commit or raise-for-replay (F1)
+                                          [_revive_and_exec, _process_all]
+    Phase 3 finaliseBatch:  counters → DRQ (D2) + save state (T4) → DMQ
+                            (D3) → commit or raise-for-replay (F1)
+                            [_count_finalised, _save_and_sink,
+                             _discard_rejected, _commit_or_replay]
+
+``process_batch`` calls these in order; each takes what the one before it
+returned, so none can run before its input exists.
 
 Reference trace: kinesis-consumer.js:197-206 → core 3 phases, names
 asserted at test/kinesis-consumer.test.js:369-382.
@@ -30,8 +38,12 @@ from __future__ import annotations
 
 import json
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from typing import Callable, Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple
+from functools import partial
+from typing import (
+    Callable, Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple, Union,
+)
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -95,6 +107,17 @@ _EXEC_COLS = ["tasks_json", "_one_fully_finalised"]
 _FINAL_COLS = [
     "tasks_json", "fully_finalised", "rejectedish", "incomplete", "reason_rejected"
 ]
+# a processAll master's outcome: (name, status, error, reason, per-message
+# overrides {identity: (status, reason)})
+_MasterResult = Tuple[
+    str, str, Optional[str], Optional[str], Dict[str, Tuple[str, str]]
+]
+# batch counters besides the message count: _Counters field → finalise flag
+_COUNTED_FLAGS = {
+    "rejected": "rejectedish",
+    "fully_finalised": "fully_finalised",
+    "incomplete": "incomplete",
+}
 
 
 def _assign_rows(out: pd.DataFrame, names: List[str], rows: list) -> None:
@@ -104,14 +127,125 @@ def _assign_rows(out: pd.DataFrame, names: List[str], rows: list) -> None:
         out[name] = list(values)
 
 
-class _SavedState(NamedTuple):
-    """What the last default state save wrote: the (consumer, shard)
-    partitions it replaced, the ``states`` frame those partitions now
-    equal on disk, and that frame's pre-planned revive slice."""
+def _live(states: DataFrame) -> DataFrame:
+    """The state rows a message can revive from."""
+    return states.where(F.col("kind").isin("message", "rejected"))
 
-    shards: frozenset
+
+def _registers(
+    prior_all: DataFrame, kind: str, *cols: Column, batch_id: Optional[int] = None
+) -> DataFrame:
+    """The prior state's ``kind`` sketch rows as (g = shard key, *cols);
+    ``batch_id`` keeps only that batch's rows (an additive delta)."""
+    rows = prior_all.where(F.col("kind") == kind)
+    if batch_id is not None:
+        rows = rows.where(F.col("batch_id") == batch_id)
+    return rows.select(F.col("shardOrEventID").alias("g"), *cols)
+
+
+def _additive_registers(
+    delta: DataFrame, prior_all: DataFrame, batch_id: int, kind: str, id_prefix: str
+) -> list:
+    """Replay-safe maintenance of an ADDITIVE register sketch in the state
+    table (shared by the CMS and quantile twins): the cumulative
+    registers (``kind``) and this batch's delta (``kind``_delta), as
+    ``Engine._with_sketches`` register entries. ``delta`` is this batch's
+    registers as (g, idx, cnt).
+
+    Addition is linear but not idempotent, so replay safety comes from
+    per-batch delta rows: when the prior slice already carries a delta
+    with THIS batch_id (the F1 replay path re-runs a failed micro-batch
+    under the same id, and its state save committed before the failure),
+    that stale delta is subtracted before the fresh one is folded in —
+    new_cum = prior_cum − stale_delta + delta. One union + keyed sum,
+    register-bounded rows per shard end to end. Re-delivery under a NEW
+    batch_id overcounts by exactly that batch's contribution — the honest
+    additive-counter bound, pinned in tests (the distinct sketch is HLL
+    max-merge for exactly this reason)."""
+    # eager checkpoint of the delta FIRST: it feeds both the merge below
+    # and the save rows, and without the checkpoint the row-scaled
+    # counting pass would run twice per micro-batch
+    delta = delta.localCheckpoint(eager=True)
+    idx, cnt = F.col("sketch_bucket").alias("idx"), F.col("sketch_r")
+    cum = (
+        delta.unionByName(_registers(prior_all, kind, idx, cnt.alias("cnt")))
+        .unionByName(
+            _registers(
+                prior_all, f"{kind}_delta", idx, (-cnt).alias("cnt"), batch_id=batch_id
+            )
+        )
+        .groupBy("g", "idx")
+        .agg(F.sum("cnt").alias("cnt"))
+        .where(F.col("cnt") > 0)
+        .localCheckpoint(eager=True)
+    )
+    ident = F.concat(F.lit(id_prefix), F.col("idx"))
+    return [
+        (cum, kind, ident, "idx", "cnt"),
+        (delta, f"{kind}_delta", ident, "idx", "cnt"),
+    ]
+
+
+class _SavedState(NamedTuple):
+    """Prior state known without a read: the (consumer, shard) partitions
+    it holds (``None``: every shard — an empty store), the ``states``
+    frame those partitions equal on disk, and its pre-planned revive
+    slice."""
+
+    shards: Optional[frozenset]
     states: DataFrame
     revive_slice: DataFrame
+
+    def covers(self, shards: frozenset) -> bool:
+        return self.shards is None or shards <= self.shards
+
+
+class _Ingested(NamedTuple):
+    """Phase 1's frames, all over one lazy checkpoint: the usable
+    messages (Q5: each its own chain), the unusable records and the
+    not-yet-run stats aggregate; plus the session shuffle width."""
+
+    msgs: DataFrame
+    unusable: DataFrame
+    stats: DataFrame
+    width: int
+
+
+class _Stats(NamedTuple):
+    """The stats job's result: the batch's shard keys and counts."""
+
+    shards: frozenset
+    n_records: int
+    n_unusable: int
+
+
+class _Exec(NamedTuple):
+    """A phase-2 plan: the exec output (on the fused path already the
+    finalised batch, as a lazy checkpoint) and the exec width."""
+
+    frame: DataFrame
+    n_parts: int
+
+
+class _Counters(NamedTuple):
+    messages: int
+    rejected: int
+    fully_finalised: int
+    incomplete: int
+
+    @classmethod
+    def of(cls, row) -> "_Counters":
+        """From the aggregate's Row or the Observation's dict alike."""
+        return cls(*(int(row[name] or 0) for name in cls._fields))
+
+
+class _Counted(NamedTuple):
+    """The finalised batch and its counters: computed already, or an
+    Observation filled by the first action over ``frame`` — the state
+    save, which only ``Engine._save_and_sink`` runs."""
+
+    frame: DataFrame
+    counters: Union[_Counters, Observation]
 
 
 class BatchReplayError(RuntimeError):
@@ -187,10 +321,10 @@ class Engine:
         # (custom save seams, zero-row saves and compaction reset it to
         # None). The frame is lazy over already-checkpointed inputs, so
         # caching costs no job.
-        # The revive slice rides in the same tuple (r8, from the
-        # overlap_plan sub-mark: the stats job always finishes BEFORE the
-        # speculative phase-2 build, so every ms of Catalyst analysis
-        # inside the build is critical-path driver time). The revive join
+        # The revive slice rides in the same tuple (r8: the stats job
+        # always finishes BEFORE the speculative phase-2 build, so every
+        # ms of Catalyst analysis inside the build is critical-path driver
+        # time). The revive join
         # needs only (shardOrEventID, identity, msg_md5, tasks_json) of
         # live message/rejected rows; at set time that slim projection is
         # wrapped in a lazy localCheckpoint, so planning happens ONCE per
@@ -201,17 +335,21 @@ class Engine:
         # could overwrite. One attribute, so the slice can never outlive
         # the states it was cut from.
         self._saved_state: Optional[_SavedState] = None
-        # Stats/plan overlap (see process_batch): the previous batch's
-        # message-count seeds the next batch's exec task sizing so the
-        # whole phase-2 plan can be built while the stats job runs; the
-        # single-thread pool carries the stats collect during the overlap.
+        # Stats/plan overlap (see _stats_and_speculate): the previous
+        # batch's message-count seeds the next batch's exec task sizing so
+        # the whole phase-2 plan can be built while the stats job runs.
         self._last_n_records: Optional[int] = None
-        self._plan_pool = None
+        # The engine's concurrent jobs: the stats collect during that
+        # overlap, then the DRQ append beside the state save. Threads
+        # start on first use and exit with the engine or the interpreter.
+        self._pool = ThreadPoolExecutor(2, thread_name_prefix="ksc-engine")
         # Deferred discard sinks (config.deferred_discard_sinks): single
         # worker so appends to one queue path keep batch order; futures
         # are drained at the next process_batch (failures surface there)
         # or via drain_discard_sinks().
-        self._deferred_sink_pool = None
+        self._deferred_sink_pool = ThreadPoolExecutor(
+            1, thread_name_prefix="ksc-deferred-sink"
+        )
         self._pending_sink_futures: list = []
         # Per-engine ingest Column-forest cache (see ingest()'s col_cache):
         # batch 2+ replays the cached projection levels instead of paying
@@ -352,12 +490,8 @@ class Engine:
             # batch fails ⇒ replay (test/kinesis-consumer.test.js:2884-3030)
             if deadline_epoch is not None and time.time() >= deadline_epoch:
                 for d in one_defs:
-                    st = tasks[d.name]
-                    statuses = [st["status"]] + [
-                        s["status"] for s in st.get("subtasks", {}).values()
-                    ]
-                    if not all(s in tk.FINALISED for s in statuses):
-                        st["status"] = tk.TIMED_OUT
+                    if not tk.task_finalised(tasks[d.name]):
+                        tasks[d.name]["status"] = tk.TIMED_OUT
             elif not blocked:
                 try:
                     message = json.loads(data_str)
@@ -430,34 +564,43 @@ class Engine:
 
     # --- phase 2b/2c: processAll master + finalise-merge -------------------
 
-    def _run_process_all(
-        self, executed: DataFrame, n_incomplete_scope: int
-    ) -> List[Tuple[str, str, Optional[str], Optional[str], Dict[str, Tuple[str, str]]]]:
-        """Execute each processAll master task once over the batch (X2).
-        Returns per def: (name, status, error, reason, per-message overrides).
-        The master fans its state out to per-message slave tasks in the
-        finalise-merge pass (README.md:183-224)."""
-        results = []
-        if n_incomplete_scope == 0:
-            return results
-        scope = executed.where(~F.col("_one_fully_finalised"))
-        for d in self.all_defs:
-            try:
-                overrides = d.execute(scope, self) or {}
-                results.append((d.name, tk.COMPLETED, None, None, dict(overrides)))
-            except tk.TaskRejectedError as e:
-                results.append((d.name, tk.REJECTED, None, e.reason, {}))
-            except Exception as e:  # noqa: BLE001
-                results.append(
-                    (d.name, tk.FAILED, f"{type(e).__name__}: {e}", None, {})
-                )
-        return results
+    def _process_all(self, executed: DataFrame) -> DataFrame:
+        """X2: execute each processAll master task once over the batch's
+        incomplete messages, then fan its state out to the per-message
+        slave tasks in the finalise-merge pass (README.md:183-224).
+        Returns the finalised batch as a lazy checkpoint."""
+        # processAll needs the materialized post-processOne batch as its
+        # scope (incompleteMessages, X2) — one extra checkpoint + agg
+        executed = executed.localCheckpoint(eager=False)
+        n_scope = (
+            executed.agg(
+                F.sum(F.when(~F.col("_one_fully_finalised"), 1).otherwise(0))
+            ).first()[0]
+            or 0
+        )
+        results: List[_MasterResult] = []
+        if n_scope:
+            scope = executed.where(~F.col("_one_fully_finalised"))
+            for d in self.all_defs:
+                try:
+                    overrides = d.execute(scope, self) or {}
+                    results.append(
+                        (d.name, tk.COMPLETED, None, None, dict(overrides))
+                    )
+                except tk.TaskRejectedError as e:
+                    results.append((d.name, tk.REJECTED, None, e.reason, {}))
+                except Exception as e:  # noqa: BLE001
+                    results.append(
+                        (d.name, tk.FAILED, f"{type(e).__name__}: {e}", None, {})
+                    )
+        return (
+            executed.drop("_one_fully_finalised")
+            .mapInPandas(self._finalise_fn(results), schema=_FINAL_SCHEMA)
+            .localCheckpoint(eager=False)
+        )
 
     def _finalise_fn(
-        self,
-        all_results: List[
-            Tuple[str, str, Optional[str], Optional[str], Dict[str, Tuple[str, str]]]
-        ],
+        self, all_results: List[_MasterResult]
     ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
         max_attempts = self.config.max_number_of_attempts
 
@@ -476,10 +619,7 @@ class Engine:
                         slave = tasks.get(name)
                         if slave is None or not msg_in_scope:
                             continue  # only incompleteMessages are in scope (X2)
-                        statuses = [slave["status"]] + [
-                            s["status"] for s in slave.get("subtasks", {}).values()
-                        ]
-                        if all(s in tk.FINALISED for s in statuses):
+                        if tk.task_finalised(slave):
                             continue  # idempotent resume (D1)
                         slave["attempts"] += 1
                         ov = overrides.get(ident)
@@ -496,118 +636,159 @@ class Engine:
 
         return merge
 
-    def _additive_sketch_rows(
-        self,
-        delta: DataFrame,
-        prior_all: Optional[DataFrame],
-        batch_id: int,
-        kind_cum: str,
-        kind_delta: str,
-        id_prefix: str,
-    ) -> DataFrame:
-        """Replay-safe maintenance of an ADDITIVE register sketch in the
-        state table (shared by the CMS and quantile twins). ``delta`` is
-        this batch's registers as (g, idx, cnt).
+    # --- T4 sketch registers -----------------------------------------------
 
-        Addition is linear but not idempotent, so replay safety comes
-        from per-batch delta rows: when the prior slice already carries a
-        delta with THIS batch_id (the F1 replay path re-runs a failed
-        micro-batch under the same id, and its state save committed
-        before the failure), that stale delta is subtracted before the
-        fresh one is folded in — new_cum = prior_cum − stale_delta +
-        delta. One union + keyed sum, register-bounded rows per shard end
-        to end. Re-delivery under a NEW batch_id overcounts by exactly
-        that batch's contribution — the honest additive-counter bound,
-        pinned in tests (the distinct sketch is HLL max-merge for exactly
-        this reason)."""
-        # eager checkpoint of the delta FIRST: it feeds both the merge
-        # below and the save rows, and without the checkpoint the
-        # row-scaled counting pass would run twice per micro-batch
-        delta = delta.localCheckpoint(eager=True)
-        if prior_all is None:
-            # first batch of a fresh store: delta IS the cumulative frame
-            cum = delta
-        else:
-            merged = (
-                delta.unionByName(
-                    prior_all.where(F.col("kind") == kind_cum).select(
-                        F.col("shardOrEventID").alias("g"),
-                        F.col("sketch_bucket").alias("idx"),
-                        F.col("sketch_r").alias("cnt"),
-                    )
-                ).unionByName(
-                    prior_all.where(
-                        (F.col("kind") == kind_delta)
-                        & (F.col("batch_id") == batch_id)
-                    ).select(
-                        F.col("shardOrEventID").alias("g"),
-                        F.col("sketch_bucket").alias("idx"),
-                        (-F.col("sketch_r")).alias("cnt"),
+    def _with_sketches(
+        self,
+        states: DataFrame,
+        msgs: DataFrame,
+        finalised: DataFrame,
+        prior_all: DataFrame,
+        batch_id: int,
+    ) -> DataFrame:
+        """``states`` plus the configured per-shard sketch registers, each
+        merged with its prior register from ``prior_all``. The save
+        REPLACES the touched shard partitions, so every merge happens
+        before it, and each merge that reads ``prior_all`` is eagerly
+        checkpointed: that parquet is what the save overwrites (the hazard
+        the finalised checkpoint exists for). The frames are
+        register-sized, so each checkpoint is a tiny job."""
+        cfg = self.config
+        from kinesis_stream_consumer_spark.operators import sketches
+
+        # (register frame keyed by shard column g, kind, identity column,
+        # bucket column name, register column name)
+        regs: list = []
+        if cfg.track_distinct_sketch:
+            # Per-shard HLL distinct-MESSAGE sketch over the checkpointed
+            # identities. Register max-merge is idempotent — replaying a
+            # failed batch re-merges the same maxima, so the sketch stays
+            # exact-composable under at-least-once delivery, unlike any
+            # additive counter.
+            hll = (
+                sketches.hll_registers(
+                    msgs.select("shardOrEventID", "identity"),
+                    "shardOrEventID",
+                    F.col("identity"),
+                )
+                .unionByName(
+                    _registers(
+                        prior_all,
+                        "sketch",
+                        F.col("sketch_bucket").alias("bucket"),
+                        F.col("sketch_r").alias("r"),
                     )
                 )
-            )
-            # eager checkpoint: the merge reads the parquet partitions
-            # the save below replaces (same hazard as the HLL merge);
-            # register-sized frame, tiny job
-            cum = (
-                merged.groupBy("g", "idx")
-                .agg(F.sum("cnt").alias("cnt"))
-                .where(F.col("cnt") > 0)
+                .groupBy("g", "bucket")
+                .agg(F.max("r").alias("r"))
                 .localCheckpoint(eager=True)
             )
-
-        ident = F.concat(F.lit(id_prefix), F.col("idx"))
-        return self._sketch_state_rows(
-            cum, batch_id, kind_cum, ident, F.col("idx"), F.col("cnt")
-        ).unionByName(
-            self._sketch_state_rows(
-                delta, batch_id, kind_delta, ident, F.col("idx"), F.col("cnt")
+            regs.append(
+                (hll, "sketch", F.concat(F.lit("HLL|"), F.col("bucket")), "bucket", "r")
             )
-        )
+        # Additive sketches count PROCESSED messages — the delta sources
+        # from the checkpointed post-exec `finalised` frame, which the D1
+        # within-batch dedup has already filtered, so a record delivered
+        # twice INSIDE one batch counts once (only cross-batch re-delivery
+        # under a NEW batch_id overcounts — the pinned additive bound).
+        if cfg.track_frequency_sketch:
+            # Per-shard Count-Min KEY-frequency sketch. Non-keyed configs
+            # canonicalise key to NULL for every message — hashing NULL
+            # would save one meaningless NULL-bucket register per batch
+            # that merges additively forever (mirror the qsketch isNotNull
+            # guard).
+            keys = finalised.select(
+                self._shard_or_event_col.alias("shardOrEventID"), "key"
+            ).where(F.col("key").isNotNull())
+            regs += _additive_registers(
+                sketches.cms_counters(keys, "shardOrEventID", F.col("key")),
+                prior_all,
+                batch_id,
+                "cms",
+                "CMS|",
+            )
+        if cfg.track_quantile_sketch:
+            # Per-shard log-linear QUANTILE sketch over the numeric tail of
+            # the event sequence number (the per-shard seqNo-spread /
+            # hot-range signal): same additive-register replay contract as
+            # the CMS twin, ≤63·K+1 registers per shard regardless of
+            # volume.
+            qs_src = finalised.select(
+                self._shard_or_event_col.alias("shardOrEventID"),
+                F.expr(
+                    "CAST(substring(event_seq_no,"
+                    " greatest(length(event_seq_no) - 14, 1), 15)"
+                    " AS BIGINT)"
+                ).alias("v"),
+            ).where(F.col("v").isNotNull())
+            regs += _additive_registers(
+                sketches.qsketch_buckets(qs_src, "shardOrEventID", F.col("v")).select(
+                    "g", F.col("qid").alias("idx"), "cnt"
+                ),
+                prior_all,
+                batch_id,
+                "qsk",
+                "QSK|",
+            )
+        if cfg.track_sample_sketch:
+            # Per-shard uniform message sample (kind='rsv'): the n+1
+            # smallest md5-priority identities — the engine-native
+            # reservoir sketch (operators/sketches reservoir_*, w=1).
+            # Union prior register + this batch's keys, re-take the n+1
+            # smallest: a MIN-merge like the HLL registers — idempotent,
+            # so replayed batches leave the sample EXACTLY the single-pass
+            # sample (no delta bookkeeping).
+            from kinesis_stream_consumer_spark.operators.dedup import md5_u56_le
 
-    def _sketch_state_rows(
-        self,
-        regs: DataFrame,
-        batch_id: int,
-        kind: str,
-        identity: Column,
-        bucket: Column,
-        register: Column,
-    ) -> DataFrame:
-        """STATE_SCHEMA rows for a sketch register frame keyed by shard
-        column ``g``: every message column NULL, the register in
-        (sketch_bucket, sketch_r)."""
-        given = {
-            "streamConsumerId": F.lit(self.config.stream_consumer_id),
-            "shardOrEventID": F.col("g"),
-            "kind": F.lit(kind),
-            "identity": identity,
-            "batch_id": F.lit(batch_id).cast("long"),
-            "sketch_bucket": bucket.cast("long"),
-            "sketch_r": register.cast("long"),
-        }
-        return regs.select(
-            *[
-                given.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
-                for f in STATE_SCHEMA.fields
-            ]
-        )
+            one = F.lit(1).cast("long").alias("w")
+            keys = finalised.select(
+                self._shard_or_event_col.alias("g"),
+                F.col("identity").alias("id"),
+                one,
+                # uniform draw: pri = u div 1 = the 56-bit md5 integer
+                md5_u56_le(F.col("identity")).alias("pri"),
+            ).unionByName(
+                _registers(
+                    prior_all,
+                    "rsv",
+                    F.expr("substring(identity, 5)").alias("id"),
+                    one,
+                    F.col("sketch_r").alias("pri"),
+                )
+            )
+            rsv = sketches.reservoir_merge(keys, cfg.sample_sketch_n)
+            regs.append(
+                (
+                    rsv.localCheckpoint(eager=True),
+                    "rsv",
+                    F.concat(F.lit("RSV|"), F.col("id")),
+                    "rank",
+                    "pri",
+                )
+            )
+        # STATE_SCHEMA rows: every message column NULL, the register in
+        # (sketch_bucket, sketch_r)
+        for frame, kind, identity, bucket, register in regs:
+            given = {
+                "streamConsumerId": F.lit(cfg.stream_consumer_id),
+                "shardOrEventID": F.col("g"),
+                "kind": F.lit(kind),
+                "identity": identity,
+                "batch_id": F.lit(batch_id).cast("long"),
+                "sketch_bucket": F.col(bucket).cast("long"),
+                "sketch_r": F.col(register).cast("long"),
+            }
+            states = states.unionByName(
+                frame.select(
+                    *[
+                        given.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
+                        for f in STATE_SCHEMA.fields
+                    ]
+                )
+            )
+        return states
 
     # --- the 3-phase batch lifecycle ---------------------------------------
-
-    def _submit_deferred_sink(self, job: Callable[[], None]) -> None:
-        """Launch a default discard-sink append on the background worker
-        (config.deferred_discard_sinks). ONE worker on purpose: appends to
-        the same queue path stay in batch order."""
-        if self._deferred_sink_pool is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            self._deferred_sink_pool = ThreadPoolExecutor(
-                1, thread_name_prefix="ksc-deferred-sink"
-            )
-        self._pending_sink_futures.append(
-            self._deferred_sink_pool.submit(job)
-        )
 
     def drain_discard_sinks(self) -> None:
         """Join any deferred DRQ/DMQ appends and re-raise the first
@@ -618,13 +799,30 @@ class Engine:
         for f in pending:
             f.result()
 
+    def _mark(self, label: str) -> None:
+        """Close the section that began at the previous mark: a handful
+        of perf_counter calls per batch, exposed as last_section_times."""
+        now = time.perf_counter()
+        self._sections[label] = now - self._section_start
+        self._section_start = now
+
     def process_batch(
         self,
         records: DataFrame,
         batch_id: int = 0,
         remaining_time_ms: Optional[float] = None,
     ) -> BatchResult:
-        """Run the 3-phase lifecycle on one batch of records.
+        """Run the 3-phase lifecycle on one batch of records. Each phase
+        method takes what the one before it returned, so none can run
+        before its input exists:
+
+        1. initiate: ``_ingest`` → ``_stats_and_speculate`` (the stats job,
+           overlapped with a speculative phase-2 plan);
+        2. process: ``_revive_and_exec`` (T1 load, T2 revive, processOne
+           exec), then ``_process_all`` when there are processAll defs;
+        3. finalise: ``_count_finalised`` → ``_save_and_sink`` (DRQ and
+           the state save; returns the counters) → ``_discard_rejected``
+           (the DMQ) → ``_commit_or_replay``.
 
         ``remaining_time_ms`` is the X5 analogue of Lambda's
         getRemainingTimeInMillis: the processing phase gets
@@ -634,18 +832,8 @@ class Engine:
 
         Per-section wall times land in ``self.last_section_times``.
         """
-        _marks: list[tuple[str, float]] = []
-        _last = time.perf_counter()
-
-        def _mark(label: str) -> None:
-            # a handful of perf_counter calls per batch, exposed as
-            # self.last_section_times
-            nonlocal _last
-            now = time.perf_counter()
-            _marks.append((label, now - _last))
-            _last = now
-
         cfg = self.config
+        self._sections, self._section_start = {}, time.perf_counter()
         # Deferred-sink barrier: appends launched by the PREVIOUS batch
         # must land (and their failures surface) before this batch does
         # any work — by now they have had the whole inter-batch gap to
@@ -657,7 +845,50 @@ class Engine:
             if remaining_time_ms is not None
             else None
         )
-        # ---- Phase 1: initiate -------------------------------------------
+        ing = self._ingest(records)
+        saved = self._reusable_state()
+        stats, speculative = self._stats_and_speculate(ing, saved, deadline)
+        plan, prior_all = self._revive_and_exec(
+            ing, stats, saved, speculative, deadline
+        )
+        # With no processAll defs the exec stage already emitted the
+        # finalised batch (see _exec_fn's fused_finalise)
+        finalised = self._process_all(plan.frame) if self.all_defs else plan.frame
+        self._mark("exec_finalise_plan")
+        # F3 hook: preFinaliseBatch
+        if cfg.pre_finalise_batch is not None:
+            cfg.pre_finalise_batch(finalised, self)
+        counted = self._count_finalised(
+            finalised,
+            observe=cfg.save_batch_state is None
+            and bool(stats.n_records or stats.n_unusable),
+        )
+        self._mark("exec_finalise_and_counters")
+        counters = self._save_and_sink(counted, ing, stats, prior_all, batch_id)
+        self._discard_rejected(counted.frame, counters)
+        self._mark("dlq_and_state_save")
+        self.last_section_times = self._sections
+        return self._commit_or_replay(
+            BatchResult(
+                batch_id=batch_id,
+                records=stats.n_records,
+                messages=counters.messages,
+                unusable=stats.n_unusable,
+                fully_finalised=counters.fully_finalised,
+                rejected_to_dmq=counters.rejected,
+                discarded_to_drq=stats.n_unusable,
+                incomplete=counters.incomplete,
+                exec_partitions=plan.n_parts,
+            ),
+            counted.frame,
+        )
+
+    # ---- Phase 1: initiate -------------------------------------------------
+
+    def _ingest(self, records: DataFrame) -> _Ingested:
+        """Ingest, the phase-1 checkpoint and the batch's message frame;
+        the stats aggregate is planned here and run by the next phase."""
+        cfg = self.config
         # A micro-batch from a 1-file trigger arrives as ONE partition, and
         # ingest (base64 + JSON parse + 3×md5) is CPU-bound and narrow — it
         # would fuse onto that single task. Fan the raw records out first;
@@ -671,753 +902,499 @@ class Engine:
         fan = min(8, width)
         if records.rdd.getNumPartitions() < fan:
             records = records.repartition(fan)
-        _mark("fan_probe")
+        self._mark("fan_probe")
         ing = ingest(records, cfg, col_cache=self._ingest_col_cache)
         # Materialize the UNSPLIT ingest output ONCE, before anything
-        # branches off it: the usable/unusable split, the shard-key collect
-        # below, the sequencing shuffle, and the DRQ path would each
-        # otherwise recompute the whole decode→identify pipeline — and
-        # filtering the lazy split plans lets PushDownPredicate inline the
-        # unbase64/JSON-parse work into each side's filter a second time.
-        # Splitting AFTER the checkpoint reads reason_unusable as
-        # materialized data. msg_json is dropped first — it is an
-        # ingest-surface column (custom-format resolution); the engine only
-        # needs the digests downstream, and dropping it keeps a full
-        # message copy out of the checkpoint and the chain shuffle.
-        # eager=False: the stats aggregate right below is the first action
-        # and computes every partition, so Spark materializes the
-        # checkpoint inside that same job (doCheckpoint runs before the
-        # action returns) — ingest-materialize + batch-stats cost ONE job
-        # instead of two (~0.2-0.3 s/micro-batch of fixed cost, more on
-        # cold batches). The checkpoint is still complete before anything
+        # branches off it: the usable/unusable split, the stats job, the
+        # exec shuffle, and the DRQ path would each otherwise recompute
+        # the whole decode→identify pipeline — and filtering the lazy
+        # split plans lets PushDownPredicate inline the unbase64/JSON-parse
+        # work into each side's filter a second time. Splitting AFTER the
+        # checkpoint reads reason_unusable as materialized data. msg_json
+        # is dropped first — it is an ingest-surface column (custom-format
+        # resolution); the engine only needs the digests downstream, and
+        # dropping it keeps a full message copy out of the checkpoint and
+        # the chain shuffle.
+        # eager=False: the stats aggregate is the first action and
+        # computes every partition, so Spark materializes the checkpoint
+        # inside that same job (doCheckpoint runs before the action
+        # returns) — ingest-materialize + batch-stats cost ONE job instead
+        # of two. The checkpoint is still complete before anything
         # downstream (exec, sinks, state save) touches the frame.
         # chain_key/sort_key materialize HERE (inside the checkpoint): the
         # sort-key encode forest is the most expensive expression in the
         # lifecycle and this keeps it out of the per-batch exec plan —
         # Catalyst replans that tree every micro-batch, and the encode work
         # itself fuses onto the already-CPU-bound decode stage.
-        _mark("ingest_plan")
+        self._mark("ingest_plan")
         tagged = (
             ing.tagged.drop("msg_json", "parsed_ok")
             .select("*", *self._phase1_cols)
             .localCheckpoint(eager=False)
         )
-        _mark("phase1_ckpt_call")
+        self._mark("phase1_ckpt_call")
+        # Q3/Q4 sequencing WITHOUT a whole-batch window: ordering is
+        # established in-partition at the exec shuffle (repartition on
+        # chain_key + sortWithinPartitions on the same comparator keys
+        # the sequencing window orders by), and seq_index materializes
+        # INSIDE the exec stage — a per-chain running counter on the same
+        # pass that executes the chain. (sequence_messages itself remains
+        # the query-surface operator — stream-parity queries and fixture
+        # tests pin it.) sort_key rides only as far as the in-partition
+        # sort (dropped before the Arrow transfer).
         msgs = tagged.where(F.col("reason_unusable").isNull()).drop(
             "reason_unusable"
         )
-        unusable = tagged.where(F.col("reason_unusable").isNotNull())
-
+        if not cfg.sequencing_required:
+            # Q5: every message is its own chain of one
+            msgs = msgs.select("*", F.lit(1).alias("seq_index")).drop("sort_key")
         # ONE stats job for batch-key resolution (I4) + batch counters — a
         # slim scan of the checkpointed batch, not a recompute of ingest.
         # Per shard key it returns (record deliveries, unusable rows), so
         # the shard set for the partition-pruned state load, n_records and
-        # n_unusable all come from this single aggregate instead of three
-        # separate jobs (records.count / distinct-collect /
-        # unusable.count) — micro-batch fixed cost, measured ~0.4 s/batch.
+        # n_unusable all come from this single aggregate.
         # Delivery counting: every record lands in tagged as either rows
         # with event_sub_seq_no NULL (non-KPL, failed-deagg, unusable) or
         # an exploded run starting at sub-seq 0 (KPL, kpl.py:174), so
         # "NULL or 0" counts each delivery exactly once — duplicate
         # deliveries stay distinct (the reference counts Records entries,
         # not unique records; dedup happens at execution, D1).
+        unusable = F.col("reason_unusable").isNotNull()
         stats_key = F.when(
-            F.col("reason_unusable").isNotNull(),
-            F.concat(F.lit("S|"), F.col("shard_id")),
+            unusable, F.concat(F.lit("S|"), F.col("shard_id"))
         ).otherwise(F.col("shardOrEventID"))
         is_delivery_head = (
             F.col("event_sub_seq_no").isNull() | (F.col("event_sub_seq_no") == 0)
         )
-        stats_df = tagged.groupBy(stats_key.alias("shardOrEventID")).agg(
+        stats = tagged.groupBy(stats_key.alias("shardOrEventID")).agg(
             F.sum(F.when(is_delivery_head, 1).otherwise(0)).alias("n_rec"),
-            F.sum(
-                F.when(F.col("reason_unusable").isNotNull(), 1).otherwise(0)
-            ).alias("n_unus"),
+            F.sum(F.when(unusable, 1).otherwise(0)).alias("n_unus"),
         )
+        self._mark("phase1_plan")
+        return _Ingested(msgs, tagged.where(unusable), stats, width)
 
-        # Q3/Q4 sequencing WITHOUT a whole-batch window: ordering is
-        # established in-partition at the exec shuffle below (repartition
-        # on chain_key + sortWithinPartitions on the same comparator keys
-        # the sequencing window orders by), and seq_index materializes
-        # INSIDE the exec stage — a per-chain running counter on the same
-        # pass that executes the chain. The sequence_messages window the
-        # engine used through r6 cost a second full exchange on chain_key
-        # per micro-batch plus a Window node Catalyst replanned every
-        # batch, to compute prev/next/is_first links the engine never
-        # reads. (sequence_messages itself remains the query-surface
-        # operator — stream-parity queries and fixture tests pin it.)
-        # sort_key rides only as far as the in-partition sort (dropped
-        # before the Arrow transfer); the exec exchange carrying it is
-        # strictly cheaper than the extra window exchange it replaces.
-        if cfg.sequencing_required:
-            seqd = msgs
+    def _reusable_state(self) -> Optional[_SavedState]:
+        """The prior state known before the stats job, with the default
+        load seam: the last default save's cache, or — when the store
+        holds nothing — an empty slice, which covers every shard."""
+        if self.config.load_batch_state is not None:
+            return None
+        if self._saved_state is not None or not self.state.is_empty():
+            return self._saved_state
+        empty = self.spark.createDataFrame([], STATE_SCHEMA)
+        return _SavedState(None, empty, _live(empty))
+
+    def _stats_and_speculate(
+        self,
+        ing: _Ingested,
+        saved: Optional[_SavedState],
+        deadline: Optional[float],
+    ) -> Tuple[_Stats, Optional[_Exec]]:
+        """Run the stats job. Stats/plan OVERLAP: with a prior slice known
+        before the job (``saved``), the entire fused phase-2 plan —
+        revive join, exec plan, and the Catalyst planning forced by the
+        lazy checkpoint (~0.3-0.4 s/batch of pure driver work) — is built
+        on this thread WHILE the engine pool runs the stats job. The
+        build is optimistic against the unfiltered slice (the revive join
+        matches on identity, so rows from uninvolved shards never match);
+        task sizing seeds from the last batch's count (steady
+        micro-batches are same-sized; a mis-estimate only re-sizes tasks,
+        never changes results), or from full session width before the
+        first batch. ``_revive_and_exec`` keeps the plan only if the slice
+        covers the batch's shards.
+
+        Restricted to the fused path: the processAll variant runs an
+        aggregate action during plan construction, which must not race
+        the stats job for the phase-1 checkpoint materialization. And
+        pre_process_batch gates it OFF: the build invokes the hook, and a
+        discarded build would fire a side-effecting hook twice per batch
+        where the reference calls preProcessBatch exactly once
+        (kinesis-processing.js:292-298)."""
+        speculative = None
+        if (
+            saved is not None
+            and not self.all_defs
+            and self.config.pre_process_batch is None
+        ):
+            rows_fut = self._pool.submit(ing.stats.collect)
+            est = self._last_n_records
+            if est is None:  # first batch: full session width
+                est = ing.width * 500
+            speculative = self._build_exec(ing, saved.revive_slice, est, deadline)
+            rows = rows_fut.result()
         else:
-            # Q5: every message is its own chain of one
-            seqd = msgs.select(
-                "*", F.lit(1).alias("seq_index")
-            ).drop("sort_key")
-        # ---- Phase 2: process --------------------------------------------
-        # With no processAll defs, execution and finalise-merge fuse into
-        # ONE Python stage emitting _FINAL_SCHEMA (see _exec_fn) — a small
-        # micro-batch crosses Arrow once, not twice.
-        fused = not self.all_defs
-        exec_schema = _FINAL_SCHEMA if fused else _EXEC_SCHEMA
-
-        def _build_phase2(prior: DataFrame, n_rec_est: int):
-            """T2 revive + the exec plan (incl. the Catalyst planning the
-            lazy checkpoint forces) for a given prior-state revive slice
-            and a task-sizing row estimate. Driver-side plan construction
-            PLUS the AQE stage materialization the lazy checkpoint's
-            toRdd triggers (the revive-slice broadcast and the exec
-            shuffle's map side — see the p2_ckpt_plan note below): the
-            overlap path below runs it WHILE the cluster executes the
-            stats job, so those stages pipeline ahead of the fused save.
-
-            Mismatched-prior-state tolerance: prior state only revives
-            when its content digest matches the current message — same id
-            but different content means the state is stale and the message
-            executes fresh (reference "COMPLETELY MISMATCHED PRIOR state"
-            ⇒ attempts restart at 1, test/kinesis-consumer.test.js:
-            847-945). A prior row with no recorded digest (custom stores)
-            still revives.
-            """
-            revived = seqd.join(
-                F.broadcast(
-                    prior.select(
-                        F.col("identity").alias("_pid"),
-                        F.col("msg_md5").alias("_pmd5"),
-                        F.col("tasks_json").alias("prior_tasks_json"),
-                    )
-                ),
-                (F.col("identity") == F.col("_pid"))
-                & (
-                    F.col("_pmd5").isNull()
-                    | (F.col("_pmd5") == F.col("msg_md5"))
-                ),
-                "left",
-            ).drop("_pid", "_pmd5")
-            # F3 hook: preProcessBatch (kinesis-processing.js:292-298).
-            # Column contract (changed r7 with the window removal):
-            # `revived` carries the phase-1 message columns + chain_key +
-            # sort_key + prior_tasks_json — NO seq_index/prev/next/
-            # is_first (those were window products the engine no longer
-            # computes; seq_index is assigned inside the exec stage). A
-            # hook that projects must PRESERVE sort_key/event_seq_no/
-            # event_sub_seq_no — the exec stage's within-chain sort orders
-            # by them.
-            if cfg.pre_process_batch is not None:
-                maybe = cfg.pre_process_batch(revived, self)
-                if maybe is not None:
-                    revived = maybe
-            _mark("p2_revive_build")
-            # Size the chain shuffle to the batch: 32 near-empty
-            # partitions × two Python stages is pure scheduling overhead
-            # at micro-batch sizes; a big batch still fans out to the
-            # session's full shuffle width (so this is a no-op at cluster
-            # scale). The exec stage is the batch's dominant CPU
-            # (task-tree parse + user fns + finalise per message,
-            # ~0.3-0.5 ms/row), so ~500 rows/task keeps the stage wide
-            # while each task's ~150-250 ms of row work still dwarfs its
-            # warm-worker Arrow/scheduling cost. A/B-measured r5 (VERDICT
-            # r4 #7 asked): batch/defaultParallelism sizing (32 ×
-            # ~156-row tasks for a 5k batch) ran the steady-state exec at
-            # 1.17 s vs 0.80 s for 11 × 500-row tasks — per-task
-            # Python/Arrow overhead beats the extra width below ~500
-            # rows/task, so the floor stays.
-            n_parts = max(4, min(width, (n_rec_est // 500) + 1))
-            if cfg.sequencing_required:
-                # co-locate each chain, order within partition by THE
-                # shared comparator (sequencing.chain_order_columns — the
-                # same list the sequencing window orders by, one
-                # definition so the two can't drift), stream batches; the
-                # exec fn assigns seq_index as it walks the sorted chain
-                from kinesis_stream_consumer_spark.streaming.sequencing import (
-                    chain_order_columns,
-                )
-
-                ordered = (
-                    revived.repartition(n_parts, "chain_key")
-                    .sortWithinPartitions("chain_key", *chain_order_columns())
-                    .drop("sort_key")
-                )
-                chain_col = "chain_key"
-            else:
-                # Q5: no ordering ⇒ map straight over the scan; D1
-                # within-batch dedup needs one shuffle here (no chain sort
-                # to make duplicate identities adjacent), after which each
-                # identity is its own chain
-                ordered = revived.dropDuplicates(["identity"])
-                chain_col = "identity"
-            executed = ordered.mapInPandas(
-                self._exec_fn(deadline, fused, chain_col), schema=exec_schema
-            )
-            # _one_fully_finalised (processAll scoping, X2) is emitted by
-            # the exec fn itself — the executor already holds the parsed
-            # task tree, so the flag is free and phase 2b's plan stays
-            # UDF-less (no BatchEvalPython; the engine obeys the same
-            # plan-hygiene bar as the query registry).
-            # localCheckpoint severs lineage: the state save below
-            # overwrites the parquet this plan's revive-join reads, so any
-            # later recomputation would replay tasks against their own
-            # freshly-saved state (double attempts). Checkpointing freezes
-            # the finalised batch first (and nothing downstream reads
-            # `executed` directly). eager=False: the first phase-3 action
-            # (the fused save+counters job, or the legacy counters
-            # aggregate) computes every partition, so the checkpoint
-            # materializes inside that job — before the dynamic-overwrite
-            # commit replaces any prior-state file the revive join reads.
-            _mark("p2_exec_build")
-            # p2_ckpt_plan is NOT driver waste (r9 measurement closing the
-            # r7 exec_finalise_plan item): Catalyst itself is ~40 ms here
-            # (QueryPlanningTracker phases); the rest of the mark is AQE
-            # stage materialization inside toRdd — 2-3 REAL jobs (the
-            # revive-slice broadcast and the exec shuffle's map side,
-            # racing the stats job for the phase-1 first touch, which is
-            # safe: ingest is deterministic and side-effect-free; user
-            # task fns only run in the final stage, which is NOT
-            # materialized here). The batch is pipelined: by the time the
-            # fused save+counters action runs, only the exec reduce side
-            # and the write remain.
-            finalised = (
-                executed.localCheckpoint(eager=False) if fused else None
-            )
-            _mark("p2_ckpt_plan")
-            return executed, finalised, n_parts
-
-        # Stats/plan OVERLAP: with the default load seam, a warm
-        # saved-state cache and a prior batch's size on record, the entire
-        # phase-2 plan — revive join, exec plan, and the Catalyst planning
-        # forced by the lazy checkpoint (~0.3-0.4 s/batch of pure driver
-        # work) — is built WHILE the cluster runs the stats job, instead
-        # of serially after it. The build is optimistic against the cached
-        # prior slice (unfiltered by shard: the revive join matches on
-        # identity, so rows from uninvolved shards never match), and task
-        # sizing seeds from the last batch's count (steady micro-batches
-        # are same-sized; a mis-estimate only re-sizes tasks, never
-        # changes results). If the batch turns out to touch shards OUTSIDE
-        # the cache's coverage, the optimistic plan is discarded and the
-        # legacy path rebuilds from the partition-pruned disk load —
-        # correctness never rides the estimate. Restricted to the fused
-        # path: the processAll variant runs an aggregate action during
-        # plan construction, which must not race the stats job for the
-        # phase-1 checkpoint materialization.
-        cache = self._saved_state
-        overlap = None
-        empty_prior = None
-        _mark("phase1_plan")
-        warm_overlap = cache is not None and self._last_n_records is not None
-        # Cold-start overlap: a brand-new state dir means the prior slice
-        # is provably empty for EVERY shard, so the optimistic plan is
-        # valid regardless of which shards the batch turns out to touch.
-        # Task sizing falls back to full session width (scale-safe; a
-        # micro-batch pays slightly wider-than-ideal tasks exactly once).
-        cold_overlap = (
-            not warm_overlap and cache is None and self.state.is_empty()
+            rows = ing.stats.collect()
+        # how long the stats job ran past the speculative build: only the
+        # longer of the two is critical path
+        self._mark("overlap_stats_wait")
+        stats = _Stats(
+            frozenset(r["shardOrEventID"] for r in rows),
+            int(sum(r["n_rec"] for r in rows)),
+            int(sum(r["n_unus"] for r in rows)),
         )
-        # pre_process_batch gates the overlap OFF: _build_phase2 invokes the
-        # hook, and the speculative build may be discarded and rebuilt (shards
-        # outside cache coverage) — a side-effecting hook would fire twice per
-        # batch where the reference calls preProcessBatch exactly once
-        # (kinesis-processing.js:292-298). With the hook set, phase 2 builds
-        # exactly once on the kept plan.
-        if (
-            fused
-            and cfg.load_batch_state is None
-            and cfg.pre_process_batch is None
-            and (warm_overlap or cold_overlap)
-        ):
-            if self._plan_pool is None:
-                from concurrent.futures import ThreadPoolExecutor
+        self._last_n_records = stats.n_records
+        return stats, speculative
 
-                self._plan_pool = ThreadPoolExecutor(1)
-            stats_fut = self._plan_pool.submit(stats_df.collect)
-            if warm_overlap:
-                # the pre-planned slim slice: already kind-filtered and
-                # projected, and a checkpoint LEAF — the build below
-                # re-analyzes four columns instead of the whole prior
-                # states union tree
-                prior_src = cache.revive_slice
-                est = self._last_n_records
-            else:
-                empty_prior = self.spark.createDataFrame([], STATE_SCHEMA)
-                prior_src = empty_prior.where(
-                    F.col("kind").isin("message", "rejected")
-                )
-                est = width * 500
-            overlap = _build_phase2(prior_src, est)
-            # split attribution (VERDICT r7 #1 spirit): overlap_plan is the
-            # driver-side Catalyst/py4j build; overlap_stats_wait is how
-            # long the stats job kept running AFTER the build finished —
-            # only the LONGER of the two is critical path, and which one
-            # dominates decides where optimization effort goes.
-            _mark("overlap_plan")
-            stat_rows = stats_fut.result()
-            _mark("overlap_stats_wait")
+    # ---- Phase 2: process --------------------------------------------------
+
+    def _revive_and_exec(
+        self,
+        ing: _Ingested,
+        stats: _Stats,
+        saved: Optional[_SavedState],
+        speculative: Optional[_Exec],
+        deadline: Optional[float],
+    ) -> Tuple[_Exec, Optional[DataFrame]]:
+        """T1 load + T2 revive + the exec plan. Returns the plan and the
+        prior state of the batch's shards (``None`` under a custom load
+        seam) for the sketch merges.
+
+        T1 is one partition-pruned scan per batch, like the reference's
+        single DynamoDB get, unless ``saved`` covers the batch's shards.
+        loadBatchState is pluggable (reference
+        persisting.loadBatchStateFromDynamoDB default,
+        kinesis-processing.js:291): a custom fn returns the prior slice
+        (already filtered to live message/rejected states). The
+        speculative plan is kept iff its slice covers the batch's shards;
+        otherwise it is discarded and phase 2 is rebuilt from the disk
+        load — correctness never rides the estimate."""
+        cfg = self.config
+        covered = saved is not None and saved.covers(stats.shards)
+        if cfg.load_batch_state is not None:
+            prior_all, prior = None, cfg.load_batch_state(self, stats.shards or None)
         else:
-            _mark("overlap_plan")
-            stat_rows = stats_df.collect()
-            _mark("overlap_stats_wait")
-        shards = {r["shardOrEventID"] for r in stat_rows}
-        n_records = int(sum(r["n_rec"] for r in stat_rows))
-        n_unusable = int(sum(r["n_unus"] for r in stat_rows))
-        self._last_n_records = n_records
-        _mark("ingest_checkpoint_and_stats")
-        _mark("seq_plan")
-
-        # T1 load + T2 revive: broadcast the (small) prior-state slice into
-        # the messages — one partition-pruned scan per batch, like the
-        # reference's single DynamoDB get. loadBatchState is pluggable
-        # (reference persisting.loadBatchStateFromDynamoDB default,
-        # kinesis-processing.js:291): a custom fn returns the prior slice
-        # (already filtered to live message/rejected states).
-        prior_all = None
-        if (
-            overlap is not None
-            and shards
-            and (empty_prior is not None or shards <= cache.shards)
-        ):
-            # the optimistic plan's prior slice covers this batch: keep it
-            # (an empty-state build covers ANY shard set by construction)
-            executed, finalised, n_parts = overlap
             prior_all = (
-                empty_prior
-                if empty_prior is not None
-                else cache.states.where(
-                    F.col("shardOrEventID").isin(list(shards))
-                )
+                saved.states.where(F.col("shardOrEventID").isin(list(stats.shards)))
+                if covered
+                else self.state.load(cfg.stream_consumer_id, stats.shards)
             )
-            _mark("revive_plan")
-            _mark("exec_udf_plan")
+            prior = _live(prior_all)
+        self._mark("revive_plan")
+        if speculative is not None and covered:
+            return speculative, prior_all
+        return self._build_exec(ing, prior, stats.n_records, deadline), prior_all
+
+    def _build_exec(
+        self,
+        ing: _Ingested,
+        prior: DataFrame,
+        n_rec_est: int,
+        deadline: Optional[float],
+    ) -> _Exec:
+        """T2 revive + the exec plan (incl. the Catalyst planning the
+        lazy checkpoint forces) for a given prior-state revive slice
+        and a task-sizing row estimate. Driver-side plan construction
+        PLUS the AQE stage materialization the lazy checkpoint's
+        toRdd triggers (the revive-slice broadcast and the exec
+        shuffle's map side — see the p2_ckpt_plan note below): the
+        speculative build runs it WHILE the cluster executes the
+        stats job, so those stages pipeline ahead of the fused save.
+
+        Mismatched-prior-state tolerance: prior state only revives
+        when its content digest matches the current message — same id
+        but different content means the state is stale and the message
+        executes fresh (reference "COMPLETELY MISMATCHED PRIOR state"
+        ⇒ attempts restart at 1, test/kinesis-consumer.test.js:
+        847-945). A prior row with no recorded digest (custom stores)
+        still revives.
+        """
+        cfg = self.config
+        fused = not self.all_defs
+        revived = ing.msgs.join(
+            F.broadcast(
+                prior.select(
+                    F.col("identity").alias("_pid"),
+                    F.col("msg_md5").alias("_pmd5"),
+                    F.col("tasks_json").alias("prior_tasks_json"),
+                )
+            ),
+            (F.col("identity") == F.col("_pid"))
+            & (F.col("_pmd5").isNull() | (F.col("_pmd5") == F.col("msg_md5"))),
+            "left",
+        ).drop("_pid", "_pmd5")
+        # F3 hook: preProcessBatch (kinesis-processing.js:292-298).
+        # Column contract (changed r7 with the window removal):
+        # `revived` carries the phase-1 message columns + chain_key +
+        # sort_key + prior_tasks_json — NO seq_index/prev/next/
+        # is_first (those were window products the engine no longer
+        # computes; seq_index is assigned inside the exec stage). A
+        # hook that projects must PRESERVE sort_key/event_seq_no/
+        # event_sub_seq_no — the exec stage's within-chain sort orders
+        # by them.
+        if cfg.pre_process_batch is not None:
+            maybe = cfg.pre_process_batch(revived, self)
+            if maybe is not None:
+                revived = maybe
+        self._mark("p2_revive_build")
+        # Size the chain shuffle to the batch: 32 near-empty
+        # partitions × two Python stages is pure scheduling overhead
+        # at micro-batch sizes; a big batch still fans out to the
+        # session's full shuffle width (so this is a no-op at cluster
+        # scale). The exec stage is the batch's dominant CPU
+        # (task-tree parse + user fns + finalise per message,
+        # ~0.3-0.5 ms/row), so ~500 rows/task keeps the stage wide
+        # while each task's ~150-250 ms of row work still dwarfs its
+        # warm-worker Arrow/scheduling cost. A/B-measured r5 (VERDICT
+        # r4 #7 asked): batch/defaultParallelism sizing (32 ×
+        # ~156-row tasks for a 5k batch) ran the steady-state exec at
+        # 1.17 s vs 0.80 s for 11 × 500-row tasks — per-task
+        # Python/Arrow overhead beats the extra width below ~500
+        # rows/task, so the floor stays.
+        n_parts = max(4, min(ing.width, (n_rec_est // 500) + 1))
+        if cfg.sequencing_required:
+            # co-locate each chain, order within partition by THE
+            # shared comparator (sequencing.chain_order_columns — the
+            # same list the sequencing window orders by, one
+            # definition so the two can't drift), stream batches; the
+            # exec fn assigns seq_index as it walks the sorted chain
+            from kinesis_stream_consumer_spark.streaming.sequencing import (
+                chain_order_columns,
+            )
+
+            ordered = (
+                revived.repartition(n_parts, "chain_key")
+                .sortWithinPartitions("chain_key", *chain_order_columns())
+                .drop("sort_key")
+            )
+            chain_col = "chain_key"
         else:
-            if cfg.load_batch_state is not None:
-                prior = cfg.load_batch_state(self, shards or None)
-            else:
-                if cache is not None and shards and shards <= cache.shards:
-                    prior_all = cache.states.where(
-                        F.col("shardOrEventID").isin(list(shards))
-                    )
-                else:
-                    prior_all = self.state.load(
-                        cfg.stream_consumer_id, shards or None
-                    )
-                prior = prior_all.where(
-                    F.col("kind").isin("message", "rejected")
-                )
-            _mark("revive_plan")
-            executed, finalised, n_parts = _build_phase2(prior, n_records)
-            _mark("exec_udf_plan")
-        if not fused:
-            # processAll needs the materialized post-processOne batch as its
-            # scope (incompleteMessages, X2) — one extra checkpoint + agg
+            # Q5: no ordering ⇒ map straight over the scan; D1
+            # within-batch dedup needs one shuffle here (no chain sort
+            # to make duplicate identities adjacent), after which each
+            # identity is its own chain
+            ordered = revived.dropDuplicates(["identity"])
+            chain_col = "identity"
+        # _one_fully_finalised (processAll scoping, X2) is emitted by the
+        # exec fn itself — the executor already holds the parsed task
+        # tree, so the flag is free and the plan stays UDF-less (no
+        # BatchEvalPython; the engine obeys the same plan-hygiene bar as
+        # the query registry).
+        executed = ordered.mapInPandas(
+            self._exec_fn(deadline, fused, chain_col),
+            schema=_FINAL_SCHEMA if fused else _EXEC_SCHEMA,
+        )
+        self._mark("p2_exec_build")
+        # localCheckpoint severs lineage: the state save overwrites the
+        # parquet this plan's revive-join reads, so any later
+        # recomputation would replay tasks against their own
+        # freshly-saved state (double attempts). eager=False: the first
+        # phase-3 action (the fused save+counters job, or the counters
+        # aggregate) computes every partition, so the checkpoint
+        # materializes inside that job — before the dynamic-overwrite
+        # commit replaces any prior-state file the revive join reads.
+        # p2_ckpt_plan is NOT driver waste (r9 measurement): Catalyst
+        # itself is ~40 ms here; the rest of the mark is AQE stage
+        # materialization inside toRdd — 2-3 REAL jobs (the revive-slice
+        # broadcast and the exec shuffle's map side, racing the stats job
+        # for the phase-1 first touch, which is safe: ingest is
+        # deterministic and side-effect-free; user task fns only run in
+        # the final stage, which is NOT materialized here). By the time
+        # the fused save+counters action runs, only the exec reduce side
+        # and the write remain.
+        if fused:
             executed = executed.localCheckpoint(eager=False)
-            n_incomplete_scope = (
-                executed.agg(
-                    F.sum(F.when(~F.col("_one_fully_finalised"), 1).otherwise(0))
-                ).first()[0]
-                or 0
-            )
-            all_results = self._run_process_all(executed, n_incomplete_scope)
-            executed = executed.drop("_one_fully_finalised")
-            finalised = executed.mapInPandas(
-                self._finalise_fn(all_results), schema=_FINAL_SCHEMA
-            ).localCheckpoint(eager=False)
-        _mark("exec_finalise_plan")
+        self._mark("p2_ckpt_plan")
+        return _Exec(executed, n_parts)
 
-        # ---- Phase 3: finalise -------------------------------------------
-        # F3 hook: preFinaliseBatch
-        if cfg.pre_finalise_batch is not None:
-            cfg.pre_finalise_batch(finalised, self)
-        tag = self._t4_tag
-        # The three finalise sinks (DRQ, DMQ, state save) write to disjoint
-        # paths from frames that are all checkpointed — independent Spark
-        # jobs, so the DEFAULT sinks run concurrently from worker threads
-        # (driver-side job submission is thread-safe) instead of paying
-        # three serial write latencies per micro-batch. Custom seams run
-        # serially: user hooks are not assumed thread-safe.
-        sink_jobs: List[Callable[[], None]] = []
-        if n_unusable:
-            # D2 seam: discardUnusableRecord (default DRQ append,
-            # kinesis-processing.js:296 discardUnusableRecordToDRQ)
-            if cfg.discard_unusable_record is not None:
-                cfg.discard_unusable_record(unusable, self)
-            else:
-                drq_env = unusable.select(*self._drq_cols)
-                _drq_job = lambda: append_to_queue(  # noqa: E731
-                    drq_env, self.drq_path, n_rows=n_unusable
-                )
-                if cfg.deferred_discard_sinks:
-                    # reads only the phase-1 checkpoint the stats job
-                    # already materialized — safe to run any time, even
-                    # concurrently with the save
-                    self._submit_deferred_sink(_drq_job)
-                else:
-                    sink_jobs.append(_drq_job)
-        # Finalise counters. When the DEFAULT state save is about to run
-        # (the common path: default T4 seam + a non-empty batch), the
-        # counters ride that very write job as observed metrics
-        # (CollectMetrics via Observation) instead of a separate aggregate
-        # job — the save's action materializes the lazy exec checkpoint
-        # AND reports the counts, so exec stage + counters + state write
-        # cost ONE job per micro-batch. Overwrite-under-read stays safe:
-        # dynamic-overwrite commit (delete + swap of the replaced
-        # partitions) only runs after every task — including the ones
-        # computing the checkpoint through the revive join's prior-state
-        # scan — has finished. With a custom save seam or an empty batch,
-        # the legacy separate counters aggregate runs first, sinks after.
-        flags = {"n_rejected": "rejectedish", "n_ff": "fully_finalised",
-                 "n_inc": "incomplete"}
-        counters = [F.count(F.lit(1)).alias("n_messages")] + [
+    # ---- Phase 3: finalise -------------------------------------------------
+
+    def _count_finalised(self, finalised: DataFrame, observe: bool) -> _Counted:
+        """The batch counters over the finalised frame. ``observe`` (the
+        default state save is about to run on a non-empty batch): the
+        counters ride that very write job as observed metrics
+        (CollectMetrics via Observation) instead of a separate aggregate
+        job — the save's action materializes the lazy exec checkpoint AND
+        reports the counts, so exec stage + counters + state write cost
+        ONE job per micro-batch. Overwrite-under-read stays safe:
+        dynamic-overwrite commit (delete + swap of the replaced
+        partitions) only runs after every task — including the ones
+        computing the checkpoint through the revive join's prior-state
+        scan — has finished. Otherwise a separate aggregate runs now, and
+        it is the checkpoint's materializing action."""
+        exprs = [F.count(F.lit(1)).alias("messages")] + [
             F.sum(F.when(F.col(flag), 1).otherwise(0)).alias(name)
-            for name, flag in flags.items()
+            for name, flag in _COUNTED_FLAGS.items()
         ]
-
-        def _read_counters(row) -> tuple:
-            # (n_messages, n_rejected, n_ff, n_inc), from the agg Row or the
-            # Observation's dict alike
-            return tuple(int(row[name] or 0) for name in ["n_messages", *flags])
-
-        obs: Optional[Observation] = None
-        if cfg.save_batch_state is None and (n_records or n_unusable):
+        if observe:
             obs = Observation()
-            finalised = finalised.observe(obs, *counters)
-        rejected = finalised.where(F.col("rejectedish"))
+            return _Counted(finalised.observe(obs, *exprs), obs)
+        return _Counted(finalised, _Counters.of(finalised.agg(*exprs).first()))
 
-        def _default_dmq() -> None:
-            # D3 default sink: DMQ append (kinesis-processing.js:297
-            # discardRejectedMessageToDMQ). n_rejected sizes the write
-            # (late-bound: assigned on both counter paths before any call).
-            append_to_queue(
-                rejected.select(*self._dmq_cols),
-                self.dmq_path,
-                n_rows=n_rejected,
+    def _save_and_sink(
+        self,
+        counted: _Counted,
+        ing: _Ingested,
+        stats: _Stats,
+        prior_all: Optional[DataFrame],
+        batch_id: int,
+    ) -> _Counters:
+        """D2 DRQ append + T4 state save (message, rejected and unusable
+        states, plus the sketch registers, in one parquet upsert). Both
+        default sinks write disjoint paths from checkpointed frames —
+        independent Spark jobs, so they run concurrently on the engine
+        pool (driver-side job submission is thread-safe). Custom seams
+        run serially: user hooks are not assumed thread-safe.
+
+        Returns the batch counters. On the observed path the save's
+        action is what computes them, so they exist only once it ran."""
+        cfg = self.config
+        known = counted.counters if isinstance(counted.counters, _Counters) else None
+        sink_jobs: List[Callable[[], None]] = []
+        if stats.n_unusable:
+            # D2 seam: discardUnusableRecord (default DRQ append,
+            # kinesis-processing.js:296 discardUnusableRecordToDRQ). It
+            # reads only the phase-1 checkpoint the stats job already
+            # materialized — safe to run any time, even during the save.
+            drq = self._discard(
+                cfg.discard_unusable_record,
+                ing.unusable,
+                self._drq_cols,
+                self.drq_path,
+                stats.n_unusable,
             )
-
-        if obs is None:
-            n_messages, n_rejected, n_fully_finalised, n_incomplete = (
-                _read_counters(finalised.agg(*counters).first())
-            )
-        _mark("exec_finalise_and_counters")
-        if obs is None and n_rejected:
-            # D3 seam: discardRejectedMessage (kinesis-processing.js:297).
-            # Custom seams run serially (not assumed thread-safe); the
-            # default append joins the concurrent sink pool below.
-            if cfg.discard_rejected_message is not None:
-                cfg.discard_rejected_message(rejected, self)
-            elif cfg.deferred_discard_sinks:
-                # the counters aggregate above materialized the finalised
-                # checkpoint, so the deferred append reads settled data
-                self._submit_deferred_sink(_default_dmq)
-            else:
-                sink_jobs.append(_default_dmq)
-
-        # T4 save — message + rejected + unusable states, one parquet
-        # upsert. Column lists are precomputed in __init__ (config-static);
-        # only the batch_id literal is per-batch.
-        batch_id_col = F.lit(batch_id).cast("long").alias("batch_id")
-        msg_states = finalised.select(
-            *self._t4_msg_head, batch_id_col, *self._t4_tail
-        )
-        unusable_states = unusable.select(
-            *self._t4_unusable_head, batch_id_col, *self._t4_tail
-        )
+            if drq is not None:
+                sink_jobs.append(drq)
         default_saved = False
-        if obs is not None or n_messages or n_unusable:
+        if known is None or known.messages or stats.n_unusable:
             # T4 seam: saveBatchState (default parquet MERGE upsert,
-            # kinesis-processing.js:295 saveBatchStateToDynamoDB)
-            states = msg_states.unionByName(unusable_states)
-            if (
-                cfg.track_distinct_sketch
-                and cfg.save_batch_state is None
-                # default LOAD seam required too: a custom load leaves
-                # prior_all None, the max-merge would skip, and the
-                # partition-replacing save would drop accumulated registers
-                and cfg.load_batch_state is None
-            ):
-                # Per-shard HLL distinct-MESSAGE sketch: this batch's
-                # registers over the checkpointed identities, max-merged
-                # with the prior registers for the touched shards (the
-                # save below REPLACES those partitions, so the merge must
-                # happen pre-save). Register max-merge is idempotent —
-                # replaying a failed batch re-merges the same maxima, so
-                # the sketch stays exact-composable under at-least-once
-                # delivery, unlike any additive counter.
-                from kinesis_stream_consumer_spark.operators.sketches import (
-                    hll_registers,
+            # kinesis-processing.js:295 saveBatchStateToDynamoDB). Column
+            # lists are precomputed in __init__ (config-static); only the
+            # batch_id literal is per-batch.
+            batch_id_col = F.lit(batch_id).cast("long").alias("batch_id")
+            states = counted.frame.select(
+                *self._t4_msg_head, batch_id_col, *self._t4_tail
+            ).unionByName(
+                ing.unusable.select(
+                    *self._t4_unusable_head, batch_id_col, *self._t4_tail
                 )
-
-                batch_regs = hll_registers(
-                    msgs.select("shardOrEventID", "identity"),
-                    "shardOrEventID",
-                    F.col("identity"),
-                )
-                if prior_all is not None:
-                    prior_regs = prior_all.where(
-                        F.col("kind") == "sketch"
-                    ).select(
-                        F.col("shardOrEventID").alias("g"),
-                        F.col("sketch_bucket").alias("bucket"),
-                        F.col("sketch_r").alias("r"),
-                    )
-                    # eager checkpoint: the merge reads the very parquet
-                    # partitions the save below replaces (the same hazard
-                    # the finalised checkpoint exists for); the frame is
-                    # register-sized (m × shards rows), so this is a tiny
-                    # job, not a data pass.
-                    batch_regs = (
-                        batch_regs.unionByName(prior_regs)
-                        .groupBy("g", "bucket")
-                        .agg(F.max("r").alias("r"))
-                        .localCheckpoint(eager=True)
-                    )
-                states = states.unionByName(
-                    self._sketch_state_rows(
-                        batch_regs,
-                        batch_id,
-                        "sketch",
-                        F.concat(F.lit("HLL|"), F.col("bucket")),
-                        F.col("bucket"),
-                        F.col("r"),
-                    )
-                )
-            # Additive sketches count PROCESSED messages — the delta
-            # sources from the checkpointed post-exec `finalised` frame,
-            # which the D1 within-batch dedup has already filtered, so a
-            # record delivered twice INSIDE one batch counts once (the
-            # HLL sketch is identity-keyed and immune either way; only
-            # cross-batch re-delivery under a NEW batch_id overcounts —
-            # the pinned additive bound). Both additive sketches require
-            # the DEFAULT load seam too (not just the default save): a
-            # custom load_batch_state leaves prior_all None, and merging
-            # nothing before a save that REPLACES the shard partitions
-            # would silently destroy the accumulated counters.
-            default_seams = (
-                cfg.save_batch_state is None and cfg.load_batch_state is None
             )
-            if cfg.track_frequency_sketch and default_seams:
-                # Per-shard Count-Min KEY-frequency sketch: cumulative
-                # counters (kind='cms') plus THIS batch's delta
-                # (kind='cms_delta', keyed by batch_id) — see
-                # _additive_sketch_rows for the replay contract.
-                from kinesis_stream_consumer_spark.operators.sketches import (
-                    cms_counters,
-                )
-
-                states = states.unionByName(
-                    self._additive_sketch_rows(
-                        cms_counters(
-                            # non-keyed configs canonicalise key to NULL for
-                            # every message — hashing NULL would save one
-                            # meaningless NULL-bucket register per batch that
-                            # merges additively forever (mirror the qsketch
-                            # isNotNull guard)
-                            finalised.select(
-                                self._shard_or_event_col.alias("shardOrEventID"),
-                                "key",
-                            ).where(F.col("key").isNotNull()),
-                            "shardOrEventID",
-                            F.col("key"),
-                        ),
-                        prior_all,
-                        batch_id,
-                        "cms",
-                        "cms_delta",
-                        "CMS|",
-                    )
-                )
-            if cfg.track_quantile_sketch and default_seams:
-                # Per-shard log-linear QUANTILE sketch over the numeric
-                # tail of the event sequence number (the per-shard
-                # seqNo-spread / hot-range signal): same additive-register
-                # replay contract as the CMS twin, ≤63·K+1 registers per
-                # shard regardless of volume.
-                from kinesis_stream_consumer_spark.operators.sketches import (
-                    qsketch_buckets,
-                )
-
-                qs_src = finalised.select(
-                    self._shard_or_event_col.alias("shardOrEventID"),
-                    F.expr(
-                        "CAST(substring(event_seq_no,"
-                        " greatest(length(event_seq_no) - 14, 1), 15)"
-                        " AS BIGINT)"
-                    ).alias("v"),
-                ).where(F.col("v").isNotNull())
-                states = states.unionByName(
-                    self._additive_sketch_rows(
-                        qsketch_buckets(
-                            qs_src, "shardOrEventID", F.col("v")
-                        ).select("g", F.col("qid").alias("idx"), "cnt"),
-                        prior_all,
-                        batch_id,
-                        "qsk",
-                        "qsk_delta",
-                        "QSK|",
-                    )
-                )
-            if cfg.track_sample_sketch and default_seams:
-                # Per-shard uniform message sample (kind='rsv'): the n+1
-                # smallest md5-priority identities — the engine-native
-                # reservoir sketch (operators/sketches reservoir_*, w=1).
-                # Union prior register + this batch's keys, re-take the
-                # n+1 smallest: a MIN-merge like the HLL registers —
-                # idempotent, so replayed batches leave the sample
-                # EXACTLY the single-pass sample (no delta bookkeeping).
-                from kinesis_stream_consumer_spark.operators.dedup import (
-                    md5_u56_le,
-                )
-                from kinesis_stream_consumer_spark.operators.sketches import (
-                    reservoir_merge,
-                )
-
-                n_rsv = cfg.sample_sketch_n
-                batch_keys = finalised.select(
-                    self._shard_or_event_col.alias("g"),
-                    F.col("identity").alias("id"),
-                    F.lit(1).cast("long").alias("w"),
-                    # uniform draw: pri = u div 1 = the 56-bit md5 integer
-                    md5_u56_le(F.col("identity")).alias("pri"),
-                )
-                if prior_all is not None:
-                    prior_rsv = prior_all.where(
-                        F.col("kind") == "rsv"
-                    ).select(
-                        F.col("shardOrEventID").alias("g"),
-                        F.expr("substring(identity, 5)").alias("id"),
-                        F.lit(1).cast("long").alias("w"),
-                        F.col("sketch_r").alias("pri"),
-                    )
-                    batch_keys = batch_keys.unionByName(prior_rsv)
-                regs = reservoir_merge(batch_keys, n_rsv)
-                if prior_all is not None:
-                    # same overwrite-under-read guard as the HLL merge:
-                    # the save below replaces the partitions the prior
-                    # register was read from; the frame is <= n+1 rows
-                    # per shard, so this is a tiny job
-                    regs = regs.localCheckpoint(eager=True)
-                states = states.unionByName(
-                    self._sketch_state_rows(
-                        regs,
-                        batch_id,
-                        "rsv",
-                        F.concat(F.lit("RSV|"), F.col("id")),
-                        F.col("rank"),
-                        F.col("pri"),
-                    )
+            # sketches need both default seams: a custom load leaves no
+            # prior registers to merge, and the partition-replacing save
+            # would then drop the accumulated ones
+            if cfg.save_batch_state is None and prior_all is not None:
+                states = self._with_sketches(
+                    states, ing.msgs, counted.frame, prior_all, batch_id
                 )
             if cfg.save_batch_state is not None:
                 cfg.save_batch_state(states, self)
                 self._saved_state = None  # unknown destination
             else:
+                n_save = max(1, min(len(stats.shards), ing.width))
                 sink_jobs.append(
-                    lambda: self.state.save(
-                        states, n_partitions=max(1, min(len(shards), width))
-                    )
+                    lambda: self.state.save(states, n_partitions=n_save)
                 )
                 default_saved = True
-        _mark("t4_plan_build")
+        self._mark("t4_plan_build")
         # (r7 A/B: scoping AQE OFF around the save — its shuffles are all
         # explicitly sized, so AQE only adds sub-job cadence — measured as
         # pure noise across interleaved trials; keeping session AQE
         # untouched.)
         if len(sink_jobs) == 1:
             sink_jobs[0]()
-        elif sink_jobs:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(len(sink_jobs)) as pool:
-                for fut in [pool.submit(j) for j in sink_jobs]:
-                    fut.result()  # propagate the first failure
-        _mark("t4_save_write")
+        else:
+            for fut in [self._pool.submit(job) for job in sink_jobs]:
+                fut.result()  # propagate the first failure
+        self._mark("t4_save_write")
         if default_saved:
             # the written partitions now equal `states` exactly — serve the
             # next batch's T1 load from it (lazy over checkpointed inputs),
             # and pre-plan its revive slice HERE (see __init__): the lazy
             # localCheckpoint runs Catalyst once over the slim 4-column
-            # projection and hands the next overlap build a checkpoint
+            # projection and hands the next speculative build a checkpoint
             # leaf. No job runs — computation happens inside the next
             # batch's first action over checkpointed inputs.
             self._saved_state = _SavedState(
-                frozenset(shards),
+                stats.shards,
                 states,
-                states.where(F.col("kind").isin("message", "rejected"))
+                _live(states)
                 .select("shardOrEventID", "identity", "msg_md5", "tasks_json")
                 .localCheckpoint(eager=False),
             )
-        _mark("revive_slice_plan")
-        if obs is not None:
-            # The save (or a sketch merge before it) executed the observed
-            # plan; the listener delivers the metrics moments after the
-            # action returns. DMQ runs after the counters on this path —
-            # its job reads the now-materialized checkpoint, so the only
-            # serialization cost is the (small) envelope write itself.
-            n_messages, n_rejected, n_fully_finalised, n_incomplete = (
-                _read_counters(obs.get)
-            )
-            if default_saved and not (n_messages or n_unusable):
-                # zero rows were written: the cache would claim these
-                # shards hold nothing while disk still has their old rows
-                self._saved_state = None
-        _mark("obs_counters")
-        if obs is not None and n_rejected:
-            if cfg.discard_rejected_message is not None:
-                cfg.discard_rejected_message(rejected, self)
-            elif cfg.deferred_discard_sinks:
-                # the save's action materialized the finalised checkpoint;
-                # the append itself comes off the batch critical path and
-                # joins at the next batch (or drain_discard_sinks)
-                self._submit_deferred_sink(_default_dmq)
-            else:
-                _default_dmq()
-        _mark("dlq_and_state_save")
+        self._mark("revive_slice_plan")
+        # the listener delivers observed metrics moments after the action
+        # that computed them returns
+        counters = known if known is not None else _Counters.of(counted.counters.get)
+        if default_saved and not (counters.messages or stats.n_unusable):
+            # zero rows were written: the cache would claim these shards
+            # hold nothing while disk still has their old rows
+            self._saved_state = None
+        self._mark("obs_counters")
+        return counters
 
-        result = BatchResult(
-            batch_id=batch_id,
-            records=n_records,
-            messages=n_messages,
-            unusable=n_unusable,
-            fully_finalised=n_fully_finalised,
-            rejected_to_dmq=n_rejected,
-            discarded_to_drq=n_unusable,
-            incomplete=n_incomplete,
-            exec_partitions=n_parts,
-        )
-        self.last_section_times = dict(_marks)
+    def _discard(
+        self,
+        seam: Optional[Callable],
+        frame: DataFrame,
+        cols: List[Column],
+        path: str,
+        n_rows: int,
+    ) -> Optional[Callable[[], None]]:
+        """One D2/D3 discard of ``frame``: a custom seam runs now; the
+        default queue append goes to the ONE-worker deferred pool
+        (config.deferred_discard_sinks — appends to one queue path keep
+        batch order, and the job reads only an already-materialized
+        checkpoint, so it cannot double-execute task fns), or is returned
+        for the caller to run."""
+        if seam is not None:
+            seam(frame, self)
+            return None
+        job = partial(append_to_queue, frame.select(*cols), path, n_rows=n_rows)
+        if not self.config.deferred_discard_sinks:
+            return job
+        self._pending_sink_futures.append(self._deferred_sink_pool.submit(job))
+        return None
+
+    def _discard_rejected(self, finalised: DataFrame, counters: _Counters) -> None:
+        """D3 seam: discardRejectedMessage (default DMQ append,
+        kinesis-processing.js:297 discardRejectedMessageToDMQ) — the
+        batch's one DMQ step. It needs the counters, so it runs after the
+        action that materialized the finalised checkpoint it reads; the
+        only serialization cost is the (small) envelope write itself."""
+        if counters.rejected:
+            dmq = self._discard(
+                self.config.discard_rejected_message,
+                finalised.where(F.col("rejectedish")),
+                self._dmq_cols,
+                self.dmq_path,
+                counters.rejected,
+            )
+            if dmq is not None:
+                dmq()
+
+    def _commit_or_replay(
+        self, result: BatchResult, finalised: DataFrame
+    ) -> BatchResult:
+        """postFinaliseBatch, opt-in compaction, then F1/F2: commit, or
+        resubmit / raise so the incomplete messages are replayed."""
+        cfg = self.config
         # F3 hook: postFinaliseBatch
         if cfg.post_finalise_batch is not None:
             cfg.post_finalise_batch(result, self)
-        if (
-            self.compact_every_n_batches
-            and not n_incomplete
-            and batch_id > 0
-            and batch_id % self.compact_every_n_batches == 0
-        ):
-            self.state.compact(batch_id - self.compact_retention_batches)
-            self._saved_state = None  # disk rewritten under the cache
-        if n_incomplete:
-            # F2: in unsequenced mode with a resubmit sink configured,
-            # incomplete messages are resubmitted to the source instead of
-            # failing the whole batch (test titles
-            # kinesis-consumer.unseq.test.js:1521,1867,2911,3063) — ordering
-            # doesn't matter there, so replaying only stragglers is safe.
-            if (
-                not cfg.sequencing_required
-                and self.resubmit_path is not None
-            ):
-                from kinesis_stream_consumer_spark.sources.records import (
-                    KINESIS_RECORD_SCHEMA,
-                )
+        if not result.incomplete:
+            every = self.compact_every_n_batches
+            if every and result.batch_id > 0 and result.batch_id % every == 0:
+                self.state.compact(result.batch_id - self.compact_retention_batches)
+                self._saved_state = None  # disk rewritten under the cache
+            return result
+        # F2: in unsequenced mode with a resubmit sink configured,
+        # incomplete messages are resubmitted to the source instead of
+        # failing the whole batch (test titles
+        # kinesis-consumer.unseq.test.js:1521,1867,2911,3063) — ordering
+        # doesn't matter there, so replaying only stragglers is safe.
+        if not cfg.sequencing_required and self.resubmit_path is not None:
+            from kinesis_stream_consumer_spark.sources.records import (
+                KINESIS_RECORD_SCHEMA,
+            )
 
-                incomplete_records = (
-                    finalised.where(F.col("incomplete"))
-                    .select(
-                        F.from_json("record_json", KINESIS_RECORD_SCHEMA).alias("r")
-                    )
-                    .select("r.*")
-                )
-                incomplete_records.write.mode("append").json(self.resubmit_path)
-                return result
-            raise BatchReplayError(result)  # F1: fail ⇒ source replays batch
-        return result
+            (
+                finalised.where(F.col("incomplete"))
+                .select(F.from_json("record_json", KINESIS_RECORD_SCHEMA).alias("r"))
+                .select("r.*")
+                .write.mode("append")
+                .json(self.resubmit_path)
+            )
+            return result
+        raise BatchReplayError(result)  # F1: fail ⇒ source replays batch
 
     # --- S1: streaming attachment ------------------------------------------
 

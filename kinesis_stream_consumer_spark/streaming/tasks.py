@@ -150,22 +150,25 @@ def init_tasks(
     return tasks
 
 
-def _tree_statuses(st: Dict[str, Any]) -> List[str]:
-    out = [st["status"]]
-    for sub in st.get("subtasks", {}).values():
-        out.append(sub["status"])
-    return out
+def task_nodes(st: Dict[str, Any]) -> List[Dict[str, Any]]:
+    """A task's tree (X3): the task itself, then its sub-tasks."""
+    return [st, *st.get("subtasks", {}).values()]
+
+
+def task_finalised(st: Dict[str, Any]) -> bool:
+    """The task AND every sub-task are terminal — the tree is done."""
+    return all(node["status"] in FINALISED for node in task_nodes(st))
 
 
 def is_fully_finalised(tasks: Dict[str, Any]) -> bool:
-    return all(
-        s in FINALISED for st in tasks.values() for s in _tree_statuses(st)
-    )
+    return all(task_finalised(st) for st in tasks.values())
 
 
 def is_incomplete(tasks: Dict[str, Any]) -> bool:
     return any(
-        s in INCOMPLETE for st in tasks.values() for s in _tree_statuses(st)
+        node["status"] in INCOMPLETE
+        for st in tasks.values()
+        for node in task_nodes(st)
     )
 
 
@@ -173,9 +176,9 @@ def is_rejectedish(tasks: Dict[str, Any]) -> bool:
     """Message belongs in the DMQ: fully finalised with at least one
     Rejected/Discarded/Abandoned task (D3)."""
     return is_fully_finalised(tasks) and any(
-        s in FULLY_FINALISED_TERMINAL
+        node["status"] in FULLY_FINALISED_TERMINAL
         for st in tasks.values()
-        for s in _tree_statuses(st)
+        for node in task_nodes(st)
     )
 
 
@@ -185,7 +188,7 @@ def execute_one_task(
     """Run one processOne task against one message, updating state in place.
     Idempotent resume (D1): finalised task trees are skipped, preserving
     attempts (test/batch.test.js:443-462)."""
-    if all(s in FINALISED for s in _tree_statuses(st)):
+    if task_finalised(st):
         return
     st["attempts"] += 1
     st["status"] = STARTED
@@ -216,7 +219,7 @@ def apply_finalise_rules(tasks: Dict[str, Any], max_attempts: int) -> None:
     - TimedOut resets attempts (X5 parity, kinesis-consumer.test.js:2985-2988)
     """
     for st in tasks.values():
-        for node in [st, *st.get("subtasks", {}).values()]:
+        for node in task_nodes(st):
             if node["status"] == UNUSABLE:
                 node["status"] = ABANDONED
                 node["reason"] = node.get("reason") or "task def no longer active"
@@ -244,7 +247,7 @@ def finalise_outputs(
         (
             node.get("reason")
             for st in tasks.values()
-            for node in [st, *st.get("subtasks", {}).values()]
+            for node in task_nodes(st)
             if node["status"] in FULLY_FINALISED_TERMINAL
         ),
         None,

@@ -1008,6 +1008,43 @@ def test_fused_save_overwrite_under_read(spark, tmp_path):
     assert all(t["t1"]["attempts"] <= 2 for t in second.values())
 
 
+def test_warm_cache_miss_revives_uncovered_shards_from_disk(spark, tmp_path):
+    """A warm engine plans phase 2 against its saved-state cache while the
+    stats job runs. When the batch also touches shards the cache does not
+    cover, that plan cannot see their prior state: it must be dropped and
+    phase 2 rebuilt from the disk load. Shard A is the even user ids, shard
+    B the odd ones; B's prior state was written by another engine whose
+    task failed once, so the failed message re-runs as attempt 2, not 1."""
+    from kinesis_stream_consumer_spark.plans.queries import _t
+
+    ev = _t(spark, SF_SMOKE, "events").where(F.col("event_id") < 20)
+    in_a = F.col("user_id") % 2 == 0
+    recs_a = events_as_kinesis_records(ev.where(in_a), n_shards=2)
+    recs_b = events_as_kinesis_records(ev.where(~in_a), n_shards=2)
+    target = ev.where(~in_a).agg(F.min("event_id")).first()[0]
+    assert target is not None and ev.where(in_a).count() > 0
+
+    def fails_on_target(message, task):
+        if message["id1"] == target:
+            raise RuntimeError("fails once")
+
+    eng_b = make_engine(spark, tmp_path, one_defs=[TaskDef("t1", fails_on_target)])
+    with pytest.raises(BatchReplayError):
+        eng_b.process_batch(recs_b, batch_id=1)
+    assert tasks_of(eng_b)[f"id1:{target}"]["t1"]["attempts"] == 1
+
+    eng = make_engine(spark, tmp_path, one_defs=[TaskDef("t1", noop)])
+    eng.process_batch(recs_a, batch_id=2)
+    assert len(eng._saved_state.shards) == 1  # the cache covers A only
+
+    res = eng.process_batch(recs_a.unionByName(recs_b), batch_id=3)
+    assert res.messages == 20 and res.fully_finalised == 20
+    attempts = {i: t["t1"]["attempts"] for i, t in tasks_of(eng).items()}
+    assert len(attempts) == 20
+    assert attempts.pop(f"id1:{target}") == 2  # revived from disk
+    assert set(attempts.values()) == {1}
+
+
 def test_deferred_discard_sinks_land_at_next_batch_or_drain(spark, tmp_path):
     """config.deferred_discard_sinks: DRQ/DMQ appends come off the batch
     critical path and are joined at the next process_batch / explicit

@@ -320,6 +320,36 @@ def test_custom_discard_functions(spark, tmp_path):
     assert not os.path.exists(str(tmp_path / "dmq"))
 
 
+def test_custom_save_batch_state_keeps_default_dmq(spark, tmp_path):
+    """A custom save seam replaces only the state write: rejected messages
+    still go to the default DMQ parquet, exactly once each."""
+    saved = []
+
+    def my_save(states, engine):
+        saved.extend(
+            r["identity"]
+            for r in states.where(F.col("kind") == "rejected").collect()
+        )
+
+    def rejector(message, task):
+        if int(message["id1"]) % 2 == 0:
+            task.reject("even ids rejected")
+
+    ev = _t(spark, SF_SMOKE, "events").where(F.col("event_id") < 10)
+    cfg = EngineConfig(
+        save_batch_state=my_save, max_number_of_attempts=1, **_SEQ_CFG
+    )
+    eng = _engine(spark, tmp_path, cfg, one_defs=[TaskDef("t1", rejector)])
+    res = eng.process_batch(events_as_kinesis_records(ev), batch_id=1)
+    dmq = spark.read.parquet(str(tmp_path / "dmq"))
+    assert res.rejected_to_dmq == dmq.count() == 5
+    rejected_ids = [f"id1:{i}" for i in range(0, 10, 2)]
+    assert sorted(r["id"] for r in dmq.collect()) == rejected_ids
+    assert sorted(saved) == rejected_ids
+    # the default state store was bypassed
+    assert eng.state.read_all().count() == 0
+
+
 # --- resolve_event_id_and_seq_nos -------------------------------------------
 
 

@@ -203,12 +203,15 @@ class _SavedState(NamedTuple):
 class _Ingested(NamedTuple):
     """Phase 1's frames, all over one lazy checkpoint: the usable
     messages (Q5: each its own chain), the unusable records and the
-    not-yet-run stats aggregate; plus the session shuffle width."""
+    not-yet-run stats aggregate; plus the session shuffle width and the
+    task slots (``defaultParallelism`` capped by that width), the most
+    tasks a Python stage may run in one wave."""
 
     msgs: DataFrame
     unusable: DataFrame
     stats: DataFrame
     width: int
+    slots: int
 
 
 class _Stats(NamedTuple):
@@ -270,10 +273,10 @@ class BatchResult:
     rejected_to_dmq: int
     discarded_to_drq: int
     incomplete: int
-    # exec-stage width this batch ran at: min(session shuffle width,
-    # ~rows/500) — the scale-soak test pins that a big batch reaches full
-    # cluster width (the "sizing is a no-op at scale" claim, engine.py
-    # phase-2 sizing comment)
+    # exec-stage width this batch ran at: min(task slots, ~rows/500),
+    # where the slots are defaultParallelism capped by the session
+    # shuffle width — a big batch runs at full cluster width, in one wave
+    # (see _build_exec's sizing comment)
     exec_partitions: int = 0
 
 
@@ -341,12 +344,12 @@ class Engine:
         self._last_n_records: Optional[int] = None
         # The engine's concurrent jobs: the stats collect during that
         # overlap, then the DRQ append beside the state save. Threads
-        # start on first use and exit with the engine or the interpreter.
+        # start on first use; close() joins them.
         self._pool = ThreadPoolExecutor(2, thread_name_prefix="ksc-engine")
         # Deferred discard sinks (config.deferred_discard_sinks): single
         # worker so appends to one queue path keep batch order; futures
         # are drained at the next process_batch (failures surface there)
-        # or via drain_discard_sinks().
+        # or via drain_discard_sinks() / close().
         self._deferred_sink_pool = ThreadPoolExecutor(
             1, thread_name_prefix="ksc-deferred-sink"
         )
@@ -799,6 +802,16 @@ class Engine:
         for f in pending:
             f.result()
 
+    def close(self) -> None:
+        """Drain the deferred sinks, then stop the engine's thread pools
+        (joining their threads). Safe to call twice; the engine runs no
+        batch afterwards."""
+        try:
+            self.drain_discard_sinks()
+        finally:
+            self._pool.shutdown()
+            self._deferred_sink_pool.shutdown()
+
     def _mark(self, label: str) -> None:
         """Close the section that began at the previous mark: a handful
         of perf_counter calls per batch, exposed as last_section_times."""
@@ -894,14 +907,15 @@ class Engine:
         # would fuse onto that single task. Fan the raw records out first;
         # the records are small (the shuffle moves the undecoded strings
         # once) and a source that already delivers wide input skips this.
-        # fan=8 beats defaultParallelism here (A/B r5: steady ingest 0.36 s
-        # at 8 tasks vs 0.46 s at 32 on 5k-row micro-batches — per-task
-        # scheduling beats the extra width at this size; a big batch from a
-        # checkpointed source already arrives wide and skips this branch).
+        # Fan out to the task slots, no wider: a Python task waits 65-160
+        # ms from launch to its first row even on a reused worker, so
+        # every wave past the first pays that again (12k-record batches
+        # on 4 slots: the ingest stage went from 8 tasks and 1.6-1.9
+        # core-s to 4 tasks and 1.1 core-s).
         width = int(self.spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        fan = min(8, width)
-        if records.rdd.getNumPartitions() < fan:
-            records = records.repartition(fan)
+        slots = min(self.spark.sparkContext.defaultParallelism, width)
+        if records.rdd.getNumPartitions() < slots:
+            records = records.repartition(slots)
         self._mark("fan_probe")
         ing = ingest(records, cfg, col_cache=self._ingest_col_cache)
         # Materialize the UNSPLIT ingest output ONCE, before anything
@@ -971,7 +985,7 @@ class Engine:
             F.sum(F.when(unusable, 1).otherwise(0)).alias("n_unus"),
         )
         self._mark("phase1_plan")
-        return _Ingested(msgs, tagged.where(unusable), stats, width)
+        return _Ingested(msgs, tagged.where(unusable), stats, width, slots)
 
     def _reusable_state(self) -> Optional[_SavedState]:
         """The prior state known before the stats job, with the default
@@ -999,7 +1013,7 @@ class Engine:
         matches on identity, so rows from uninvolved shards never match);
         task sizing seeds from the last batch's count (steady
         micro-batches are same-sized; a mis-estimate only re-sizes tasks,
-        never changes results), or from full session width before the
+        never changes results), or from full cluster width before the
         first batch. ``_revive_and_exec`` keeps the plan only if the slice
         covers the batch's shards.
 
@@ -1018,8 +1032,8 @@ class Engine:
         ):
             rows_fut = self._pool.submit(ing.stats.collect)
             est = self._last_n_records
-            if est is None:  # first batch: full session width
-                est = ing.width * 500
+            if est is None:  # first batch: full cluster width
+                est = ing.slots * 500
             speculative = self._build_exec(ing, saved.revive_slice, est, deadline)
             rows = rows_fut.result()
         else:
@@ -1126,21 +1140,18 @@ class Engine:
             if maybe is not None:
                 revived = maybe
         self._mark("p2_revive_build")
-        # Size the chain shuffle to the batch: 32 near-empty
-        # partitions × two Python stages is pure scheduling overhead
-        # at micro-batch sizes; a big batch still fans out to the
-        # session's full shuffle width (so this is a no-op at cluster
-        # scale). The exec stage is the batch's dominant CPU
-        # (task-tree parse + user fns + finalise per message,
-        # ~0.3-0.5 ms/row), so ~500 rows/task keeps the stage wide
-        # while each task's ~150-250 ms of row work still dwarfs its
-        # warm-worker Arrow/scheduling cost. A/B-measured r5 (VERDICT
-        # r4 #7 asked): batch/defaultParallelism sizing (32 ×
-        # ~156-row tasks for a 5k batch) ran the steady-state exec at
-        # 1.17 s vs 0.80 s for 11 × 500-row tasks — per-task
-        # Python/Arrow overhead beats the extra width below ~500
-        # rows/task, so the floor stays.
-        n_parts = max(4, min(ing.width, (n_rec_est // 500) + 1))
+        # Size the chain shuffle to the task slots and the batch: one
+        # task per ~500 rows, never more tasks than slots. A Python task
+        # pays a fixed 65-160 ms from launch to its first row, so a
+        # stage wider than the slots pays it once per extra wave; on 4
+        # slots a 12k-record batch at 500 rows/task ran 25 exec tasks in
+        # 6-7 waves. Capped at the slots, the exec+save stage went from
+        # 33 tasks and 4.3 core-s to 12 tasks and 1.3 core-s per pass
+        # (exec width 4, 8 and 25: ~1.5, 1.7 and 2.5 s per pass). The
+        # rows/500 bound keeps a tiny batch on a wide cluster to a few
+        # tasks. The processAll finalise and the next batch's revive
+        # slice inherit this partitioning.
+        n_parts = max(1, min(ing.slots, -(-n_rec_est // 500)))
         if cfg.sequencing_required:
             # co-locate each chain, order within partition by THE
             # shared comparator (sequencing.chain_order_columns — the

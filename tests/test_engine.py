@@ -36,7 +36,7 @@ from kinesis_stream_consumer_spark.streaming import (
     TaskDef,
 )
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 # --- helpers -----------------------------------------------------------------
@@ -1106,6 +1106,71 @@ def test_deferred_discard_sink_failure_surfaces_on_next_batch(
     monkeypatch.undo()
     with pytest.raises(RuntimeError, match="sink down"):
         eng.process_batch(records_df(spark, n=5), 1)
+
+
+def test_close_drains_sinks_and_joins_pool_threads(spark, tmp_path):
+    """Engine.close(): the deferred appends land, then both engine pools
+    stop — no thread of theirs outlives the call, and a second close is
+    a no-op."""
+    import threading
+
+    from kinesis_stream_consumer_spark.streaming.tasks import (
+        TaskRejectedError,
+    )
+
+    def rejector(message, task):
+        raise TaskRejectedError("all rejected")
+
+    def pool_threads():
+        return {
+            t
+            for t in threading.enumerate()
+            if t.name.startswith(("ksc-engine_", "ksc-deferred-sink_"))
+        }
+
+    before = pool_threads()
+    eng = make_engine(
+        spark,
+        tmp_path,
+        one_defs=[TaskDef("rejector", rejector)],
+        deferred_discard_sinks=True,
+    )
+    res = eng.process_batch(records_df(spark, n=10, bad=2), 0)
+    assert res.rejected_to_dmq == 10 and res.unusable == 2
+    started = pool_threads() - before
+    # the stats collect ran on the engine pool, the appends on the
+    # deferred-sink pool
+    assert {t.name.split("_")[0] for t in started} == {
+        "ksc-engine",
+        "ksc-deferred-sink",
+    }
+    eng.close()
+    assert not any(t.is_alive() for t in started)
+    assert spark.read.parquet(str(tmp_path / "dmq")).count() == 10
+    assert spark.read.parquet(str(tmp_path / "drq")).count() == 2
+    eng.close()
+
+
+def test_exec_width_is_the_task_slots(spark, tmp_path):
+    """A batch of more than 500 rows per task slot runs its exec stage at
+    exactly the slots, defaultParallelism capped by the shuffle width: a
+    Python stage wider than the slots pays its per-task launch cost again
+    for every extra wave. Holds for the first batch's estimate and for
+    the steady-state one (the previous batch's count)."""
+    from kinesis_stream_consumer_spark.plans.queries import _t
+
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    slots = min(width, spark.sparkContext.defaultParallelism)
+    n = 500 * (slots + 1)
+    assert n <= 10_000, "sf0.01 holds 10k events"
+    recs = events_as_kinesis_records(
+        _t(spark, SF_CORRECT, "events").where(F.col("event_id") < n)
+    )
+    eng = make_engine(spark, tmp_path, one_defs=[TaskDef("noop", noop)])
+    for batch_id in (0, 1):
+        res = eng.process_batch(recs, batch_id)
+        assert res.messages == n and res.fully_finalised == n
+        assert res.exec_partitions == slots, (res.exec_partitions, slots)
 
 
 def test_sample_sketch_register_bounded_and_compaction_immortal(spark, tmp_path):

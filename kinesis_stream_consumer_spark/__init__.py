@@ -27,10 +27,9 @@ library in the same process that happens to use a ``ksc-`` prefix would be
 rerooted too. Migration IN PROGRESS (VERDICT r12 #6): the explicit helper
 ``kinesis_stream_consumer_spark.util.mkdtemp`` exists and is the rule for
 NEW code; ``session.py`` migrated r13. Remaining stdlib call sites: 16,
-all inside certified hash-held query blocks (stable.py x4,
-stream_parity.py x5, relational.py x4, engine_queries.py x1, r12.py x1,
-r10.py x1) — each migrates when its block next re-enters the correctness
-window for another reason.
+all inside certified hash-held query blocks (relational.py x6,
+stream_parity.py x5, engine_queries.py x5) — each migrates when its block
+next re-enters the correctness window for another reason.
 """
 
 import atexit as _atexit

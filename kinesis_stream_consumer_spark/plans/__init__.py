@@ -1,3 +1,3 @@
-from kinesis_stream_consumer_spark.plans.queries import QUERIES, QuerySpec
+from kinesis_stream_consumer_spark.plans.queries import DRIVER_WINDOW, QUERIES, QuerySpec
 
-__all__ = ["QUERIES", "QuerySpec"]
+__all__ = ["DRIVER_WINDOW", "QUERIES", "QuerySpec"]

@@ -170,3 +170,409 @@ def engine_topk_from_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("shardOrEventID", "rnk")
     )
+
+
+@register(
+    "engine_hll_distinct_sketch",
+    f"""
+    WITH src AS (
+      SELECT 'S|shardId-' || lpad(CAST(CAST(user_id % 4 AS INTEGER) AS VARCHAR), 12, '0') AS shard,
+             'id1:' || CAST(event_id AS VARCHAR) AS ident
+      FROM events WHERE event_id < 3000
+    ),
+    {SK.hll_oracle_cte("src", "shard", "ident").lstrip()}
+    SELECT g AS shardOrEventID, CAST(hll_estimate AS BIGINT) AS distinct_estimate
+    FROM hll_est ORDER BY 1
+    """,
+    doc="Engine-native per-shard HLL distinct-message sketch "
+    "(EngineConfig.track_distinct_sketch): the engine maintains one "
+    "register row per (consumer, shard, md5 bucket) in the state table, "
+    "max-merged at every save. This query runs the REAL engine over 3 "
+    "micro-batches (one of them processed twice — an at-least-once "
+    "replay), reads the registers back from the state table, and the "
+    "estimate must equal the oracle's SINGLE-PASS sketch over all events: "
+    "register max-merge composes across micro-batches and is idempotent "
+    "under replay, which is why a sketch (and not an additive counter) is "
+    "the only duplicate-rate signal that stays exact at at-least-once "
+    "delivery. The reference's per-batch DynamoDB item (persisting.js) "
+    "can never accumulate this. At 100 TB the state carries m registers "
+    "per shard regardless of message volume.",
+)
+def engine_hll_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
+
+    from kinesis_stream_consumer_spark.config import EngineConfig
+    from kinesis_stream_consumer_spark.sources import events_as_kinesis_records
+    from kinesis_stream_consumer_spark.streaming import Engine, TaskDef
+    from kinesis_stream_consumer_spark.streaming.tasks import TaskRejectedError
+
+    ev = _t(spark, sf_dir, "events").where(F.col("event_id") < 3000)
+    batches = [
+        events_as_kinesis_records(
+            ev.where(F.col("event_id") % 3 == i)
+        ).localCheckpoint(eager=True)
+        for i in range(3)
+    ]
+
+    def validate(message, task):
+        if message["k2"] == "error":
+            raise TaskRejectedError("error events rejected")
+
+    tmp = tempfile.mkdtemp(prefix="ksc-hll-")
+    eng = Engine(
+        spark,
+        EngineConfig(
+            sequencing_per_key=True,
+            key_property_names=["k1", "k2"],
+            id_property_names=["id1"],
+            seq_no_property_names=["n1", "n2"],
+            track_distinct_sketch=True,
+        ),
+        state_path=f"{tmp}/state",
+        drq_path=f"{tmp}/drq",
+        dmq_path=f"{tmp}/dmq",
+        process_one_defs=[TaskDef("validate", validate)],
+    )
+    for i in range(3):
+        eng.process_batch(batches[i], batch_id=i)
+    # at-least-once replay: batch 1 re-delivered — max-merge must be a no-op
+    eng.process_batch(batches[1], batch_id=3)
+    regs = (
+        eng.state.read_all()
+        .where(F.col("kind") == "sketch")
+        .select(
+            F.col("shardOrEventID").alias("g"),
+            F.col("sketch_bucket").alias("bucket"),
+            F.col("sketch_r").alias("r"),
+        )
+    )
+    return (
+        SK.hll_estimate(regs)
+        .select(
+            F.col("g").alias("shardOrEventID"),
+            F.col("hll_estimate").cast("long").alias("distinct_estimate"),
+        )
+        .orderBy("shardOrEventID")
+    )
+
+
+@register(
+    "engine_cms_key_freq",
+    f"""
+    WITH src AS (
+      SELECT 'S|shardId-' || lpad(CAST(CAST(user_id % 4 AS INTEGER) AS VARCHAR), 12, '0') AS shard,
+             'k1:' || CAST(user_id AS VARCHAR) || '|k2:' || event_type AS key,
+             user_id
+      FROM events WHERE event_id < 3000
+    ),
+    {SK.cms_oracle_cte("src", "shard", "key").lstrip()},
+    probes AS (
+      SELECT DISTINCT shard AS g, key AS probe_key FROM src WHERE user_id < 12
+    ),
+    probe_idx AS (
+      SELECT g, probe_key,
+             r.r * {SK.CMS_W}
+               + CAST((md5_number_upper(CAST(r.r AS VARCHAR) || '|' || probe_key) >> 8)
+                      % {SK.CMS_W} AS BIGINT) AS idx
+      FROM probes, cms_rows r
+    ),
+    est AS (
+      SELECT p.g, p.probe_key,
+             MIN(COALESCE(c.cnt, 0)) AS cms_estimate
+      FROM probe_idx p LEFT JOIN cms_cnt c ON p.g = c.g AND p.idx = c.idx
+      GROUP BY 1, 2
+    )
+    SELECT g AS shardOrEventID, probe_key,
+           CAST(cms_estimate AS BIGINT) AS cms_estimate
+    FROM est ORDER BY 1, 2
+    """,
+    doc="Engine-native per-shard Count-Min KEY-frequency sketch "
+    "(EngineConfig.track_frequency_sketch): cumulative counters ride the "
+    "state table (kind='cms') with this-batch deltas keyed by batch_id "
+    "(kind='cms_delta'). This query runs the REAL engine over 3 "
+    "micro-batches, replays one under the SAME batch_id (the F1 "
+    "commit-or-replay path) — the engine subtracts its own saved delta so "
+    "the addition stays single-counted — then point-estimates the "
+    "per-shard frequency of every key of users 0-11 from the counters. "
+    "Must equal the oracle's SINGLE-PASS sketch over all the events: "
+    "counter addition is linear across micro-batches, and the "
+    "batch_id-keyed delta makes it exact under checkpoint replay (the "
+    "additive twin of the HLL max-merge; re-delivery under a NEW batch_id "
+    "overcounts by exactly that batch — pinned in test_engine_cms). At "
+    "100 TB the state carries d*w counters per shard regardless of volume.",
+)
+def engine_cms_key_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
+
+    from kinesis_stream_consumer_spark.config import EngineConfig
+    from kinesis_stream_consumer_spark.sources import events_as_kinesis_records
+    from kinesis_stream_consumer_spark.streaming import Engine, TaskDef
+
+    ev = _t(spark, sf_dir, "events").where(F.col("event_id") < 3000)
+    batches = [
+        events_as_kinesis_records(
+            ev.where(F.col("event_id") % 3 == i)
+        ).localCheckpoint(eager=True)
+        for i in range(3)
+    ]
+
+    def noop(message, task):
+        return None
+
+    tmp = tempfile.mkdtemp(prefix="ksc-cms-")
+    eng = Engine(
+        spark,
+        EngineConfig(
+            sequencing_per_key=True,
+            key_property_names=["k1", "k2"],
+            id_property_names=["id1"],
+            seq_no_property_names=["n1", "n2"],
+            track_frequency_sketch=True,
+        ),
+        state_path=f"{tmp}/state",
+        drq_path=f"{tmp}/drq",
+        dmq_path=f"{tmp}/dmq",
+        process_one_defs=[TaskDef("noop", noop)],
+    )
+    for i in range(3):
+        eng.process_batch(batches[i], batch_id=i)
+    # F1 checkpoint replay: batch 2 re-runs under the SAME batch_id — the
+    # engine subtracts the saved cms_delta, so this must be a no-op
+    eng.process_batch(batches[2], batch_id=2)
+    counters = (
+        eng.state.read_all()
+        .where(F.col("kind") == "cms")
+        .select(
+            F.col("shardOrEventID").alias("g"),
+            F.col("sketch_bucket").alias("idx"),
+            F.col("sketch_r").alias("cnt"),
+        )
+    )
+    probes = (
+        ev.where(F.col("user_id") < 12)
+        .select(
+            F.concat(
+                F.lit("S|shardId-"),
+                F.lpad((F.col("user_id") % 4).cast("string"), 12, "0"),
+            ).alias("g"),
+            F.concat(
+                F.lit("k1:"),
+                F.col("user_id").cast("string"),
+                F.lit("|k2:"),
+                F.col("event_type"),
+            ).alias("probe_key"),
+        )
+        .distinct()
+    )
+    return (
+        SK.cms_estimate(counters, probes)
+        .select(
+            F.col("g").alias("shardOrEventID"),
+            "probe_key",
+            F.col("cms_estimate").cast("long").alias("cms_estimate"),
+        )
+        .orderBy("shardOrEventID", "probe_key")
+    )
+
+
+@register(
+    "engine_qsketch_seqno_spread",
+    f"""
+    WITH src AS (
+      SELECT 'S|shardId-' || lpad(CAST(CAST(user_id % 4 AS INTEGER) AS VARCHAR), 12, '0') AS gg,
+             event_id AS v
+      FROM events WHERE event_id < 3000
+    ),
+    {{QSK_CTE}},
+    qsk_cum AS (
+      SELECT g, qid,
+             SUM(cnt) OVER (PARTITION BY g ORDER BY qid) AS cum,
+             SUM(cnt) OVER (PARTITION BY g) AS n
+      FROM qsk_cnt
+    ),
+    qsk_pick AS (
+      SELECT g, MAX(n) AS n,
+             MIN(CASE WHEN cum >= (1 * n + 1) // 2 THEN qid END) AS q_p50,
+             MIN(CASE WHEN cum >= (9 * n + 9) // 10 THEN qid END) AS q_p90,
+             MIN(CASE WHEN cum >= (99 * n + 99) // 100 THEN qid END) AS q_p99
+      FROM qsk_cum GROUP BY g
+    )
+    SELECT g AS shardOrEventID, CAST(n AS BIGINT) AS n,
+           {{P50}} AS p50_seq, {{P90}} AS p90_seq, {{P99}} AS p99_seq
+    FROM qsk_pick ORDER BY 1
+    """.replace(
+        "{QSK_CTE}",
+        SK.qsketch_oracle_cte("src", "gg", "v").lstrip().rstrip(),
+    )
+    .replace("{P50}", SK.qsk_lower_sql("q_p50"))
+    .replace("{P90}", SK.qsk_lower_sql("q_p90"))
+    .replace("{P99}", SK.qsk_lower_sql("q_p99")),
+    doc="Engine-native per-shard quantile sketch "
+    "(EngineConfig.track_quantile_sketch): log-linear registers over the "
+    "numeric tail of each message's Kinesis sequence number ride the "
+    "state table (kind='qsk' cumulative + kind='qsk_delta' keyed by "
+    "batch_id) — the per-shard seqNo-spread / hot-range distribution "
+    "signal, completing the engine sketch family: HLL (idempotent "
+    "max-merge), CMS (additive frequency) and now distribution, the last "
+    "two sharing one replay-safe additive-register contract "
+    "(same-batch_id replay subtracts the saved delta; new-batch_id "
+    "re-delivery bound pinned in test_engine_qsketch). This query runs "
+    "the REAL engine over 3 micro-batches plus a same-batch_id replay, "
+    "recovers p50/p90/p99 per shard from the engine-held registers, and "
+    "must equal the oracle's single-pass sketch over all the events. At "
+    "100 TB the state carries ≤63·K+1 registers per shard regardless of "
+    "volume.",
+)
+def engine_qsketch_seqno_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
+
+    from kinesis_stream_consumer_spark.config import EngineConfig
+    from kinesis_stream_consumer_spark.sources import events_as_kinesis_records
+    from kinesis_stream_consumer_spark.streaming import Engine, TaskDef
+
+    ev = _t(spark, sf_dir, "events").where(F.col("event_id") < 3000)
+    batches = [
+        events_as_kinesis_records(
+            ev.where(F.col("event_id") % 3 == i)
+        ).localCheckpoint(eager=True)
+        for i in range(3)
+    ]
+
+    def noop(message, task):
+        return None
+
+    tmp = tempfile.mkdtemp(prefix="ksc-qsk-")
+    eng = Engine(
+        spark,
+        EngineConfig(
+            sequencing_per_key=True,
+            key_property_names=["k1", "k2"],
+            id_property_names=["id1"],
+            seq_no_property_names=["n1", "n2"],
+            track_quantile_sketch=True,
+        ),
+        state_path=f"{tmp}/state",
+        drq_path=f"{tmp}/drq",
+        dmq_path=f"{tmp}/dmq",
+        process_one_defs=[TaskDef("noop", noop)],
+    )
+    for i in range(3):
+        eng.process_batch(batches[i], batch_id=i)
+    # F1 checkpoint replay under the same batch_id — must be a no-op
+    eng.process_batch(batches[2], batch_id=2)
+    regs = (
+        eng.state.read_all()
+        .where(F.col("kind") == "qsk")
+        .select(
+            F.col("shardOrEventID").alias("g"),
+            F.col("sketch_bucket").alias("qid"),
+            F.col("sketch_r").alias("cnt"),
+        )
+    )
+    from kinesis_stream_consumer_spark.operators.sketches import (
+        qsketch_quantiles,
+    )
+
+    return (
+        qsketch_quantiles(regs)
+        .select(
+            F.col("g").alias("shardOrEventID"),
+            F.col("n").cast("long").alias("n"),
+            F.col("p50").alias("p50_seq"),
+            F.col("p90").alias("p90_seq"),
+            F.col("p99").alias("p99_seq"),
+        )
+        .orderBy("shardOrEventID")
+    )
+
+
+_RSV_N1 = 9  # register rows per shard = sample_sketch_n + 1 (threshold row)
+
+
+@register(
+    "engine_reservoir_sample",
+    f"""
+    WITH src AS (
+      SELECT DISTINCT
+             'S|shardId-' || lpad(CAST(CAST(user_id % 4 AS INTEGER) AS VARCHAR), 12, '0') AS shard,
+             'id1:' || CAST(event_id AS VARCHAR) AS ident
+      FROM events WHERE event_id < 3000
+    ),
+    pri AS (
+      SELECT shard, ident,
+             CAST((md5_number_upper(ident) >> 8) AS BIGINT) AS pri
+      FROM src
+    ),
+    rk AS (
+      SELECT shard, ident, pri,
+             ROW_NUMBER() OVER (PARTITION BY shard ORDER BY pri, ident) AS rank
+      FROM pri
+    )
+    SELECT shard AS shardOrEventID, CAST(rank AS BIGINT) AS rank,
+           ident AS identity, pri
+    FROM rk WHERE rank <= {_RSV_N1}
+    ORDER BY 1, 2
+    """,
+    doc="Engine-native per-shard uniform message sample "
+    "(EngineConfig.track_sample_sketch) — the SAMPLING member completing "
+    "the engine sketch family (cardinality / frequency / distribution / "
+    "sampling): the state table holds the n+1 smallest md5-priority "
+    "message identities per shard (kind='rsv'), MIN-merged at every "
+    "save. This query runs the REAL engine over 3 micro-batches plus an "
+    "at-least-once re-delivery of one batch, reads the register back, "
+    "and it must equal the oracle's SINGLE-PASS priority sample over all "
+    "events: the min-merge is idempotent, so replay leaves the sample "
+    "bit-identical — the property that lets a 100 TB stream keep live "
+    "'show me example messages from this shard' state in n+1 rows with "
+    "zero replay bookkeeping (contrast the CMS delta machinery).",
+)
+def engine_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
+
+    from kinesis_stream_consumer_spark.config import EngineConfig
+    from kinesis_stream_consumer_spark.sources import events_as_kinesis_records
+    from kinesis_stream_consumer_spark.streaming import Engine, TaskDef
+
+    ev = _t(spark, sf_dir, "events").where(F.col("event_id") < 3000)
+    batches = [
+        events_as_kinesis_records(
+            ev.where(F.col("event_id") % 3 == i)
+        ).localCheckpoint(eager=True)
+        for i in range(3)
+    ]
+
+    def noop(message, task):
+        return None
+
+    tmp = tempfile.mkdtemp(prefix="ksc-rsv-")
+    eng = Engine(
+        spark,
+        EngineConfig(
+            sequencing_per_key=True,
+            key_property_names=["k1", "k2"],
+            id_property_names=["id1"],
+            seq_no_property_names=["n1", "n2"],
+            track_sample_sketch=True,
+            sample_sketch_n=_RSV_N1 - 1,
+        ),
+        state_path=f"{tmp}/state",
+        drq_path=f"{tmp}/drq",
+        dmq_path=f"{tmp}/dmq",
+        process_one_defs=[TaskDef("noop", noop)],
+    )
+    for i in range(3):
+        eng.process_batch(batches[i], batch_id=i)
+    # at-least-once re-delivery under a NEW batch_id: the min-merge must
+    # be a no-op (the additive sketches can't promise this; the sample can)
+    eng.process_batch(batches[1], batch_id=3)
+    return (
+        eng.state.read_all()
+        .where(F.col("kind") == "rsv")
+        .select(
+            "shardOrEventID",
+            F.col("sketch_bucket").alias("rank"),
+            F.expr("substring(identity, 5)").alias("identity"),
+            F.col("sketch_r").alias("pri"),
+        )
+        .orderBy("shardOrEventID", "rank")
+    )

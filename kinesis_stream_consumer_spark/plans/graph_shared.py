@@ -1,9 +1,7 @@
 """Shared co-purchase graph construction (edge frame + oracle CTE).
 
-Lives outside plans/relational.py so modules that register BEFORE
-relational in plans/queries.py (plans/r10.py) can import it at module
-level without triggering relational's registrations first — import order
-IS driver-window order.
+A helper-only module: plans/relational.py and plans/graph.py both build
+on it, and neither has to import the other's queries to get it.
 """
 
 from __future__ import annotations

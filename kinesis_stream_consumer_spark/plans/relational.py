@@ -748,9 +748,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # _LPA_ROUNDS / _lpa_round_sql live in plans/graph_shared.py (helper-only
-# module) so plans modules that register BEFORE this one can reuse the
-# unrolled-LPA oracle fragment without tripping the import-order trap; the
-# rendered SQL is byte-identical, so certified hashes are unchanged.
+# module) so plans/graph.py can reuse the unrolled-LPA oracle fragment
+# without importing this module's queries.
 from kinesis_stream_consumer_spark.plans.graph_shared import (  # noqa: E402
     _LPA_ROUNDS,
     _lpa_round_sql,
@@ -5540,3 +5539,1723 @@ def agg_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("r_name")
     )
+
+
+# --- Scan-aggregate with full predicate pushdown (TPC-H q6 analogue) --------
+
+@register(
+    "q6_forecast_revenue",
+    """
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_items,
+           CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)
+                    * CAST(FLOOR(l_discount * 10000 + 0.5) AS BIGINT))
+                AS BIGINT) AS revenue_micro
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+      AND l_shipdate <  TIMESTAMP '1997-01-01'
+      AND l_quantity < 24
+      AND CAST(FLOOR(l_discount * 10000 + 0.5) AS BIGINT) BETWEEN 400 AND 600
+    """,
+    doc="Forecast-revenue scan-aggregate (TPC-H q6 analogue): the pure "
+    "predicate-pushdown showcase — date range, quantity and discount "
+    "filters all reach the parquet scan (PushedFilters), no join, one "
+    "partial/final aggregate pair, answer is a single row. Money rides as "
+    "integer cents x discount basis points (micro-dollar units), so the "
+    "sum is order-independent and hash-exact cross-engine — the same "
+    "integer-money discipline as the k-means quantization.",
+)
+def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem")
+    pc = F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long")
+    db = F.floor(F.col("l_discount") * 10000 + 0.5).cast("long")
+    return (
+        li.where(
+            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
+            & (F.col("l_quantity") < 24)
+        )
+        .select(pc.alias("pc"), db.alias("db"))
+        .where(F.col("db").between(400, 600))
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum(F.col("pc") * F.col("db")).cast("long").alias("revenue_micro"),
+        )
+    )
+
+
+# --- Multi-way join with broadcast dims ------------------------------------
+
+@register(
+    "q5_region_revenue",
+    """
+    SELECT n_name,
+           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    FROM customer
+    JOIN orders   ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+    JOIN nation   ON s_nationkey = n_nationkey
+    JOIN region   ON n_regionkey = r_regionkey
+    WHERE r_name = 'ASIA'
+      AND o_orderdate >= TIMESTAMP '1994-01-01 00:00:00'
+    GROUP BY n_name
+    ORDER BY revenue DESC, n_name
+    """,
+    doc="TPC-H Q5-style 6-way join. region/nation/supplier/customer broadcast; "
+    "the lineitem⋈orders shuffle join is the only large exchange.",
+)
+def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cu, od, li = (_t(spark, sf_dir, t) for t in ("customer", "orders", "lineitem"))
+    su, na, re = (_t(spark, sf_dir, t) for t in ("supplier", "nation", "region"))
+    # Push the region restriction to the FRONT: Catalyst cannot infer that
+    # c_nationkey is bounded to ASIA (the constraint only arrives through
+    # the supplier equi-chain at the end), so join region⋈nation first and
+    # prune customers/suppliers before the big fact joins — cuts the
+    # orders and lineitem join volumes ~|ASIA|/|world| (5×) ahead of the
+    # largest shuffle. Same rows out; the plan is the one you'd want at
+    # 100 TB.
+    na_asia = na.join(
+        F.broadcast(re.where(F.col("r_name") == "ASIA")),
+        F.col("n_regionkey") == F.col("r_regionkey"),
+    ).select("n_nationkey", "n_name")
+    cu_asia = cu.join(
+        F.broadcast(na_asia.select("n_nationkey")),
+        F.col("c_nationkey") == F.col("n_nationkey"),
+        "left_semi",
+    )
+    return (
+        cu_asia.join(
+            od.where(F.col("o_orderdate") >= F.lit("1994-01-01").cast("timestamp")),
+            F.col("c_custkey") == F.col("o_custkey"),
+        )
+        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
+        # supplier is row-scaled (sf x 10k): stats-gated hint (VERDICT r4
+        # #1 — borderline at 100x, same fix as customer)
+        .join(
+            _bcast_if_small(su, sf_dir, "supplier"),
+            (F.col("l_suppkey") == F.col("s_suppkey"))
+            & (F.col("c_nationkey") == F.col("s_nationkey")),
+        )
+        .join(F.broadcast(na_asia), F.col("s_nationkey") == F.col("n_nationkey"))
+        .groupBy("n_name")
+        .agg(
+            F.round(
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+            ).alias("revenue")
+        )
+        .orderBy(F.col("revenue").desc(), "n_name")
+    )
+
+
+# --- Join + group + top-k (sort/limit) -------------------------------------
+
+@register(
+    "q3_top_orders",
+    """
+    SELECT o_orderkey, o_orderdate, o_orderpriority,
+           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    FROM customer
+    JOIN orders   ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    WHERE c_mktsegment = 'BUILDING'
+    GROUP BY o_orderkey, o_orderdate, o_orderpriority
+    ORDER BY revenue DESC, o_orderkey
+    LIMIT 10
+    """,
+    doc="TPC-H Q3-style: selective dim filter → join → agg → global top-k. "
+    "TakeOrderedAndProject avoids a full sort.",
+)
+def q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cu = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
+    od = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem")
+    return (
+        # the BUILDING slice is ~1/5 of row-scaled customer — gated on the
+        # parent table's stats (slice selectivity is unknown at plan time)
+        _bcast_if_small(cu, sf_dir, "customer")
+        .join(od, F.col("c_custkey") == F.col("o_custkey"))
+        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
+        .agg(
+            F.round(
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+            ).alias("revenue")
+        )
+        .orderBy(F.col("revenue").desc(), "o_orderkey")
+        .limit(10)
+    )
+
+
+@register(
+    "q7_nation_trade_volume",
+    """
+    SELECT supp_nation, cust_nation, l_year,
+           CAST(SUM(rev) AS BIGINT) AS revenue_micro
+    FROM (
+      SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+             CAST(EXTRACT(year FROM l.l_shipdate) AS BIGINT) AS l_year,
+             CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT)
+             * (10000 - CAST(FLOOR(l.l_discount * 10000 + 0.5) AS BIGINT)) AS rev
+      FROM lineitem l
+      JOIN supplier s ON s.s_suppkey = l.l_suppkey
+      JOIN orders o   ON o.o_orderkey = l.l_orderkey
+      JOIN customer c ON c.c_custkey = o.o_custkey
+      JOIN nation n1  ON n1.n_nationkey = s.s_nationkey
+      JOIN nation n2  ON n2.n_nationkey = c.c_nationkey
+      WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+          OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
+        AND l.l_shipdate >= TIMESTAMP '1996-01-01'
+        AND l.l_shipdate <  TIMESTAMP '1998-01-01'
+    )
+    GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
+    """,
+    doc="Bilateral trade volume (TPC-H q7 analogue): revenue shipped "
+    "between two nations in either direction, by year. The two-row "
+    "nation slices broadcast and PRUNE supplier/customer before the "
+    "fact joins (Catalyst can't infer the nation restriction through "
+    "the equi-chain, so the filters sit on the dimension scans "
+    "explicitly — the q5 lesson); supplier/customer hints are "
+    "stats-gated; the disjunctive nation-pair predicate evaluates on "
+    "the joined slim rows. Money in exact integer micro-dollars.",
+)
+def q7_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem")
+    su = _t(spark, sf_dir, "supplier")
+    od = _t(spark, sf_dir, "orders")
+    cu = _t(spark, sf_dir, "customer")
+    na = _t(spark, sf_dir, "nation")
+    pair = na.where(F.col("n_name").isin("NATION_1", "NATION_2"))
+    rev = (
+        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long")
+        * (10000 - F.floor(F.col("l_discount") * 10000 + 0.5).cast("long"))
+    )
+    n1 = pair.select(
+        F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
+    )
+    n2 = pair.select(
+        F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
+    )
+    return (
+        li.where(
+            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
+        )
+        .join(
+            _bcast_if_small(
+                su.join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key")),
+                sf_dir,
+                "supplier",
+            ),
+            F.col("s_suppkey") == F.col("l_suppkey"),
+        )
+        .join(od, F.col("o_orderkey") == F.col("l_orderkey"))
+        .join(
+            _bcast_if_small(
+                cu.join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key")),
+                sf_dir,
+                "customer",
+            ),
+            F.col("c_custkey") == F.col("o_custkey"),
+        )
+        .where(
+            ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
+            | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
+        )
+        .groupBy(
+            "supp_nation",
+            "cust_nation",
+            F.year("l_shipdate").cast("long").alias("l_year"),
+        )
+        .agg(F.sum(rev).cast("long").alias("revenue_micro"))
+        .orderBy("supp_nation", "cust_nation", "l_year")
+    )
+
+
+@register(
+    "q9_product_profit",
+    """
+    SELECT nation, o_year, CAST(SUM(amount) AS BIGINT) AS profit_micro
+    FROM (
+      SELECT n.n_name AS nation,
+             CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
+             CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT)
+             * (10000 - CAST(FLOOR(l.l_discount * 10000 + 0.5) AS BIGINT))
+             - CAST(FLOOR(p.p_retailprice * 100 + 0.5) AS BIGINT)
+               * CAST(l.l_quantity AS BIGINT) * 1000 AS amount
+      FROM lineitem l
+      JOIN part p     ON p.p_partkey = l.l_partkey
+      JOIN supplier s ON s.s_suppkey = l.l_suppkey
+      JOIN orders o   ON o.o_orderkey = l.l_orderkey
+      JOIN nation n   ON n.n_nationkey = s.s_nationkey
+      WHERE p.p_name LIKE '%red%'
+    )
+    GROUP BY 1, 2 ORDER BY nation, o_year DESC
+    """,
+    doc="Product-line profit by supplier nation and order year (TPC-H q9 "
+    "analogue; the testdata ships no partsupp table, so supply cost is a "
+    "deterministic 10%%-of-retail proxy: retail cents x quantity x 1000 "
+    "micro). The '%%red%%' part slice drives the plan: the filtered part "
+    "dim is stats-gate-broadcast into the fact scan FIRST (cutting "
+    "lineitem before the orders join), supplier->nation resolves via "
+    "broadcast, and profit accumulates in exact signed integer "
+    "micro-dollars (order-independent, hash-stable).",
+)
+def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem")
+    pa = _t(spark, sf_dir, "part").where(F.col("p_name").like("%red%"))
+    su = _t(spark, sf_dir, "supplier")
+    od = _t(spark, sf_dir, "orders")
+    na = _t(spark, sf_dir, "nation")
+    amount = (
+        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long")
+        * (10000 - F.floor(F.col("l_discount") * 10000 + 0.5).cast("long"))
+        - F.floor(F.col("p_retailprice") * 100 + 0.5).cast("long")
+        * F.col("l_quantity").cast("long")
+        * 1000
+    )
+    return (
+        li.join(_bcast_if_small(pa, sf_dir, "part"), F.col("p_partkey") == F.col("l_partkey"))
+        .join(
+            _bcast_if_small(su, sf_dir, "supplier"),
+            F.col("s_suppkey") == F.col("l_suppkey"),
+        )
+        .join(od, F.col("o_orderkey") == F.col("l_orderkey"))
+        .join(F.broadcast(na), F.col("n_nationkey") == F.col("s_nationkey"))
+        .groupBy(
+            F.col("n_name").alias("nation"),
+            F.year("o_orderdate").cast("long").alias("o_year"),
+        )
+        .agg(F.sum(amount).cast("long").alias("profit_micro"))
+        .orderBy("nation", F.col("o_year").desc())
+    )
+
+
+@register(
+    "q19_disjunctive_revenue",
+    """
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_items,
+           CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)
+                    * (10000 - CAST(FLOOR(l_discount * 10000 + 0.5) AS BIGINT)))
+                AS BIGINT) AS revenue_micro
+    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
+           AND l.l_quantity BETWEEN 1 AND 11)
+       OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 10
+           AND l.l_quantity BETWEEN 10 AND 20)
+       OR (p.p_brand = 'Brand#34' AND p.p_size BETWEEN 1 AND 15
+           AND l.l_quantity BETWEEN 20 AND 30)
+    """,
+    doc="Disjunctive-predicate revenue (TPC-H q19 analogue): an "
+    "OR-of-ANDs mixing dimension (brand, size) and fact (quantity) "
+    "predicates — the optimizer stress case. Catalyst splits the "
+    "disjunction: the derivable single-side conjuncts (brand/size union "
+    "on part, quantity range union on lineitem) push to the SCANS while "
+    "the cross-table residual evaluates after the stats-gated broadcast "
+    "join — so neither table is read in full even though no single "
+    "conjunct spans the whole filter. Integer micro-dollar money.",
+)
+def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem")
+    pa = _t(spark, sf_dir, "part")
+    rev = (
+        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long")
+        * (10000 - F.floor(F.col("l_discount") * 10000 + 0.5).cast("long"))
+    )
+    cond = (
+        (
+            (F.col("p_brand") == "Brand#12")
+            & F.col("p_size").between(1, 5)
+            & F.col("l_quantity").between(1, 11)
+        )
+        | (
+            (F.col("p_brand") == "Brand#23")
+            & F.col("p_size").between(1, 10)
+            & F.col("l_quantity").between(10, 20)
+        )
+        | (
+            (F.col("p_brand") == "Brand#34")
+            & F.col("p_size").between(1, 15)
+            & F.col("l_quantity").between(20, 30)
+        )
+    )
+    return (
+        li.join(_bcast_if_small(pa, sf_dir, "part"), F.col("p_partkey") == F.col("l_partkey"))
+        .where(cond)
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum(rev).cast("long").alias("revenue_micro"),
+        )
+    )
+
+
+@register(
+    "window_distribution_ranks",
+    """
+    WITH r AS (
+      SELECT c_custkey, c_mktsegment,
+             RANK() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal) AS rnk,
+             COUNT(*) OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal
+                            RANGE BETWEEN UNBOUNDED PRECEDING
+                                      AND CURRENT ROW) AS n_le,
+             COUNT(*) OVER (PARTITION BY c_mktsegment) AS n,
+             NTILE(4) OVER (PARTITION BY c_mktsegment
+                            ORDER BY c_acctbal, c_custkey) AS quartile
+      FROM customer
+    )
+    SELECT c_custkey, c_mktsegment,
+           CAST((2 * 10000 * n_le + n) // (2 * n) AS BIGINT) AS cume_bp,
+           CAST((2 * 10000 * (rnk - 1) + (n - 1)) // (2 * (n - 1))
+                AS BIGINT) AS pct_rank_bp,
+           CAST(quartile AS BIGINT) AS quartile
+    FROM r ORDER BY c_custkey
+    """,
+    doc="Distribution-rank window functions (cume_dist / percent_rank / "
+    "ntile) per market segment — where every customer's balance sits in "
+    "its segment's distribution. Both distribution stats are rebuilt "
+    "from rank/count windows as half-up INTEGER basis points (the "
+    "built-in cume_dist/percent_rank return doubles whose low-order "
+    "bits aren't contractually identical cross-engine; the integer form "
+    "is hash-exact by construction — tie-safe too, since RANGE framing "
+    "counts peers inclusively and RANK is peer-stable). ntile orders "
+    "with a custkey tie-break for determinism. Scale shape: ONE shuffle "
+    "on segment serves all four windows (same partitioning; two sort "
+    "orders share the exchange).",
+)
+def window_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.window import Window as W
+
+    cu = _t(spark, sf_dir, "customer")
+    wv = W.partitionBy("c_mktsegment").orderBy("c_acctbal")
+    wr = wv.rangeBetween(W.unboundedPreceding, W.currentRow)
+    wall = W.partitionBy("c_mktsegment")
+    wt = W.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
+    r = cu.select(
+        "c_custkey",
+        "c_mktsegment",
+        F.rank().over(wv).alias("rnk"),
+        F.count(F.lit(1)).over(wr).alias("n_le"),
+        F.count(F.lit(1)).over(wall).alias("n"),
+        F.ntile(4).over(wt).alias("quartile"),
+    )
+    return r.select(
+        "c_custkey",
+        "c_mktsegment",
+        F.expr("(2 * 10000 * n_le + n) div (2 * n)").alias("cume_bp"),
+        F.expr(
+            "(2 * 10000 * (rnk - 1) + (n - 1)) div (2 * (n - 1))"
+        ).alias("pct_rank_bp"),
+        F.col("quartile").cast("long").alias("quartile"),
+    ).orderBy("c_custkey")
+
+
+@register(
+    "q17_small_quantity_revenue",
+    """
+    SELECT CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT)) // 7
+                AS BIGINT) AS avg_yearly_cents
+    FROM lineitem l
+    JOIN part p ON p.p_partkey = l.l_partkey
+    WHERE p.p_brand = 'Brand#2' AND p.p_size < 15
+      AND 5 * CAST(l.l_quantity AS BIGINT)
+            * (SELECT COUNT(*) FROM lineitem l2
+               WHERE l2.l_partkey = p.p_partkey)
+          < (SELECT SUM(CAST(l2.l_quantity AS BIGINT)) FROM lineitem l2
+             WHERE l2.l_partkey = p.p_partkey)
+    """,
+    doc="Small-quantity-order revenue (TPC-H q17 analogue): yearly-average "
+    "revenue lost if orders below 20% of a part's average order quantity "
+    "stopped shipping. The oracle keeps q17's correlated AVG scalar "
+    "subquery (as the exact-integer cross-multiplied form 5·qty·n < Σqty "
+    "— quantities are integral, so no float average ever materializes and "
+    "both engines compare exact longs); the Spark plan is the DECORRELATED "
+    "shape every 'x < frac·avg(...) per group' BI query compiles to: "
+    "restrict lineitem by the broadcast part filter ONCE, aggregate that "
+    "slice per partkey (partial map-side — per-part stats are unchanged "
+    "by the part filter, which is the pushdown that makes the subquery "
+    "side scale), and join the per-part (Σqty, n) back on partkey. At "
+    "100 TB the fact table is scanned once and both the aggregate and the "
+    "re-join key on l_partkey, so AQE coalesces one shuffle; no "
+    "correlated per-row probe exists physically.",
+)
+def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem")
+    pa = _t(spark, sf_dir, "part")
+    pa_f = pa.where(
+        (F.col("p_brand") == "Brand#2") & (F.col("p_size") < 15)
+    ).select("p_partkey")
+    li_p = li.join(
+        _bcast_if_small(pa_f, sf_dir, "part"),
+        F.col("p_partkey") == F.col("l_partkey"),
+    ).select(
+        "l_partkey",
+        F.col("l_quantity").cast("long").alias("qty"),
+        F.floor(F.col("l_extendedprice") * 100 + 0.5)
+        .cast("long")
+        .alias("cents"),
+    )
+    pq = li_p.groupBy(F.col("l_partkey").alias("_pk")).agg(
+        F.sum("qty").alias("_sum_qty"), F.count(F.lit(1)).alias("_n")
+    )
+    return (
+        li_p.join(pq, F.col("l_partkey") == F.col("_pk"))
+        .where(F.lit(5) * F.col("qty") * F.col("_n") < F.col("_sum_qty"))
+        .agg(
+            F.expr("CAST(SUM(cents) div 7 AS BIGINT)").alias(
+                "avg_yearly_cents"
+            )
+        )
+    )
+
+
+@register(
+    "q21_suppliers_kept_waiting",
+    """
+    WITH lo AS (
+      SELECT l.l_orderkey, l.l_suppkey,
+             CASE WHEN l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
+                  THEN 1 ELSE 0 END AS late
+      FROM lineitem l
+      JOIN orders o ON o.o_orderkey = l.l_orderkey
+      WHERE o.o_orderstatus = 'F'
+    )
+    SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
+    FROM lo l1
+    JOIN supplier s ON s.s_suppkey = l1.l_suppkey
+    JOIN nation n   ON n.n_nationkey = s.s_nationkey
+    WHERE n.n_name = 'NATION_5' AND l1.late = 1
+      AND EXISTS (
+        SELECT 1 FROM lo l2
+        WHERE l2.l_orderkey = l1.l_orderkey
+          AND l2.l_suppkey <> l1.l_suppkey
+      )
+      AND NOT EXISTS (
+        SELECT 1 FROM lo l3
+        WHERE l3.l_orderkey = l1.l_orderkey
+          AND l3.l_suppkey <> l1.l_suppkey
+          AND l3.late = 1
+      )
+    GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 100
+    """,
+    doc="Suppliers who kept orders waiting (TPC-H q21 analogue): per "
+    "NATION_5 supplier, the count of late lines on finished multi-supplier "
+    "orders where it was the ONLY late supplier. Lateness is shipment >60 "
+    "days after order date (the q4 convention — this schema carries no "
+    "commit/receipt dates). The oracle keeps q21's EXISTS + NOT-EXISTS "
+    "self-join composition; the Spark plan decorrelates BOTH into one "
+    "per-order aggregate — n_supp = distinct suppliers, n_late = distinct "
+    "late suppliers — because 'another supplier exists' ≡ n_supp > 1 and "
+    "'no other supplier was late' ≡ n_late = 1 (the probe line itself is "
+    "late). Everything keys on l_orderkey: the orders join, the per-order "
+    "aggregate, and the re-join all share one hash partitioning, so at "
+    "100 TB the fact shuffles once; the supplier/nation dims broadcast.",
+)
+def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem")
+    od = _t(spark, sf_dir, "orders")
+    su = _t(spark, sf_dir, "supplier")
+    na = _t(spark, sf_dir, "nation")
+    lo = li.join(
+        od.where(F.col("o_orderstatus") == "F").select(
+            "o_orderkey", "o_orderdate"
+        ),
+        F.col("o_orderkey") == F.col("l_orderkey"),
+    ).select(
+        "l_orderkey",
+        "l_suppkey",
+        (
+            F.col("l_shipdate")
+            > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
+        ).alias("late"),
+    )
+    po = lo.groupBy(F.col("l_orderkey").alias("_ok")).agg(
+        F.countDistinct("l_suppkey").alias("_n_supp"),
+        F.countDistinct(
+            F.when(F.col("late"), F.col("l_suppkey"))
+        ).alias("_n_late"),
+    )
+    su_n = su.join(
+        F.broadcast(na.where(F.col("n_name") == "NATION_5")),
+        F.col("n_nationkey") == F.col("s_nationkey"),
+    ).select("s_suppkey", "s_name")
+    return (
+        lo.where(F.col("late"))
+        .join(po, F.col("l_orderkey") == F.col("_ok"))
+        .where((F.col("_n_supp") > 1) & (F.col("_n_late") == 1))
+        .join(
+            _bcast_if_small(su_n, sf_dir, "supplier"),
+            F.col("s_suppkey") == F.col("l_suppkey"),
+        )
+        .groupBy("s_name")
+        .agg(F.count(F.lit(1)).cast("long").alias("numwait"))
+        .orderBy(F.col("numwait").desc(), "s_name")
+        .limit(100)
+    )
+
+
+@register(
+    "join_bloom_pruned",
+    f"""
+    WITH bld AS (
+      SELECT o_orderkey FROM orders
+      WHERE o_orderpriority = '1-URGENT'
+        AND o_orderdate >= TIMESTAMP '2001-01-01'
+    ),
+    nb AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM bld),
+    mm AS (
+      SELECT LEAST({SK.BLOOM_JOIN_M_MAX}, GREATEST({SK.BLOOM_JOIN_M_MIN},
+               (CAST(1 AS BIGINT)
+                << CAST(length(bin(GREATEST(10 * n - 1, 1))) AS INT))))
+             AS m
+      FROM nb
+    ),
+    js AS (SELECT unnest(generate_series(0, {SK.BLOOM_JOIN_K - 1})) AS j),
+    bits AS (
+      SELECT DISTINCT
+             CAST(((md5_number_upper(CAST(o_orderkey AS VARCHAR)) >> 8)
+                   >> ({SK._BLOOM_FIELD_BITS} * j)) % m AS BIGINT) AS pos
+      FROM bld CROSS JOIN js CROSS JOIN mm
+    ),
+    fact AS (
+      SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS nrows
+      FROM lineitem GROUP BY 1
+    ),
+    probe AS (
+      SELECT f.l_orderkey, f.nrows, COUNT(b.pos) AS n_set
+      FROM fact f CROSS JOIN js CROSS JOIN mm
+      LEFT JOIN bits b
+        ON b.pos = CAST(((md5_number_upper(CAST(f.l_orderkey AS VARCHAR)) >> 8)
+                         >> ({SK._BLOOM_FIELD_BITS} * j)) % m AS BIGINT)
+      GROUP BY 1, 2
+    )
+    SELECT CAST((SELECT SUM(nrows) FROM fact) AS BIGINT) AS n_fact,
+           CAST(SUM(CASE WHEN p.n_set = {SK.BLOOM_JOIN_K} THEN p.nrows
+                         ELSE 0 END) AS BIGINT) AS n_bloom_pass,
+           CAST(SUM(CASE WHEN d.o_orderkey IS NOT NULL THEN p.nrows
+                         ELSE 0 END) AS BIGINT) AS n_exact_join,
+           CAST(SUM(CASE WHEN p.n_set = {SK.BLOOM_JOIN_K}
+                          AND d.o_orderkey IS NULL THEN p.nrows
+                         ELSE 0 END) AS BIGINT) AS n_false_pass
+    FROM probe p
+    LEFT JOIN (SELECT DISTINCT o_orderkey FROM bld) d
+      ON d.o_orderkey = p.l_orderkey
+    """,
+    doc="Bloom-filter join pruning (VERDICT r6 #6) — runtime-filter "
+    "pushdown built from certified parts: the selective build side "
+    "(urgent 2001+ orders) sets K bit-field-derived positions of ONE md5 "
+    "per key (Kirsch-Mitzenmacher construction — the fact probe costs a "
+    "single digest per row) in a filter whose size m is the next power "
+    "of two ≥ 10·n_build FROM BUILD-SIDE STATS, integer-exact on both "
+    "engines (a fixed m saturates as the build side grows with scale — "
+    "the initial 1024-bit version hit 100% fill at sf0.1 and pruned "
+    "nothing). The ≤m set positions collect to the driver (the bounded "
+    "model-literal pattern) and become an InSet predicate on the fact "
+    "scan — rows the filter rejects never reach the join's exchange, "
+    "the classic 100 TB selective-join accelerator (Spark's own "
+    "runtime.bloomFilter confs inject the same BloomFilterMightContain "
+    "shape). The output makes the sketch's one error mode VISIBLE: "
+    "n_bloom_pass vs n_exact_join vs n_false_pass (false-positive "
+    "passthrough rows that shuffle and then fail the exact join; false "
+    "negatives are impossible; ~2-5% FP at these fills, nonzero at "
+    "every sf). The fact scan takes rebalance=True — the heavy per-row "
+    "hash fuses onto a scan with no exchange before it, the r4-measured "
+    "criterion. Exchange shrink asserted in test_shuffle_volume.",
+)
+def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem", rebalance=True)
+    od = _t(spark, sf_dir, "orders")
+    od_f = od.where(
+        (F.col("o_orderpriority") == "1-URGENT")
+        & (F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp"))
+    ).select("o_orderkey")
+    set_pos, m = SK.bloom_join_build(
+        od_f, F.col("o_orderkey").cast("string")
+    )
+    n_fact = li.count()  # column-pruned scan, driver scalar
+    passed = SK.bloom_join_prune(
+        li.select("l_orderkey"),
+        F.col("l_orderkey").cast("string"),
+        set_pos,
+        m,
+    )
+    return (
+        passed.join(
+            od_f, F.col("o_orderkey") == F.col("l_orderkey"), "left"
+        )
+        .agg(
+            F.count(F.lit(1)).alias("_pass"),
+            F.count("o_orderkey").alias("_join"),
+        )
+        .select(
+            F.lit(n_fact).cast("long").alias("n_fact"),
+            F.col("_pass").cast("long").alias("n_bloom_pass"),
+            F.col("_join").cast("long").alias("n_exact_join"),
+            (F.col("_pass") - F.col("_join"))
+            .cast("long")
+            .alias("n_false_pass"),
+        )
+    )
+
+
+@register(
+    "q2_min_cost_supplier",
+    """
+    SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, c.cost_cents
+    FROM (
+      SELECT l_partkey, l_suppkey,
+             MIN(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS cost_cents
+      FROM lineitem GROUP BY 1, 2
+    ) c
+    JOIN part p     ON p.p_partkey = c.l_partkey
+    JOIN supplier s ON s.s_suppkey = c.l_suppkey
+    JOIN nation n   ON n.n_nationkey = s.s_nationkey
+    JOIN region r   ON r.r_regionkey = n.n_regionkey
+    WHERE p.p_type = 'LARGE' AND p.p_size BETWEEN 10 AND 20
+      AND r.r_name = 'EUROPE'
+      AND c.cost_cents = (
+        SELECT MIN(CAST(FLOOR(l2.l_extendedprice * 100 + 0.5) AS BIGINT))
+        FROM lineitem l2
+        JOIN supplier s2 ON s2.s_suppkey = l2.l_suppkey
+        JOIN nation n2   ON n2.n_nationkey = s2.s_nationkey
+        JOIN region r2   ON r2.r_regionkey = n2.n_regionkey
+        WHERE l2.l_partkey = p.p_partkey AND r2.r_name = 'EUROPE'
+      )
+    ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey
+    LIMIT 20
+    """,
+    doc="Min-cost supplier (TPC-H q2 analogue): for every LARGE mid-size "
+    "part, the European supplier(s) offering it at the minimum historical "
+    "unit price (cost = min line cents — exact integer money; the schema "
+    "has no partsupp, so lineitem is the observed price book). The oracle "
+    "keeps q2's correlated scalar subquery; the Spark plan is its "
+    "DECORRELATED form — one (part, supplier) min aggregate, a per-part "
+    "min re-aggregate, and an equi-join back on (part, cost) — which is "
+    "exactly what a decorrelation rewrite produces and the scale shape: "
+    "the fact table aggregates ONCE (partial min map-side), the filtered "
+    "part list and the per-part minima broadcast, and no correlated "
+    "per-row probe ever exists physically.",
+)
+def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem")
+    pa = _t(spark, sf_dir, "part")
+    su = _t(spark, sf_dir, "supplier")
+    na = _t(spark, sf_dir, "nation")
+    re = _t(spark, sf_dir, "region")
+    cents = F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long")
+    pa_f = pa.where(
+        (F.col("p_type") == "LARGE") & F.col("p_size").between(10, 20)
+    ).select("p_partkey")
+    su_eur = (
+        su.join(F.broadcast(na), F.col("n_nationkey") == F.col("s_nationkey"))
+        .join(
+            F.broadcast(re.where(F.col("r_name") == "EUROPE")),
+            F.col("r_regionkey") == F.col("n_regionkey"),
+        )
+        .select("s_suppkey", "s_acctbal", "s_name", "n_name")
+    )
+    cost = (
+        li.join(
+            _bcast_if_small(pa_f, sf_dir, "part"),
+            F.col("p_partkey") == F.col("l_partkey"),
+        )
+        .join(
+            _bcast_if_small(su_eur, sf_dir, "supplier"),
+            F.col("s_suppkey") == F.col("l_suppkey"),
+        )
+        .groupBy("p_partkey", "s_suppkey", "s_acctbal", "s_name", "n_name")
+        .agg(F.min(cents).alias("cost_cents"))
+    )
+    minc = cost.groupBy(F.col("p_partkey").alias("_mpk")).agg(
+        F.min("cost_cents").alias("_min_cost")
+    )
+    return (
+        cost.join(
+            _bcast_if_small(minc, sf_dir, "part"),
+            (F.col("p_partkey") == F.col("_mpk"))
+            & (F.col("cost_cents") == F.col("_min_cost")),
+        )
+        .select("s_acctbal", "s_name", "n_name", "p_partkey", "cost_cents")
+        .orderBy(F.col("s_acctbal").desc(), "n_name", "s_name", "p_partkey")
+        .limit(20)
+    )
+
+
+@register(
+    "q4_order_priority",
+    """
+    SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
+    FROM orders o
+    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
+      AND o.o_orderdate <  TIMESTAMP '1996-07-01'
+      AND EXISTS (
+        SELECT 1 FROM lineitem l
+        WHERE l.l_orderkey = o.o_orderkey
+          AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
+      )
+    GROUP BY 1 ORDER BY 1
+    """,
+    doc="Order-priority checking (TPC-H q4 analogue): count orders per "
+    "priority that had at least one line shipped more than 60 days after "
+    "the order date (the schema has no commit/receipt dates; late "
+    "shipment is the q4 'late line' predicate). The EXISTS compiles to a "
+    "LEFT SEMI join with a mixed equi + range condition — the semi join "
+    "deduplicates multi-line matches WITHOUT a distinct shuffle, the "
+    "quarter filter pushes to the orders scan, and at 100 TB both sides "
+    "shuffle once on orderkey (or broadcast when the filtered order "
+    "slice is small).",
+)
+def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    od = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem")
+    od_q = od.where(
+        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
+    )
+    return (
+        od_q.join(
+            li,
+            (F.col("l_orderkey") == F.col("o_orderkey"))
+            & (
+                F.col("l_shipdate")
+                > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
+            ),
+            "left_semi",
+        )
+        .groupBy("o_orderpriority")
+        .agg(F.count(F.lit(1)).cast("long").alias("order_count"))
+        .orderBy("o_orderpriority")
+    )
+
+
+@register(
+    "q13_customer_distribution",
+    """
+    SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
+    FROM (
+      SELECT c.c_custkey, CAST(COUNT(o.o_orderkey) AS BIGINT) AS c_count
+      FROM customer c
+      LEFT OUTER JOIN orders o
+        ON o.o_custkey = c.c_custkey
+       AND o.o_orderpriority <> '4-NOT SPECIFIED'
+      GROUP BY 1
+    )
+    GROUP BY 1 ORDER BY custdist DESC, c_count DESC
+    """,
+    doc="Customer order-count distribution (TPC-H q13 analogue): how many "
+    "customers placed 0, 1, 2, ... qualifying orders — the canonical "
+    "outer-join-with-nulls histogram and TPC-H's classic skew case. The "
+    "oracle keeps q13's literal LEFT OUTER JOIN + COUNT(o_orderkey); the "
+    "Spark plan is the AGGREGATE-BEFORE-JOIN rewrite: orders pre-aggregate "
+    "to one (custkey, count) row — partial counts combine map-side, so a "
+    "mega-customer's millions of orders collapse BEFORE any join shuffle — "
+    "then a left join + coalesce(cnt, 0) recovers the zero-order "
+    "customers, and the final histogram groups ~one row per customer. "
+    "At 100 TB this is the difference between shuffling the orders table "
+    "and shuffling one row per customer.",
+)
+def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cu = _t(spark, sf_dir, "customer")
+    od = _t(spark, sf_dir, "orders")
+    ocnt = (
+        od.where(F.col("o_orderpriority") != "4-NOT SPECIFIED")
+        .groupBy("o_custkey")
+        .agg(F.count(F.lit(1)).cast("long").alias("_cnt"))
+    )
+    return (
+        cu.select("c_custkey")
+        .join(ocnt, F.col("o_custkey") == F.col("c_custkey"), "left")
+        .select(F.coalesce(F.col("_cnt"), F.lit(0).cast("long")).alias("c_count"))
+        .groupBy("c_count")
+        .agg(F.count(F.lit(1)).cast("long").alias("custdist"))
+        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
+    )
+
+
+@register(
+    "q16_supplier_variety",
+    """
+    SELECT p.p_brand, p.p_type, p.p_size,
+           CAST(COUNT(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
+    FROM lineitem l
+    JOIN part p ON p.p_partkey = l.l_partkey
+    WHERE p.p_brand <> 'Brand#45' AND p.p_size IN (1, 4, 9, 16, 25, 36, 49)
+      AND l.l_suppkey NOT IN (
+        SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
+      )
+    GROUP BY 1, 2, 3
+    ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
+    LIMIT 25
+    """,
+    doc="Parts/supplier relationship variety (TPC-H q16 analogue): how "
+    "many distinct acceptable suppliers have ever shipped each "
+    "(brand, type, size) bucket, excluding blacklisted suppliers "
+    "(negative balance, the q16 'complaints' NOT IN). The NOT IN "
+    "compiles to a LEFT ANTI join against the tiny blacklist (broadcast, "
+    "stats-gated); the distinct-count shuffles (bucket, suppkey) pairs "
+    "once with partial distinct map-side. The brand/size filters push to "
+    "the part scan before the fact join.",
+)
+def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem")
+    pa = _t(spark, sf_dir, "part")
+    su = _t(spark, sf_dir, "supplier")
+    pa_f = pa.where(
+        (F.col("p_brand") != "Brand#45")
+        & F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49)
+    ).select("p_partkey", "p_brand", "p_type", "p_size")
+    bad = su.where(F.col("s_acctbal") < 0).select("s_suppkey")
+    return (
+        li.join(
+            _bcast_if_small(bad, sf_dir, "supplier"),
+            F.col("s_suppkey") == F.col("l_suppkey"),
+            "left_anti",
+        )
+        .join(
+            _bcast_if_small(pa_f, sf_dir, "part"),
+            F.col("p_partkey") == F.col("l_partkey"),
+        )
+        .groupBy("p_brand", "p_type", "p_size")
+        .agg(F.countDistinct("l_suppkey").cast("long").alias("supplier_cnt"))
+        .orderBy(
+            F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size"
+        )
+        .limit(25)
+    )
+
+
+@register(
+    "audit_distribution_drift",
+    """
+    WITH bounds AS (
+      SELECT MIN(CAST(ts AS DATE)) AS d0,
+             DATEDIFF('day', MIN(CAST(ts AS DATE)),
+                      MAX(CAST(ts AS DATE))) AS span
+      FROM events
+    ),
+    h AS (
+      SELECT event_type,
+             CASE WHEN 2 * DATEDIFF('day', b.d0, CAST(e.ts AS DATE))
+                       <= b.span
+                  THEN 1 ELSE 2 END AS half
+      FROM events e CROSS JOIN bounds b
+    ),
+    g AS (
+      SELECT event_type,
+             SUM(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS n1,
+             SUM(CASE WHEN half = 2 THEN 1 ELSE 0 END) AS n2
+      FROM h GROUP BY event_type
+    ),
+    t AS (SELECT SUM(n1) AS t1, SUM(n2) AS t2 FROM g)
+    SELECT event_type,
+           CAST(n1 AS BIGINT) AS n_h1,
+           CAST(n2 AS BIGINT) AS n_h2,
+           CAST((20000 * n1 + t.t1) // (2 * t.t1) AS BIGINT) AS share1_bp,
+           CAST((20000 * n2 + t.t2) // (2 * t.t2) AS BIGINT) AS share2_bp,
+           CAST(ABS((20000 * n2 + t.t2) // (2 * t.t2)
+                    - (20000 * n1 + t.t1) // (2 * t.t1)) AS BIGINT)
+             AS drift_bp
+    FROM g CROSS JOIN t ORDER BY event_type
+    """,
+    doc="Event-mix drift between the first and second half of the "
+    "observed time range: per-type composition shares (bp) in each "
+    "half and their absolute delta — the population-stability check "
+    "(a bounded cousin of PSI) a pipeline runs before assuming "
+    "yesterday's model/filter thresholds still fit today's mix. The "
+    "split day comes from the data's own min/max (no hard-coded "
+    "dates): half = 1 iff 2·(day − d0) ≤ span, integer day arithmetic "
+    "on both engines; the two scalars cross the driver as literals "
+    "(the k-means-model pattern). Shares are exact half-up basis "
+    "points; one counting aggregate, #types rows shuffle.",
+)
+def audit_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = _t(spark, sf_dir, "events")
+    b = ev.agg(
+        F.min(F.col("ts").cast("date")).alias("d0"),
+        F.datediff(
+            F.max(F.col("ts").cast("date")), F.min(F.col("ts").cast("date"))
+        ).alias("span"),
+    ).first()
+    d0, span = b["d0"], int(b["span"])
+    h = ev.select(
+        "event_type",
+        F.when(
+            2 * F.datediff(F.col("ts").cast("date"), F.lit(d0)) <= F.lit(span),
+            1,
+        )
+        .otherwise(2)
+        .alias("half"),
+    )
+    g = h.groupBy("event_type").agg(
+        F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).alias("n1"),
+        F.sum(F.when(F.col("half") == 2, 1).otherwise(0)).alias("n2"),
+    ).localCheckpoint(eager=True)  # #types rows; totals + shares read it
+    tot = g.agg(F.sum("n1").alias("t1"), F.sum("n2").alias("t2")).first()
+    t1, t2 = int(tot["t1"]), int(tot["t2"])
+    return g.select(
+        "event_type",
+        F.col("n1").cast("long").alias("n_h1"),
+        F.col("n2").cast("long").alias("n_h2"),
+        F.expr(f"(20000 * n1 + {t1}) div (2 * {t1})")
+        .cast("long")
+        .alias("share1_bp"),
+        F.expr(f"(20000 * n2 + {t2}) div (2 * {t2})")
+        .cast("long")
+        .alias("share2_bp"),
+        F.abs(
+            F.expr(f"(20000 * n2 + {t2}) div (2 * {t2})")
+            - F.expr(f"(20000 * n1 + {t1}) div (2 * {t1})")
+        )
+        .cast("long")
+        .alias("drift_bp"),
+    ).orderBy("event_type")
+
+
+# --- scan matrix: schema evolution -------------------------------------------
+
+_JSON_EVO_CACHE: dict = {}
+
+
+@register(
+    "scan_json_schema_evolution",
+    """
+    WITH src AS (
+      SELECT event_type,
+             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents,
+             CASE WHEN event_id % 2 = 1
+                  THEN CAST(CAST(ts AS DATE) AS VARCHAR) END AS day
+      FROM events
+    )
+    SELECT event_type,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(SUM(CASE WHEN day IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_v2_rows,
+           CAST(SUM(cents) AS BIGINT) AS sum_cents,
+           CAST(COUNT(DISTINCT day) AS BIGINT) AS n_days_v2
+    FROM src GROUP BY event_type ORDER BY event_type
+    """,
+    doc="Schema-evolution scan roundtrip — the OTHER lake-layout primitive "
+    "next to partition pruning: half the events are written as JSONL in "
+    "schema v1 (event_id, event_type, cents) and half in v2 (adds a day "
+    "column), into one directory; the read unifies the schemas (v1 rows "
+    "surface NULL day — exactly how a real feed evolves without "
+    "rewriting history) and the aggregate must match the oracle's flat-"
+    "parquet CASE-split. Only integers and strings cross the JSON "
+    "boundary (a double roundtrip would expose float-formatting "
+    "differences — cents are derived BEFORE the write). Layout written "
+    "once per session (cached); the read is one directory scan + one "
+    "map-side-combined aggregate.",
+)
+def scan_json_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    path = _JSON_EVO_CACHE.get(key)
+    if path is None:
+        path = tempfile.mkdtemp(prefix="ksc-json-evo-")
+        ev = _t(spark, sf_dir, "events").select(
+            "event_id",
+            "event_type",
+            F.floor(F.col("value") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+            F.col("ts").cast("date").cast("string").alias("day"),
+        )
+        ev.where(F.col("event_id") % 2 == 0).select(
+            "event_id", "event_type", "cents"
+        ).write.mode("append").json(path)
+        ev.where(F.col("event_id") % 2 == 1).select(
+            "event_id", "event_type", "cents", "day"
+        ).write.mode("append").json(path)
+        _JSON_EVO_CACHE[key] = path
+    back = spark.read.json(path)
+    return (
+        back.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.sum(F.when(F.col("day").isNotNull(), 1).otherwise(0))
+            .cast("long")
+            .alias("n_v2_rows"),
+            F.sum("cents").cast("long").alias("sum_cents"),
+            F.countDistinct("day").cast("long").alias("n_days_v2"),
+        )
+        .orderBy("event_type")
+    )
+
+
+# --- audit / time-series closers ---------------------------------------------
+
+
+@register(
+    "audit_pk_uniqueness",
+    """
+    WITH u AS (
+      SELECT 'region' AS tbl, COUNT(*) AS n_rows,
+             COUNT(DISTINCT r_regionkey) AS n_keys FROM region
+      UNION ALL SELECT 'nation', COUNT(*), COUNT(DISTINCT n_nationkey)
+      FROM nation
+      UNION ALL SELECT 'customer', COUNT(*), COUNT(DISTINCT c_custkey)
+      FROM customer
+      UNION ALL SELECT 'supplier', COUNT(*), COUNT(DISTINCT s_suppkey)
+      FROM supplier
+      UNION ALL SELECT 'part', COUNT(*), COUNT(DISTINCT p_partkey) FROM part
+      UNION ALL SELECT 'orders', COUNT(*), COUNT(DISTINCT o_orderkey)
+      FROM orders
+      UNION ALL SELECT 'lineitem', COUNT(*),
+             COUNT(DISTINCT l_orderkey * 100 + l_linenumber) FROM lineitem
+      UNION ALL SELECT 'events', COUNT(*), COUNT(DISTINCT event_id)
+      FROM events
+      UNION ALL SELECT 'documents', COUNT(*), COUNT(DISTINCT doc_id)
+      FROM documents
+      UNION ALL SELECT 'embeddings', COUNT(*), COUNT(DISTINCT vec_id)
+      FROM embeddings
+    )
+    SELECT tbl, CAST(n_rows AS BIGINT) AS n_rows,
+           CAST(n_keys AS BIGINT) AS n_distinct_keys,
+           CAST(n_rows - n_keys AS BIGINT) AS n_dup_key_rows
+    FROM u ORDER BY tbl
+    """,
+    doc="Primary-key uniqueness audit across ALL TEN tables in one query: "
+    "rows vs distinct declared keys per table (lineitem's key is the "
+    "composite (l_orderkey, l_linenumber), folded into one integer since "
+    "linenumber < 100) — the first data-quality gate any warehouse load "
+    "runs; a nonzero n_dup_key_rows breaks every downstream join "
+    "cardinality assumption. Each leg is one scan + one distinct "
+    "aggregate (map-side partials); legs union to a 10-row frame. At "
+    "100 TB the distinct-count legs are the exact tier — the HLL sketch "
+    "family is the one-pass approximate tier over the same question.",
+)
+def audit_pk_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    legs = []
+    for tbl, key in [
+        ("region", F.col("r_regionkey")),
+        ("nation", F.col("n_nationkey")),
+        ("customer", F.col("c_custkey")),
+        ("supplier", F.col("s_suppkey")),
+        ("part", F.col("p_partkey")),
+        ("orders", F.col("o_orderkey")),
+        ("lineitem", F.col("l_orderkey") * 100 + F.col("l_linenumber")),
+        ("events", F.col("event_id")),
+        ("documents", F.col("doc_id")),
+        ("embeddings", F.col("vec_id")),
+    ]:
+        legs.append(
+            _t(spark, sf_dir, tbl).agg(
+                F.lit(tbl).alias("tbl"),
+                F.count(F.lit(1)).alias("n_rows"),
+                F.countDistinct(key).alias("n_keys"),
+            )
+        )
+    u = legs[0]
+    for leg in legs[1:]:
+        u = u.unionByName(leg)
+    return u.select(
+        "tbl",
+        F.col("n_rows").cast("long").alias("n_rows"),
+        F.col("n_keys").cast("long").alias("n_distinct_keys"),
+        (F.col("n_rows") - F.col("n_keys")).cast("long").alias(
+            "n_dup_key_rows"
+        ),
+    ).orderBy("tbl")
+
+
+@register(
+    "join_null_safe_eq",
+    """
+    WITH l AS (
+      SELECT NULLIF(c_nationkey % 5, 0) AS seg, COUNT(*) AS nc
+      FROM customer GROUP BY 1
+    ),
+    r AS (
+      SELECT NULLIF(s_nationkey % 5, 0) AS seg, COUNT(*) AS ns
+      FROM supplier GROUP BY 1
+    )
+    SELECT COALESCE(CAST(l.seg AS VARCHAR), 'NULL') AS segment,
+           CAST(l.nc AS BIGINT) AS n_customers,
+           CAST(r.ns AS BIGINT) AS n_suppliers,
+           CAST(l.nc * r.ns AS BIGINT) AS n_pairs
+    FROM l JOIN r ON l.seg IS NOT DISTINCT FROM r.seg
+    ORDER BY segment
+    """,
+    doc="Null-safe equality join (Spark eqNullSafe <=> / SQL IS NOT "
+    "DISTINCT FROM): the relational-completeness entry for the third "
+    "equality semantics — plain = drops NULL keys silently, which is "
+    "the classic silent-row-loss bug when a segmentation column is "
+    "nullable; <=> matches NULL to NULL as one group. Both sides "
+    "pre-aggregate to #segments-bounded count frames BEFORE the join "
+    "(the null-safe key is still an equi-key, so the join plans "
+    "hash/merge, never nested-loop — pinned by the plan-hygiene gate), "
+    "and the NULL segment is rendered as a literal so the output "
+    "carries no NULL keys. At 100 TB this shape joins registers, never "
+    "rows.",
+)
+def join_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = _t(spark, sf_dir, "customer")
+    s = _t(spark, sf_dir, "supplier")
+    l = c.groupBy(
+        F.nullif(F.col("c_nationkey") % 5, F.lit(0)).alias("seg")
+    ).agg(F.count(F.lit(1)).alias("nc"))
+    r = s.groupBy(
+        F.nullif(F.col("s_nationkey") % 5, F.lit(0)).alias("seg")
+    ).agg(F.count(F.lit(1)).alias("ns"))
+    j = l.join(r, l["seg"].eqNullSafe(r["seg"]))
+    return j.select(
+        F.coalesce(l["seg"].cast("string"), F.lit("NULL")).alias("segment"),
+        F.col("nc").cast("long").alias("n_customers"),
+        F.col("ns").cast("long").alias("n_suppliers"),
+        (F.col("nc") * F.col("ns")).cast("long").alias("n_pairs"),
+    ).orderBy("segment")
+
+
+_FD_CANDIDATES = (
+    # (name, table, determinant, dependent) — one held FD (a key always
+    # determines its row's attributes) and three expected violations, so
+    # the audit exercises both verdicts.
+    ("c_custkey->c_nationkey", "customer", "c_custkey", "c_nationkey"),
+    ("l_orderkey->l_returnflag", "lineitem", "l_orderkey", "l_returnflag"),
+    ("l_partkey->l_suppkey", "lineitem", "l_partkey", "l_suppkey"),
+    ("o_custkey->o_orderpriority", "orders", "o_custkey", "o_orderpriority"),
+)
+
+
+def _fd_oracle_leg(name: str, table: str, det: str, dep: str) -> str:
+    return f"""
+    SELECT '{name}' AS fd,
+           CAST(COUNT(*) AS BIGINT) AS n_groups,
+           CAST(SUM(CASE WHEN d > 1 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_violating_groups,
+           CAST(SUM(CASE WHEN d > 1 THEN c ELSE 0 END) AS BIGINT)
+             AS n_violating_rows,
+           CAST((20000 * SUM(CASE WHEN d > 1 THEN c ELSE 0 END) + SUM(c))
+                // (2 * SUM(c)) AS BIGINT) AS violation_bp
+    FROM (SELECT {det} AS k, COUNT(DISTINCT {dep}) AS d, COUNT(*) AS c
+          FROM {table} GROUP BY 1) g"""
+
+
+@register(
+    "audit_functional_dependency",
+    "\nUNION ALL".join(
+        _fd_oracle_leg(*cand) for cand in _FD_CANDIDATES
+    )
+    + "\nORDER BY fd",
+    doc="Functional-dependency audit: for each candidate determinant → "
+    "dependent pair, how many determinant groups carry more than one "
+    "distinct dependent value, and what share of rows sit in those "
+    "violating groups (half-up bp, all-positive counts so truncating "
+    "and flooring division agree). The schema-inference / "
+    "normalization check a data catalog runs before declaring a "
+    "column derivable: c_custkey→c_nationkey must hold (keys determine "
+    "their row), while l_partkey→l_suppkey is expected to fail (TPC-H "
+    "parts have multiple suppliers). Each candidate is ONE group-by on "
+    "its determinant carrying (distinct-count, count) pairs — partial "
+    "aggregation map-side, shuffles keyed on the determinant, never "
+    "wider than the candidate's own key cardinality; the four scalar "
+    "verdicts union into a 4-row frame.",
+)
+def audit_functional_dependency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    out = None
+    for name, table, det, dep in _FD_CANDIDATES:
+        g = (
+            _t(spark, sf_dir, table)
+            .groupBy(F.col(det).alias("k"))
+            .agg(
+                F.countDistinct(dep).alias("d"),
+                F.count(F.lit(1)).alias("c"),
+            )
+        )
+        leg = g.agg(
+            F.count(F.lit(1)).cast("long").alias("n_groups"),
+            F.sum(F.when(F.col("d") > 1, 1).otherwise(0))
+            .cast("long")
+            .alias("n_violating_groups"),
+            F.sum(F.when(F.col("d") > 1, F.col("c")).otherwise(0))
+            .cast("long")
+            .alias("n_violating_rows"),
+            F.expr(
+                "(20000 * sum(CASE WHEN d > 1 THEN c ELSE 0 END) + sum(c))"
+                " div (2 * sum(c))"
+            )
+            .cast("long")
+            .alias("violation_bp"),
+        ).select(
+            F.lit(name).alias("fd"),
+            "n_groups",
+            "n_violating_groups",
+            "n_violating_rows",
+            "violation_bp",
+        )
+        out = leg if out is None else out.unionByName(leg)
+    return out.orderBy("fd")
+
+
+@register(
+    "join_relational_division",
+    """
+    WITH pr AS (SELECT COUNT(DISTINCT o_orderpriority) AS np FROM orders),
+    cov AS (
+      SELECT o_custkey, COUNT(DISTINCT o_orderpriority) AS k
+      FROM orders GROUP BY 1
+    ),
+    full_cov AS (
+      SELECT o_custkey FROM cov WHERE k = (SELECT np FROM pr)
+    )
+    SELECT n.n_name AS nation,
+           CAST(COUNT(*) AS BIGINT) AS n_covering_customers,
+           CAST(MIN(f.o_custkey) AS BIGINT) AS min_custkey
+    FROM full_cov f
+    JOIN customer c ON c.c_custkey = f.o_custkey
+    JOIN nation n ON n.n_nationkey = c.c_nationkey
+    GROUP BY 1
+    ORDER BY nation
+    """,
+    doc="Relational division (the 'for all' join the classic algebra names "
+    "÷): customers whose orders span EVERY distinct order priority, "
+    "rolled up per nation — the textbook 'suppliers who stock all "
+    "parts' operator, absent from SQL as a primitive and expressed "
+    "Spark-first as a per-divisor distinct count compared to the "
+    "divisor's cardinality. The divisor size (5 priorities) crosses the "
+    "driver as a literal (k-means-model pattern — a scalar subquery "
+    "cross join would plan as BNLJ); the quotient is ONE group-by on "
+    "custkey carrying a distinct-count, then broadcast-gated dim joins "
+    "roll covering customers up to nations. Shuffles carry "
+    "(custkey, priority-count) pairs, never order rows.",
+)
+def join_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = _t(spark, sf_dir, "orders")
+    np = int(
+        o.agg(F.countDistinct("o_orderpriority").alias("np")).first()["np"]
+    )
+    cov = (
+        o.groupBy("o_custkey")
+        .agg(F.countDistinct("o_orderpriority").alias("k"))
+        .where(F.col("k") == F.lit(np))
+        .select("o_custkey")
+    )
+    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    na = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return (
+        cov.join(_bcast_if_small(c, sf_dir, "customer"), cov.o_custkey == c.c_custkey)
+        .join(F.broadcast(na), c.c_nationkey == na.n_nationkey)
+        .groupBy(F.col("n_name").alias("nation"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_covering_customers"),
+            F.min("o_custkey").cast("long").alias("min_custkey"),
+        )
+        .orderBy("nation")
+    )
+
+
+@register(
+    "window_rolling_median",
+    """
+    WITH daily AS (
+      SELECT event_type, CAST(ts AS DATE) AS day,
+             SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS cents
+      FROM events GROUP BY 1, 2
+    ),
+    w AS (
+      SELECT event_type, day,
+             ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS rn,
+             MEDIAN(cents) OVER (PARTITION BY event_type ORDER BY day
+                                 ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+               AS med
+      FROM daily
+    )
+    SELECT event_type, CAST(day AS DATE) AS day,
+           CAST(med AS BIGINT) AS med_cents
+    FROM w WHERE rn >= 7
+    ORDER BY event_type, day
+    """,
+    doc="Trailing 7-day rolling MEDIAN of daily revenue per event type — "
+    "the robust smoother a monitoring pipeline overlays on spiky "
+    "series (window_ewma_smoothing follows spikes; the rolling median "
+    "ignores up to 3 outlier days entirely). Only FULL windows emit "
+    "(rn ≥ 7), so every median sees exactly 7 integers — an odd count "
+    "— and both engines' interpolating quantile returns the exact "
+    "middle element, no interpolation ambiguity (cast back to exact "
+    "cents). One (type, day) reduce feeds one per-type ordered window; "
+    "frames are #days-per-type-bounded at any corpus size.",
+)
+def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = _t(spark, sf_dir, "events")
+    daily = (
+        ev.select(
+            "event_type",
+            F.col("ts").cast("date").alias("day"),
+            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        )
+        .groupBy("event_type", "day")
+        .agg(F.sum("c").alias("cents"))
+    )
+    wo = Window.partitionBy("event_type").orderBy("day")
+    w = daily.select(
+        "event_type",
+        "day",
+        F.row_number().over(wo).alias("rn"),
+        F.expr("percentile(cents, 0.5)")
+        .over(wo.rowsBetween(-6, 0))
+        .alias("med"),
+    )
+    return (
+        w.where(F.col("rn") >= 7)
+        .select(
+            "event_type",
+            F.col("day").cast("date").alias("day"),
+            F.col("med").cast("long").alias("med_cents"),
+        )
+        .orderBy("event_type", "day")
+    )
+
+
+# --- bucketed numeric band join ---------------------------------------------
+
+
+@register(
+    "join_value_band",
+    """
+    SELECT o.o_orderpriority,
+           CAST(COUNT(DISTINCT o.o_orderkey) AS BIGINT) AS n_orders_matched,
+           CAST(COUNT(*) AS BIGINT) AS n_pairs
+    FROM orders o JOIN lineitem l
+      ON abs(l.l_extendedprice - o.o_totalprice / 20) <= CAST(5.0 AS DOUBLE)
+    GROUP BY 1 ORDER BY 1
+    """,
+    doc="Numeric band join: match every order to lineitems (any order) "
+    "whose extended price lies within ±5 of o_totalprice/20 — the "
+    "price-comparable-basket probe. The ORACLE states the semantics as "
+    "the raw inequality join (DuckDB's IEJoin handles it); the Spark "
+    "plan NEVER builds the banned BroadcastNestedLoopJoin that predicate "
+    "would produce: both sides bucket on floor(price/50), the order side "
+    "probes its bucket ±1 via a 3-element explode (full coverage: the "
+    "±δ window spans at most the adjacent buckets), the join is a plain "
+    "shuffled EQUI-join on bucket id, and the exact |price − target| ≤ δ "
+    "filter verifies inside the join — the classic band-join reduction. "
+    "At 100 TB exchanges are keyed on ~price/δ buckets and each probe "
+    "meets only its band's rows (candidate volume = Σ probes × band "
+    "density, not |orders|×|lineitem|); per-order match counts combine "
+    "before the tiny priority rollup. Plan hygiene gate proves no "
+    "BNLJ/Cartesian. Candidate volume — and therefore cost — scales "
+    "LINEARLY with the band width δ (r11 measurement at sf0.1: δ=50 ≈ "
+    "135M candidates ≈ 25 s; δ=5 ≈ 13M ≈ 2.5 s); a deployment picks δ "
+    "per its match-tolerance SLA and the plan shape is unchanged.",
+)
+def join_value_band(spark: SparkSession, sf_dir: str) -> DataFrame:
+    delta = 5.0
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderpriority",
+        (F.col("o_totalprice") / 20).alias("target"),
+    )
+    probes = orders.select(
+        "o_orderkey",
+        "o_orderpriority",
+        "target",
+        F.explode(
+            F.array(
+                F.floor(F.col("target") / delta) - 1,
+                F.floor(F.col("target") / delta),
+                F.floor(F.col("target") / delta) + 1,
+            )
+        ).alias("bucket"),
+    )
+    li = _t(spark, sf_dir, "lineitem").select(
+        F.col("l_extendedprice").alias("price"),
+        F.floor(F.col("l_extendedprice") / delta).alias("bucket"),
+    )
+    matched = probes.join(li, "bucket").where(
+        F.abs(F.col("price") - F.col("target")) <= delta
+    )
+    per_order = matched.groupBy("o_orderkey", "o_orderpriority").agg(
+        F.count(F.lit(1)).alias("m")
+    )
+    return (
+        per_order.groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_orders_matched"),
+            F.sum("m").cast("long").alias("n_pairs"),
+        )
+        .orderBy("o_orderpriority")
+    )
+
+
+# --- gaps-and-islands id audit (anti-join form, no global window) -----------
+
+
+@register(
+    "audit_id_gaps",
+    """
+    WITH ids AS (SELECT DISTINCT event_id FROM events),
+    flagged AS (
+      SELECT a.event_id,
+             CASE WHEN b.event_id IS NULL THEN 1 ELSE 0 END AS island_end
+      FROM ids a LEFT JOIN ids b ON b.event_id = a.event_id + 1
+    )
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_ids,
+           CAST(MIN(event_id) AS BIGINT) AS min_id,
+           CAST(MAX(event_id) AS BIGINT) AS max_id,
+           CAST(SUM(island_end) AS BIGINT) AS n_islands,
+           CAST(SUM(island_end) - 1 AS BIGINT) AS n_gaps,
+           CAST((20000 * COUNT(*) + (MAX(event_id) - MIN(event_id) + 1))
+                // (2 * (MAX(event_id) - MIN(event_id) + 1)) AS BIGINT)
+             AS coverage_bp
+    FROM flagged
+    """,
+    doc="Gaps-and-islands completeness audit over the event_id sequence — "
+    "did ingestion drop ids? — WITHOUT the classic global ORDER BY "
+    "window, which would funnel 100 TB through one task: an id ends an "
+    "island iff id+1 is absent, detected by a self EQUI-join on id+1 "
+    "(fully parallel, hash-partitioned on id), so islands = COUNT of "
+    "island-ends (the max id always ends one), gaps = islands − 1, and "
+    "coverage_bp = ids present / id span in half-up basis points — all "
+    "in ONE aggregate over the flagged frame. Exchanges carry distinct "
+    "ids twice (both join sides) and one combined row per partition; "
+    "the sequencing analogue of the reference's seqNo-chain continuity "
+    "checks (sequencing.js ordering contract) applied corpus-wide.",
+)
+def audit_id_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = _t(spark, sf_dir, "events")
+    ids = ev.select("event_id").distinct()
+    nxt = ids.select((F.col("event_id") - 1).alias("event_id"), F.lit(1).alias("has_next"))
+    flagged = ids.join(nxt, "event_id", "left").select(
+        "event_id",
+        F.when(F.col("has_next").isNull(), 1).otherwise(0).alias("island_end"),
+    )
+    return flagged.agg(
+        F.count(F.lit(1)).cast("long").alias("n_ids"),
+        F.min("event_id").cast("long").alias("min_id"),
+        F.max("event_id").cast("long").alias("max_id"),
+        F.sum("island_end").cast("long").alias("n_islands"),
+        (F.sum("island_end") - 1).cast("long").alias("n_gaps"),
+        F.expr(
+            "(20000 * count(*) + (max(event_id) - min(event_id) + 1))"
+            " div (2 * (max(event_id) - min(event_id) + 1))"
+        )
+        .cast("long")
+        .alias("coverage_bp"),
+    )
+
+
+# --- event-time disorder audit ----------------------------------------------
+
+
+@register(
+    "audit_out_of_order_rate",
+    """
+    WITH seq AS (
+      SELECT event_type, ts,
+             LAG(ts) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_ts
+      FROM events
+    )
+    SELECT event_type,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(SUM(CASE WHEN prev_ts IS NOT NULL AND ts < prev_ts
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_out_of_order,
+           CAST((20000 * SUM(CASE WHEN prev_ts IS NOT NULL AND ts < prev_ts
+                                  THEN 1 ELSE 0 END) + COUNT(*))
+                // (2 * COUNT(*)) AS BIGINT) AS ooo_bp
+    FROM seq GROUP BY 1 ORDER BY 1
+    """,
+    doc="Event-time disorder audit: per event type, the share of events "
+    "that arrived (event_id order — the ingestion sequence, the "
+    "reference's seqNo axis) with an event-time EARLIER than the "
+    "previous arrival in the same user's stream — the late-data rate "
+    "that sizes Structured Streaming watermarks (a watermark shorter "
+    "than the observed disorder horizon silently drops these rows; see "
+    "plans/streaming_windows.py). ONE per-user window partitioned on "
+    "user_id and ordered by arrival; the per-type rollup combines "
+    "map-side. Half-up bp over positive counts.",
+)
+def audit_out_of_order_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = _t(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("event_id")
+    seq = ev.select(
+        "event_type", "ts", F.lag("ts").over(w).alias("prev_ts")
+    )
+    late = F.when(
+        F.col("prev_ts").isNotNull() & (F.col("ts") < F.col("prev_ts")), 1
+    ).otherwise(0)
+    return (
+        seq.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("ne"),
+            F.sum(late).alias("nl"),
+        )
+        .select(
+            "event_type",
+            F.col("ne").cast("long").alias("n_events"),
+            F.col("nl").cast("long").alias("n_out_of_order"),
+            F.expr("(20000 * nl + ne) div (2 * ne)").cast("long").alias("ooo_bp"),
+        )
+        .orderBy("event_type")
+    )
+
+
+# --- multi-rule value-sanity audit ------------------------------------------
+
+
+@register(
+    "audit_value_rules",
+    """
+    WITH j AS (
+      SELECT l.l_quantity, l.l_discount, l.l_extendedprice,
+             l.l_shipdate, o.o_orderdate
+      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+    ),
+    agg AS (
+      SELECT COUNT(*) AS n,
+             SUM(CASE WHEN l_shipdate < o_orderdate THEN 1 ELSE 0 END) AS r1,
+             SUM(CASE WHEN l_quantity <= 0 THEN 1 ELSE 0 END) AS r2,
+             SUM(CASE WHEN l_discount < 0 OR l_discount > 1
+                      THEN 1 ELSE 0 END) AS r3,
+             SUM(CASE WHEN l_extendedprice <= 0 THEN 1 ELSE 0 END) AS r4
+      FROM j
+    )
+    SELECT rule, CAST(n AS BIGINT) AS n_checked,
+           CAST(v AS BIGINT) AS n_violations,
+           CAST((20000 * v + n) // (2 * n) AS BIGINT) AS violation_bp
+    FROM (
+      SELECT 'ship_before_order' AS rule, n, r1 AS v FROM agg
+      UNION ALL SELECT 'nonpositive_quantity', n, r2 FROM agg
+      UNION ALL SELECT 'discount_out_of_range', n, r3 FROM agg
+      UNION ALL SELECT 'nonpositive_price', n, r4 FROM agg
+    )
+    ORDER BY rule
+    """,
+    doc="Multi-rule value-sanity audit over the order lines: temporal "
+    "consistency (shipped before its order was placed — needs the "
+    "orderkey-keyed equi-join, co-partitioned at scale), plus three "
+    "single-table domain rules (non-positive quantity/price, discount "
+    "outside [0,1]). ONE pass computes all four violation counts as "
+    "indicator sums in a single aggregate (map-side combined to one row "
+    "per partition), then the 1-row result unpivots to a rule-per-row "
+    "report via stack — the audit analogue of the reference's "
+    "reason-unusable partition (P1), where a record failing ANY rule is "
+    "individually attributable. Complements audit_referential_integrity "
+    "(key reachability) and audit_functional_dependency (determinism): "
+    "this is the VALUE-domain leg.",
+)
+def audit_value_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_quantity", "l_discount", "l_extendedprice", "l_shipdate"
+    )
+    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    j = li.join(orders, li.l_orderkey == orders.o_orderkey)
+    agg = j.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(
+            F.when(F.col("l_shipdate") < F.col("o_orderdate"), 1).otherwise(0)
+        ).alias("r1"),
+        F.sum(F.when(F.col("l_quantity") <= 0, 1).otherwise(0)).alias("r2"),
+        F.sum(
+            F.when((F.col("l_discount") < 0) | (F.col("l_discount") > 1), 1)
+            .otherwise(0)
+        ).alias("r3"),
+        F.sum(F.when(F.col("l_extendedprice") <= 0, 1).otherwise(0)).alias("r4"),
+    )
+    rules = agg.select(
+        "n",
+        F.expr(
+            "stack(4, 'ship_before_order', r1, 'nonpositive_quantity', r2,"
+            " 'discount_out_of_range', r3, 'nonpositive_price', r4)"
+            " AS (rule, v)"
+        ),
+    )
+    return rules.select(
+        "rule",
+        F.col("n").cast("long").alias("n_checked"),
+        F.col("v").cast("long").alias("n_violations"),
+        F.expr("(20000 * v + n) div (2 * n)").cast("long").alias("violation_bp"),
+    ).orderBy("rule")
+
+
+# --- parquet codec roundtrip (scan-matrix leg; ADVICE-r11 overflow fix) -----
+
+_CODEC_CACHE: dict = {}
+
+
+@register(
+    "scan_parquet_codec_roundtrip",
+    """
+    WITH mn AS (SELECT MIN(epoch_us(ts)) AS mn FROM events),
+    agg AS (
+      SELECT event_type, COUNT(*) AS n_events,
+             SUM(epoch_us(ts) - mn.mn) AS sum_ts_off, SUM(user_id) AS sum_user
+      FROM events CROSS JOIN mn GROUP BY 1
+    )
+    SELECT codec, event_type,
+           CAST(n_events AS BIGINT) AS n_events,
+           CAST(sum_ts_off AS BIGINT) AS sum_ts_off,
+           CAST(sum_user AS BIGINT) AS sum_user
+    FROM agg CROSS JOIN (SELECT unnest(['gzip', 'zstd']) AS codec) c
+    ORDER BY codec, event_type
+    """,
+    doc="Parquet compression-codec roundtrip, completing the scan matrix "
+    "alongside the ORC/CSV/JSONL/schema-evolution legs: the events table "
+    "is written once with gzip and once with zstd (the two codecs a "
+    "100 TB lake actually debates — zstd ~2x faster decode at parity "
+    "ratio, the default recommendation since Spark 3.2) and both copies "
+    "are read back and aggregated; equality against the ORIGINAL-table "
+    "oracle proves lossless roundtrip of timestamps and longs through "
+    "each codec path. The timestamp fingerprint sums OFFSETS from the "
+    "corpus min (ADVICE r11: raw epoch-micro sums overflow int64 at "
+    "sf0.1 — ~3.4e19 vs the 9.2e18 limit), and int64 capacity for both "
+    "fingerprints is ASSERTED from the same one-row aggregate that "
+    "yields the min ('asserted, not narrated'). The written files keep "
+    "absolute micros — only the fingerprint is offset-based. Scratch "
+    "layouts live under the session temp root (removed at exit). Codec "
+    "choice is a pure storage-layer concern — pushdown/pruning claims "
+    "carry over unchanged, which is exactly what this pins.",
+)
+def scan_parquet_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
+
+    ev = _t(spark, sf_dir, "events")
+    # One column-pruned one-row aggregate -> driver literals (k-means-model
+    # pattern): the fingerprint's anchor AND its capacity proof.
+    stats = ev.agg(
+        F.min(F.unix_micros("ts")).alias("mn"),
+        F.max(F.unix_micros("ts")).alias("mx"),
+        F.max(F.abs(F.col("user_id"))).alias("mu"),
+        F.count(F.lit(1)).alias("n"),
+    ).first()
+    mn = int(stats["mn"] or 0)
+    mx = int(stats["mx"] or 0)
+    mu = int(stats["mu"] or 0)
+    n = int(stats["n"])
+    # Worst case per-type sum <= n * max term (conservative: all rows in
+    # one type at the extreme value).
+    assert (mx - mn) * n < 2**63, (
+        "codec-roundtrip ts fingerprint would overflow int64 — widen the "
+        "offset base (e.g. per-type min) or sum at coarser granularity"
+    )
+    assert mu * n < 2**63, (
+        "codec-roundtrip user_id fingerprint would overflow int64"
+    )
+    # write once per (session, sf) — the _JSON_EVO_CACHE discipline; every
+    # gate test that materializes this query reuses the same layout
+    key = (spark.sparkContext.applicationId, sf_dir)
+    base = _CODEC_CACHE.get(key)
+    if base is None:
+        flat = ev.select(
+            "event_id",
+            F.unix_micros("ts").alias("ts_us"),
+            "user_id",
+            "event_type",
+        )
+        base = tempfile.mkdtemp(prefix="ksc-codec-")
+        for codec in ("gzip", "zstd"):
+            flat.write.mode("overwrite").option("compression", codec).parquet(
+                f"{base}/{codec}"
+            )
+        _CODEC_CACHE[key] = base
+    outs = []
+    for codec in ("gzip", "zstd"):
+        back = spark.read.parquet(f"{base}/{codec}")
+        outs.append(
+            back.groupBy("event_type").agg(
+                F.count(F.lit(1)).cast("long").alias("n_events"),
+                F.sum(F.col("ts_us") - F.lit(mn)).cast("long").alias(
+                    "sum_ts_off"
+                ),
+                F.sum("user_id").cast("long").alias("sum_user"),
+            ).select(F.lit(codec).alias("codec"), "*")
+        )
+    return outs[0].unionAll(outs[1]).orderBy("codec", "event_type")

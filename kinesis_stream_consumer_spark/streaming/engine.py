@@ -213,6 +213,18 @@ class _Ingested(NamedTuple):
     width: int
     slots: int
 
+    def exec_width(self, n_records: int) -> int:
+        """The exec stage's task count for ``n_records`` rows: one task
+        per ~500 rows, never more tasks than slots. A Python task pays a
+        fixed 65-160 ms from launch to its first row, so a stage wider
+        than the slots pays it once per extra wave; on 4 slots a
+        12k-record batch at 500 rows/task ran 25 exec tasks in 6-7
+        waves. Capped at the slots, the exec+save stage went from 33
+        tasks and 4.3 core-s to 12 tasks and 1.3 core-s per pass (exec
+        width 4, 8 and 25: ~1.5, 1.7 and 2.5 s per pass). The rows/500
+        bound keeps a tiny batch on a wide cluster to a few tasks."""
+        return max(1, min(self.slots, -(-n_records // 500)))
+
 
 class _Stats(NamedTuple):
     """The stats job's result: the batch's shard keys and counts."""
@@ -1015,7 +1027,8 @@ class Engine:
         micro-batches are same-sized; a mis-estimate only re-sizes tasks,
         never changes results), or from full cluster width before the
         first batch. ``_revive_and_exec`` keeps the plan only if the slice
-        covers the batch's shards.
+        covers the batch's shards and the plan is at least as wide as the
+        batch's real count calls for.
 
         Restricted to the fused path: the processAll variant runs an
         aggregate action during plan construction, which must not race
@@ -1069,9 +1082,12 @@ class Engine:
         persisting.loadBatchStateFromDynamoDB default,
         kinesis-processing.js:291): a custom fn returns the prior slice
         (already filtered to live message/rejected states). The
-        speculative plan is kept iff its slice covers the batch's shards;
-        otherwise it is discarded and phase 2 is rebuilt from the disk
-        load — correctness never rides the estimate."""
+        speculative plan is kept iff its slice covers the batch's shards
+        and its exec width is at least ``ing.exec_width(n_records)``;
+        otherwise it is discarded and phase 2 is rebuilt — correctness
+        never rides the estimate, and neither does the width after a
+        batch-size jump (a 12k-record batch after a 1k one would
+        otherwise run 2 exec tasks on 4 slots)."""
         cfg = self.config
         covered = saved is not None and saved.covers(stats.shards)
         if cfg.load_batch_state is not None:
@@ -1084,7 +1100,11 @@ class Engine:
             )
             prior = _live(prior_all)
         self._mark("revive_plan")
-        if speculative is not None and covered:
+        if (
+            speculative is not None
+            and covered
+            and speculative.n_parts >= ing.exec_width(stats.n_records)
+        ):
             return speculative, prior_all
         return self._build_exec(ing, prior, stats.n_records, deadline), prior_all
 
@@ -1140,18 +1160,10 @@ class Engine:
             if maybe is not None:
                 revived = maybe
         self._mark("p2_revive_build")
-        # Size the chain shuffle to the task slots and the batch: one
-        # task per ~500 rows, never more tasks than slots. A Python task
-        # pays a fixed 65-160 ms from launch to its first row, so a
-        # stage wider than the slots pays it once per extra wave; on 4
-        # slots a 12k-record batch at 500 rows/task ran 25 exec tasks in
-        # 6-7 waves. Capped at the slots, the exec+save stage went from
-        # 33 tasks and 4.3 core-s to 12 tasks and 1.3 core-s per pass
-        # (exec width 4, 8 and 25: ~1.5, 1.7 and 2.5 s per pass). The
-        # rows/500 bound keeps a tiny batch on a wide cluster to a few
-        # tasks. The processAll finalise and the next batch's revive
-        # slice inherit this partitioning.
-        n_parts = max(1, min(ing.slots, -(-n_rec_est // 500)))
+        # Size the chain shuffle to the task slots and the batch (see
+        # _Ingested.exec_width). The processAll finalise and the next
+        # batch's revive slice inherit this partitioning.
+        n_parts = ing.exec_width(n_rec_est)
         if cfg.sequencing_required:
             # co-locate each chain, order within partition by THE
             # shared comparator (sequencing.chain_order_columns — the

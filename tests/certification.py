@@ -1,14 +1,15 @@
 """Certification ledger: machine-checked tracking of driver evidence.
 
-The driver's CORRECTNESS file records only the FIRST 50 registered queries
-per round; the other ~39 ride evidence from the round they were last
-inside the window. That is only sound while their bodies are unchanged —
-r3 certified this on the honor system ("judge-verified diff"). This module
+The driver's CORRECTNESS file records only the first 50 registered queries
+per round, which ``plans.DRIVER_WINDOW`` names; every other query rides
+evidence from the round it was last inside the window. That is only sound
+while their bodies are unchanged — r3 certified this on the honor system
+("judge-verified diff"). This module
 makes it mechanical: ``certification_manifest.json`` records, per query,
 the round of its last green driver row and a content hash of its plan fn
 source + oracle SQL at that time. The gate test fails any query whose
-hash drifted from its certified hash while sitting OUTSIDE the 50-row
-window — stale evidence can no longer be claimed silently.
+hash drifted from its certified hash while sitting OUTSIDE
+``DRIVER_WINDOW`` — stale evidence can no longer be claimed silently.
 
 Regenerate after a driver round lands (reads CORRECTNESS_r*.json):
 
@@ -28,7 +29,8 @@ REPO = Path(__file__).resolve().parent.parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 MANIFEST = Path(__file__).resolve().parent / "certification_manifest.json"
-DRIVER_WINDOW = 50
+
+from kinesis_stream_consumer_spark.plans import DRIVER_WINDOW  # noqa: E402
 
 
 def query_hash(spec) -> str:
@@ -64,10 +66,9 @@ def stale_out_of_window() -> list[str]:
     never had) certified driver evidence. Must be empty."""
     manifest = load_manifest()
     hashes = current_hashes()
-    order = registration_order()
     bad = []
-    for pos, name in enumerate(order):
-        if pos < DRIVER_WINDOW:
+    for name in registration_order():
+        if name in DRIVER_WINDOW:
             continue  # will be (re)certified by the upcoming driver run
         ent = manifest.get(name)
         if ent is None or ent["hash"] != hashes[name]:
@@ -146,6 +147,6 @@ if __name__ == "__main__":
     else:
         bad = stale_out_of_window()
         order = registration_order()
-        print(f"{len(order)} registered; window = first {DRIVER_WINDOW}")
+        print(f"{len(order)} registered; window = {len(DRIVER_WINDOW)} names")
         print(f"stale out-of-window: {bad or 'none'}")
         sys.exit(1 if bad else 0)

@@ -84,12 +84,14 @@ def main():
             failures.append(name)
     print(f"\n{len(failures)} failures: {failures}")
     # The driver's CORRECTNESS file records only the first 50 registered
-    # queries — surface the cut so a misplaced new query is caught here,
-    # not in the next round's verdict.
+    # queries, the ones plans.DRIVER_WINDOW lists — surface the cut.
+    from kinesis_stream_consumer_spark.plans import DRIVER_WINDOW
+
     names = list(qs)
-    print(f"driver window (first 50 of {len(names)}): last in = {names[49]!r}")
-    if len(names) > 50:
-        print(f"outside window ({len(names) - 50}): {names[50:]}")
+    w = len(DRIVER_WINDOW)
+    print(f"driver window (first {w} of {len(names)}): last in = {names[w - 1]!r}")
+    if len(names) > w:
+        print(f"outside window ({len(names) - w}): {names[w:]}")
     sys.exit(1 if failures else 0)
 
 

@@ -1,10 +1,11 @@
 """Gate: no query may ride stale driver evidence (VERDICT r3 #2).
 
-The driver certifies only the first 50 registered queries per round. Any
-query outside that window must be byte-equivalent (fn source + oracle,
-whitespace-insensitive) to the version last certified green by a driver
-round, as recorded in certification_manifest.json. Changing an
-out-of-window query without moving it into the window fails here, not in
+The driver certifies only the first 50 registered queries per round, the
+ones ``plans.DRIVER_WINDOW`` lists. Any query outside that window must be
+byte-equivalent (fn source + oracle, whitespace-insensitive) to the
+version last certified green by a driver round, as recorded in
+certification_manifest.json. Changing an
+out-of-window query without adding it to DRIVER_WINDOW fails here, not in
 the next round's verdict.
 """
 
@@ -23,11 +24,10 @@ def test_no_stale_evidence_outside_driver_window():
     bad = stale_out_of_window()
     assert not bad, (
         f"queries changed (or never certified) but OUTSIDE the driver's "
-        f"first-{DRIVER_WINDOW} window — their old driver evidence is stale: "
-        f"{bad}. Move them into the first {DRIVER_WINDOW} registered (displace "
-        f"only unchanged, previously-green queries), or revert the change, "
-        f"then regenerate via `python tests/certification.py update` after "
-        f"the next driver round."
+        f"window — their old driver evidence is stale: {bad}. Add them to "
+        f"plans.DRIVER_WINDOW (displace only unchanged, previously-green "
+        f"queries), or revert the change, then regenerate via "
+        f"`python tests/certification.py update` after the next driver round."
     )
 
 
@@ -40,11 +40,26 @@ def test_manifest_covers_registry():
     dangling = sorted(set(manifest) - names)
     assert not dangling, f"manifest entries for unregistered queries: {dangling}"
     uncertified = [n for n in order if n not in manifest]
-    in_window = set(order[:DRIVER_WINDOW])
+    in_window = set(DRIVER_WINDOW)
     missing = [n for n in uncertified if n not in in_window]
     assert not missing, (
         f"queries with NO driver evidence outside the window: {missing}"
     )
+
+
+def test_driver_window_is_the_registry_head():
+    """plans.DRIVER_WINDOW is the one definition of what the driver checks:
+    50 distinct registered names, and both the registry and the driver
+    entry point list exactly those first, in that order."""
+    import __spark_entry__
+
+    from kinesis_stream_consumer_spark.plans import QUERIES
+
+    assert len(DRIVER_WINDOW) == 50
+    assert len(set(DRIVER_WINDOW)) == len(DRIVER_WINDOW)
+    assert set(DRIVER_WINDOW) <= set(QUERIES)
+    assert list(QUERIES)[:50] == list(DRIVER_WINDOW)
+    assert list(__spark_entry__.queries())[:50] == list(DRIVER_WINDOW)
 
 
 def test_hashes_are_stable_across_import():
@@ -83,9 +98,8 @@ def test_update_refuses_dirty_source_tree(tmp_path, monkeypatch):
 def test_duplicate_registration_is_hard_error():
     """register() must refuse a name collision (VERDICT r9 #2).
 
-    stable.py parks certified blocks and registers LAST, so a silent
-    overwrite would make the driver check one body while the ledger
-    hash-holds another. The r9 text_ngram_novelty collision was caught
+    A silent overwrite would make the driver check one body while the
+    ledger hash-holds another. The r9 text_ngram_novelty collision was caught
     only by grep; this pins the loud-failure contract.
     """
     import pytest

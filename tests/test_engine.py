@@ -1155,22 +1155,26 @@ def test_exec_width_is_the_task_slots(spark, tmp_path):
     """A batch of more than 500 rows per task slot runs its exec stage at
     exactly the slots, defaultParallelism capped by the shuffle width: a
     Python stage wider than the slots pays its per-task launch cost again
-    for every extra wave. Holds for the first batch's estimate and for
-    the steady-state one (the previous batch's count)."""
+    for every extra wave. Holds for the first batch's estimate, for the
+    steady-state one (the previous batch's count) and right after a jump
+    from a small batch, whose count would size it at 1 task. One shard,
+    so the small batch's saved state covers the large batch and the
+    speculative plan is a candidate on every batch."""
     from kinesis_stream_consumer_spark.plans.queries import _t
 
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     slots = min(width, spark.sparkContext.defaultParallelism)
     n = 500 * (slots + 1)
     assert n <= 10_000, "sf0.01 holds 10k events"
-    recs = events_as_kinesis_records(
-        _t(spark, SF_CORRECT, "events").where(F.col("event_id") < n)
-    )
+    events = _t(spark, SF_CORRECT, "events")
+    large = events_as_kinesis_records(events.where(F.col("event_id") < n), n_shards=1)
+    small = events_as_kinesis_records(events.where(F.col("event_id") < 10), n_shards=1)
     eng = make_engine(spark, tmp_path, one_defs=[TaskDef("noop", noop)])
-    for batch_id in (0, 1):
+    for batch_id, recs, size in ((0, large, n), (1, large, n), (2, small, 10), (3, large, n)):
         res = eng.process_batch(recs, batch_id)
-        assert res.messages == n and res.fully_finalised == n
-        assert res.exec_partitions == slots, (res.exec_partitions, slots)
+        assert res.messages == size and res.fully_finalised == size
+        if recs is large:
+            assert res.exec_partitions == slots, (batch_id, res.exec_partitions, slots)
 
 
 def test_sample_sketch_register_bounded_and_compaction_immortal(spark, tmp_path):

@@ -169,15 +169,15 @@ def test_no_unguarded_broadcast_of_row_scaled_tables():
     # a global allowlist would silently exempt any future row-scaled
     # frame that reuses the name (e.g. "cents" is also a money-column
     # name in agg_kruskal_wallis and events_cohort_ltv).
-    # cents @ r12.py: the TRAINED model's literal centroid/codebook frame
-    #     (k x dim rows for k-means, m*k*sub_dim for PQ) returned by
+    # cents @ similarity.py: the TRAINED model's literal centroid/codebook
+    #     frame (k x dim rows for k-means, m*k*sub_dim for PQ) returned by
     #     _coarse_model/_pq_model — model-sized by construction (the
     #     driver-side Lloyd trains on the bounded id-modulus sample and
     #     ships literals), never row-scaled; used by the silhouette/
     #     distortion eval rows exactly like the serving queries broadcast
     #     it inside operators/similarity.py
     allowed_scoped = {
-        "cents": {"r12.py"},
+        "cents": {"similarity.py"},
     }
     offenders = []
     for path in Path(plans_pkg.__path__[0]).glob("*.py"):

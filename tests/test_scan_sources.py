@@ -171,7 +171,7 @@ def test_json_schema_evolution_unifies_and_nulls_v1(spark):
     schema versions' columns, v1 rows surface NULL for the v2-only `day`
     column, and no rows are lost across the two writes."""
     from kinesis_stream_consumer_spark.plans.queries import QUERIES, _t
-    from kinesis_stream_consumer_spark.plans.r10 import _JSON_EVO_CACHE
+    from kinesis_stream_consumer_spark.plans.relational import _JSON_EVO_CACHE
 
     QUERIES["scan_json_schema_evolution"].fn(spark, SF_CORRECT).collect()
     path = _JSON_EVO_CACHE[(spark.sparkContext.applicationId, SF_CORRECT)]

@@ -170,7 +170,7 @@ def test_boilerplate_segments_shuffles_are_slim(spark):
     """text_boilerplate_segments: the distinct-count aggregate and the
     join back ride (seg, doc) rows — bounded by segment count, and no
     shuffle row ever carries document text (segments are 5 words)."""
-    from kinesis_stream_consumer_spark.plans.stable import (
+    from kinesis_stream_consumer_spark.plans.text import (
         text_boilerplate_segments,
     )
 
@@ -191,7 +191,7 @@ def test_lexical_sparse_join_is_df_pruned(spark):
     the df cap — every surviving term has <= max(2, N/20) postings, so
     per-term join fan-out is capped (the inverted-index analogue of the
     LSH candidate bound), and no common term floods the pair stage."""
-    from kinesis_stream_consumer_spark.plans.stable import (
+    from kinesis_stream_consumer_spark.plans.similarity import (
         sim_lexical_sparse_topk,
     )
     from kinesis_stream_consumer_spark.plans.queries import _table_row_count
@@ -228,7 +228,7 @@ def test_dup_ngram_coverage_shuffles_slim_hashes(spark):
     """text_dup_ngram_coverage: every aggregate/join keys on the 56-bit
     gram hash or the doc id — shuffle rows are (long, long)-ish, never
     shingle strings or document text."""
-    from kinesis_stream_consumer_spark.plans.stable import (
+    from kinesis_stream_consumer_spark.plans.text import (
         text_dup_ngram_coverage,
     )
 
@@ -456,7 +456,7 @@ def test_winnowing_pair_stage_is_df_capped(spark):
     from kinesis_stream_consumer_spark.operators.text import (
         winnowing_fingerprints,
     )
-    from kinesis_stream_consumer_spark.plans.stable import (
+    from kinesis_stream_consumer_spark.plans.text import (
         _WINNOW_DF,
         _WINNOW_K,
         _WINNOW_W,
@@ -1761,7 +1761,7 @@ def test_gapped_sequence_patterns_shuffles_are_vocab_bounded(spark):
     most users x vocab² per-user pattern rows and the final pattern
     exchange at most vocab² — never raw skip-gram occurrences."""
     from kinesis_stream_consumer_spark.plans.queries import QUERIES
-    from kinesis_stream_consumer_spark.plans.r12 import _GAP_W
+    from kinesis_stream_consumer_spark.plans.events import _GAP_W
 
     events = spark.read.parquet(f"{SF_CORRECT}/events.parquet")
     n_events = events.count()
@@ -1817,7 +1817,7 @@ def test_hodges_lehmann_pairs_are_sample_bounded(spark):
     from pyspark.sql import functions as F
 
     from kinesis_stream_consumer_spark.plans.queries import QUERIES
-    from kinesis_stream_consumer_spark.plans.r12 import _HL_SAMPLE_TARGET
+    from kinesis_stream_consumer_spark.plans.aggregates import _HL_SAMPLE_TARGET
 
     events = spark.read.parquet(f"{SF_CORRECT}/events.parquet")
     n_events = events.count()
@@ -2071,7 +2071,7 @@ def test_ljung_box_shuffles_are_days_bounded(spark):
         session_shuffle_records,
     )
     from kinesis_stream_consumer_spark.plans.queries import QUERIES
-    from kinesis_stream_consumer_spark.plans.r12 import _LB_LAGS
+    from kinesis_stream_consumer_spark.plans.events import _LB_LAGS
 
     events = spark.read.parquet(f"{SF_CORRECT}/events.parquet")
     n_events = events.count()

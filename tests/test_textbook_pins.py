@@ -28,7 +28,7 @@ def _half_up(num: int, den: int) -> int:
 
 
 def test_mann_whitney_grid_recurrence_with_ties():
-    """agg_mann_whitney (plans/r11.py): u1_x2 = sum over the value grid
+    """agg_mann_whitney (plans/aggregates.py): u1_x2 = sum over the value grid
     of c1*(2*(less1+less2) + (c1+c2+1)) - n1*(n1+1), effect_bp =
     half-up(10000*U1/(n1*n2)). Hand example WITH TIES: X=[1,2,2],
     Y=[2,3] -> average ranks 1, 3,3 | 3, 5 -> R1=7, U1 = R1 - n1(n1+1)/2
@@ -51,7 +51,7 @@ def test_mann_whitney_grid_recurrence_with_ties():
 
 
 def test_kendall_tau_b_pair_recurrence():
-    """ts_kendall_tau (plans/r11.py): tau_b = (C-D)/sqrt(n0*(n0-T)) with
+    """ts_kendall_tau (plans/events.py): tau_b = (C-D)/sqrt(n0*(n0-T)) with
     x distinct (days). Hand example y=[1,2,2,3,1] over x=1..5:
     C=5, D=3, T=2, tau_b = 2/sqrt(80) = 0.2236."""
     y = [1, 2, 2, 3, 1]
@@ -70,7 +70,7 @@ def test_kendall_tau_b_pair_recurrence():
 
 
 def test_spearman_bp_shift_recurrence():
-    """text_rank_correlation (plans/stable.py): spearman_bp =
+    """text_rank_correlation (plans/text.py): spearman_bp =
     (2*10000*(n(n^2-1) - 6*sum_d2) + n(n^2-1) + 40000*n(n^2-1))
     // (2*n(n^2-1)) - 20000. Perfectly reversed ranks (n=3, sum_d2=8)
     must give exactly -10000 bp (rho = -1)."""
@@ -96,7 +96,7 @@ def test_gini_rank_identity():
 
 
 def test_runs_expectation_milli():
-    """ts_runs_test (plans/r12.py): e_runs_milli = half-up(1000 *
+    """ts_runs_test (plans/events.py): e_runs_milli = half-up(1000 *
     (n + 2*n1*n2) / n). Textbook n1=5, n2=4: E[R] = 1 + 40/9 =
     5.4444 -> 5444 milli."""
     n1, n2 = 5, 4
@@ -105,7 +105,7 @@ def test_runs_expectation_milli():
 
 
 def test_turning_points_expectation_and_variance():
-    """ts_turning_points (plans/r12.py): E[T] = 2(n-2)/3,
+    """ts_turning_points (plans/events.py): E[T] = 2(n-2)/3,
     Var[T] = (16n-29)/90. Textbook n=10: E = 5.3333 -> 5333 milli,
     Var = 131/90 = 1.4556 -> 1456 milli."""
     n = 10
@@ -114,7 +114,7 @@ def test_turning_points_expectation_and_variance():
 
 
 def test_ljung_box_recurrence_matches_float_formula():
-    """ts_ljung_box (plans/r12.py): the per-lag half-up micro terms must
+    """ts_ljung_box (plans/events.py): the per-lag half-up micro terms must
     sum to 1e6 * Q for the textbook formula Q = n(n+2) * sum_k
     r_k^2/(n-k) within one micro per lag, on literal residuals."""
     dev = [3, -1, -4, 2, 0, 1, -2, 3, -2, 0]
@@ -133,7 +133,7 @@ def test_ljung_box_recurrence_matches_float_formula():
 
 
 def test_chi_square_known_2x2():
-    """agg_chi_square_independence (plans/r12.py): per-cell half-up
+    """agg_chi_square_independence (plans/aggregates.py): per-cell half-up
     micro terms on the classic 2x2 [[10,20],[30,40]]: chi^2 =
     0.79365..., Cramer's V = sqrt(chi2/N) = 0.0891."""
     cells = {("a", 1): 10, ("a", 2): 20, ("b", 1): 30, ("b", 2): 40}
@@ -155,7 +155,7 @@ def test_chi_square_known_2x2():
 
 
 def test_cohens_kappa_published_example():
-    """text_langid_kappa (plans/r14.py): shifted recurrence on the
+    """text_langid_kappa (plans/text.py): shifted recurrence on the
     standard worked example [[20,5],[10,15]]: p_o=0.7, p_e=0.5,
     kappa = 0.4 -> 400000 micro."""
     n, diag = 50, 35
@@ -171,14 +171,14 @@ def test_cohens_kappa_published_example():
 
 
 def test_mcnemar_known_discordants():
-    """text_langid_mcnemar (plans/r13.py): b=10, c=5 -> chi^2 = 25/15 =
+    """text_langid_mcnemar (plans/text.py): b=10, c=5 -> chi^2 = 25/15 =
     1.666667 -> 1666667 micro (half-up)."""
     b, c = 10, 5
     assert _half_up(1000000 * (b - c) * (b - c), b + c) == 1666667
 
 
 def test_simpson_lambda_micro():
-    """text_simpson_diversity (plans/r12.py): counts [2,2]: lambda =
+    """text_simpson_diversity (plans/text.py): counts [2,2]: lambda =
     (2+2)/(4*3) = 1/3 -> 333333 micro; inverse-Simpson = 3.0."""
     counts = [2, 2]
     n = sum(counts)
@@ -189,7 +189,7 @@ def test_simpson_lambda_micro():
 
 
 def test_hodges_lehmann_small_sample():
-    """agg_hodges_lehmann (plans/r12.py): sample [1,2,3] -> Walsh sums
+    """agg_hodges_lehmann (plans/aggregates.py): sample [1,2,3] -> Walsh sums
     [2,3,4,4,5,6], lower nearest-rank median (rank (6+1)//2 = 3) = 4,
     HL = 2.0 (the symmetric case where HL equals the median)."""
     vals = [1.0, 2.0, 3.0]
@@ -203,7 +203,7 @@ def test_hodges_lehmann_small_sample():
 
 
 def test_modularity_barbell_communities():
-    """graph_modularity (plans/r12.py): two triangles joined by one edge
+    """graph_modularity (plans/graph.py): two triangles joined by one edge
     (m=7), each triangle its own community: contribution = 3/7 -
     (7/14)^2 = 0.178571 each -> 178571 micro through the shift
     recurrence; Q = 2 * 0.178571 = 0.357142 (published barbell value)."""
@@ -220,7 +220,7 @@ def test_modularity_barbell_communities():
 
 
 def test_kruskal_wallis_coefficient_is_twelve():
-    """agg_kruskal_wallis (plans/r12.py): the t_nano term carries /4
+    """agg_kruskal_wallis (plans/aggregates.py): the t_nano term carries /4
     (2x-rank squares), so the statistic needs the textbook 12, NOT 3 —
     {1} vs {2,3}: H = 1.5 (the r12 review's example, kept here so the
     4x bug class cannot silently return)."""
@@ -245,7 +245,7 @@ def test_kruskal_wallis_coefficient_is_twelve():
 
 
 def test_friedman_perfect_agreement_identity():
-    """agg_friedman_test (plans/r14.py): doubled-rank integer form
+    """agg_friedman_test (plans/aggregates.py): doubled-rank integer form
     T1 = (k-1)(S' - n^2 k (k+1)^2)/(A' - n k (k+1)^2). Perfect agreement
     (every block ranks treatments identically, no ties) must give the
     published maximum Q = n(k-1), and a hand-ranked mixed case must give
@@ -282,7 +282,7 @@ def test_friedman_perfect_agreement_identity():
 
 
 def test_jonckheere_hand_counted_pairs():
-    """agg_jonckheere_trend (plans/r13.py): 2J counts 2 per strict
+    """agg_jonckheere_trend (plans/aggregates.py): 2J counts 2 per strict
     cross-group ascending pair and 1 per tie; 2E = (N^2 - Sum n_g^2)/2."""
 
     def j2_of(groups):  # groups: ordered list of value lists
@@ -303,7 +303,7 @@ def test_jonckheere_hand_counted_pairs():
 
 
 def test_rich_club_clique_plus_pendant():
-    """graph_rich_club (plans/r13.py): 4-clique {a,b,c,d} plus pendant
+    """graph_rich_club (plans/graph.py): 4-clique {a,b,c,d} plus pendant
     e-a. Nodes of degree > 1 are the clique; the 6 edges among them give
     phi(1) = 2*6/(4*3) = 1.0 exactly (the rich club is fully connected).
     phi(0) uses all 5 nodes and 7 edges: 2*7/(5*4) = 0.7."""
@@ -329,7 +329,7 @@ def test_rich_club_clique_plus_pendant():
 
 
 def test_kaplan_meier_hand_product():
-    """events_survival_km (plans/r14.py): the integer fold
+    """events_survival_km (plans/events.py): the integer fold
     S' = (2*S*(n-d) + n) div (2*n) must reproduce the hand-computed KM
     product with half-up rounding at each step. Classic small example:
     10 at risk, 2 die at t=2 (S = 0.8); 1 censored before t=4 leaves
@@ -346,7 +346,7 @@ def test_kaplan_meier_hand_product():
 
 
 def test_nelson_aalen_hand_sums():
-    """events_hazard_nelson_aalen (plans/r13.py): per-step half-up
+    """events_hazard_nelson_aalen (plans/events.py): per-step half-up
     h = (2e6*d + n) div (2n), cumulated exactly. Same hand example as
     the KM pin: (n=10,d=2) then (n=7,d=1)."""
     h1 = (2 * 10**6 * 2 + 10) // (2 * 10)
@@ -357,7 +357,7 @@ def test_nelson_aalen_hand_sums():
 
 
 def test_logrank_hand_example():
-    """events_survival_logrank (plans/r14.py): hand-derived two-group
+    """events_survival_logrank (plans/events.py): hand-derived two-group
     example with censoring — group A: death t=3, censored t=5; group B:
     deaths t=2 and t=4. Step terms: e1 = 1/2 + 2/3 + 1/2, v = 1/4 + 2/9
     + 1/4, O1 = 1; chi2 = (O1-E1)^2/V = 0.615385 within per-step
@@ -392,7 +392,7 @@ def test_logrank_hand_example():
 
 
 def test_rmst_hand_integration():
-    """events_survival_rmst (plans/r14.py): area under the KM step
+    """events_survival_rmst (plans/events.py): area under the KM step
     function. Reusing the KM pin example (S: 0.8 at t=2, 0.685714 at
     t=4) with horizon tau=6: RMST = 1*2 + 0.8*2 + 0.685714*2 =
     4.971428 days; median never crosses 0.5 -> -1 sentinel."""
@@ -413,7 +413,7 @@ def test_rmst_hand_integration():
 
 
 def test_stratified_logrank_two_identical_strata():
-    """events_survival_logrank_stratified (plans/r14.py): two identical
+    """events_survival_logrank_stratified (plans/events.py): two identical
     strata, each the unstratified hand example — the summed integers
     must double, and chi2 = (2*delta)^2/(2*V) must stay within per-step
     half-up slack of the float reference 16/13 = 1.230769 (two copies
@@ -437,7 +437,7 @@ def test_stratified_logrank_two_identical_strata():
 
 
 def test_hazard_ratio_mh_hand_example():
-    """events_hazard_ratio_mh (plans/r14.py): on the log-rank hand
+    """events_hazard_ratio_mh (plans/events.py): on the log-rank hand
     example, HR_MH = Sum[d1*n0/n] / Sum[d0*n1/n] = (1/3)/(1/2 + 1/2) =
     1/3, and Peto ln(HR) ~ (O1-E1)/V = (1 - 5/3)/(13/18) = -0.923077
     — both reproduced by the integer recurrences within per-step
@@ -462,7 +462,7 @@ def test_hazard_ratio_mh_hand_example():
 
 
 def test_page_trend_perfect_and_flat_orderings():
-    """agg_page_trend (plans/r14.py): a single block with strictly
+    """agg_page_trend (plans/aggregates.py): a single block with strictly
     increasing weekday counts gives the perfect-ordering identity
     L = Sum j^2 = 140 (doubled: 280); an all-tied block gives exactly
     the null expectation E[2L] = k(k+1)^2/2 = 224."""
@@ -476,7 +476,7 @@ def test_page_trend_perfect_and_flat_orderings():
 
 
 def test_cochran_q_hand_matrix():
-    """agg_cochran_q (plans/r14.py): the 4-block 3-treatment presence
+    """agg_cochran_q (plans/aggregates.py): the 4-block 3-treatment presence
     matrix [[1,1,0],[1,1,0],[1,1,1],[0,1,0]] has C=(3,4,1), R=(2,2,3,1),
     N=8: Q = (k-1)(k*SumC^2 - N^2)/(kN - SumR^2) = 2*14/6 = 4.666667."""
     mat = [(1, 1, 0), (1, 1, 0), (1, 1, 1), (0, 1, 0)]
@@ -491,7 +491,7 @@ def test_cochran_q_hand_matrix():
 
 
 def test_gamma_hand_pairs():
-    """agg_goodman_kruskal_gamma (plans/r14.py): g1=[1,2] vs g2=[2,3]
+    """agg_goodman_kruskal_gamma (plans/aggregates.py): g1=[1,2] vs g2=[2,3]
     has C=3, D=0, one tie excluded -> gamma = +1; g1=[3] vs g2=[1] has
     D=1 -> gamma = -1 (exercises the signed positivity shift); g1=[1,3]
     vs g2=[2] balances C=D=1 -> gamma = 0."""
@@ -509,7 +509,7 @@ def test_gamma_hand_pairs():
 
 
 def test_holt_linear_hand_recurrences():
-    """ts_holt_linear (plans/r14.py): alpha=1/5, beta=1/10 integer
+    """ts_holt_linear (plans/events.py): alpha=1/5, beta=1/10 integer
     recurrences. Perfect-trend series [10,12,14,16] must stay ON trend
     (level = y, trend = 2 forever — Holt is exact on linear data); a
     falling series exercises SIGNED floor-half-up, where Spark's
@@ -541,7 +541,7 @@ def test_holt_linear_hand_recurrences():
 
 
 def test_mean_excess_hand_curve():
-    """events_mean_excess_curve (plans/r14.py): values [1,2,3,4] give
+    """events_mean_excess_curve (plans/events.py): values [1,2,3,4] give
     e(1) = mean(1,2,3) = 2, e(2) = mean(1,2) = 1.5, e(3) = 1; u=4 has
     no exceedances and is filtered."""
     ys = [1, 2, 3, 4]
@@ -555,7 +555,7 @@ def test_mean_excess_hand_curve():
 
 
 def test_recurrent_mcf_hand_windows():
-    """events_recurrent_mcf (plans/r14.py): two users observed over
+    """events_recurrent_mcf (plans/events.py): two users observed over
     [0,10] and [5,10]; purchases on day 1 (1 event, n_risk=1) and day 6
     (2 events, n_risk=2): rates 1/1 and 2/2, MCF = 2.0 exactly —
     staggered entry changes the denominator day by day."""
@@ -581,7 +581,7 @@ def test_recurrent_mcf_hand_windows():
 
 
 def test_ansari_bradley_hand_examples():
-    """agg_ansari_bradley (plans/r14.py): classic no-ties example A =
+    """agg_ansari_bradley (plans/aggregates.py): classic no-ties example A =
     {1,4}, B = {2,3} — scores (1,2,2,1), group-A MEAN score = 2/2 = 1
     (A holds the extremes), E[mean] = T/N = 6/4 = 1.5, mean-E < 0 flags
     A as the dispersed group. Tied example A = {1,2}, B = {2,3}: the

@@ -106,7 +106,7 @@ def test_kendall_tau_matches_python_reference(spark):
 def test_theil_sen_matches_python_reference(spark):
     """All pairwise milli-slopes with the positivity-shift half-up
     division, lower median by value order."""
-    from kinesis_stream_consumer_spark.plans.r11 import _TS_SHIFT
+    from kinesis_stream_consumer_spark.plans.events import _TS_SHIFT
 
     want = {}
     for et, cs in _daily_counts().items():
@@ -163,7 +163,7 @@ def test_budget_waterfill_matches_python_reference(spark):
     remainder with largest-remainder units."""
     import re
 
-    from kinesis_stream_consumer_spark.plans.r11 import _WF_BUDGET
+    from kinesis_stream_consumer_spark.plans.curation import _WF_BUDGET
 
     docs = _tbl("documents")
     avail: Counter = Counter()

@@ -24,7 +24,7 @@ def test_gapped_sequence_patterns_match_python_reference(spark):
     emit (a, b) for each b within the next W events of a, tally support
     (distinct users), occurrences, gap-1 subset, and half-up mean gap in
     centi-units with the query's exact tiebreak."""
-    from kinesis_stream_consumer_spark.plans.r12 import _GAP_W
+    from kinesis_stream_consumer_spark.plans.events import _GAP_W
 
     ev = _tbl("events")
     chains: dict = defaultdict(list)
@@ -121,7 +121,7 @@ def test_hodges_lehmann_matches_python_reference(spark):
     """Walsh-average pseudomedian recomputed by materializing every i<=j
     pair of the SAME deterministic sample (modulus from the corpus row
     count) and taking the lower nearest-rank median of the pair SUMS."""
-    from kinesis_stream_consumer_spark.plans.r12 import _HL_SAMPLE_TARGET
+    from kinesis_stream_consumer_spark.plans.aggregates import _HL_SAMPLE_TARGET
 
     ev = _tbl("events")
     n_total = len(ev["event_id"])
@@ -549,7 +549,7 @@ def test_ljung_box_matches_python_bigint_reference(spark):
     """Q recomputed with Python bigints: integer floor-demeaned daily
     cents, exact lag products, per-lag half-up micro terms — no width
     limits, so the HUGEINT/DECIMAL recurrence is pinned end to end."""
-    from kinesis_stream_consumer_spark.plans.r12 import _LB_LAGS
+    from kinesis_stream_consumer_spark.plans.events import _LB_LAGS
 
     ev = _tbl("events")
     daily: Counter = Counter()

@@ -248,7 +248,7 @@ def test_survival_logrank_matches_python_reference(spark):
         if n > 1:
             # two-stage half-up recurrence (VERDICT r13 #2): divide
             # before the n^4 product accumulates — must mirror the
-            # documented recurrence in plans/r14.py exactly
+            # documented recurrence in plans/events.py exactly
             q1 = (2 * 10**6 * n1 * (n - n1) + n) // (2 * n)
             v += (2 * d * q1 * (n - d) + n * (n - 1)) // (
                 2 * n * (n - 1)

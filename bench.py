@@ -1,12 +1,16 @@
 #!/usr/bin/env python
-"""Benchmark headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""The three end-to-end numbers at $SPARK_GRAFT_SF_DIR (default sf0.1):
+the headline query total, engine msg/s and sustained streaming msg/s.
 
 Prints TWO JSON lines — the fully-attributed record first, then a compact
 summary LAST so a bounded tail capture always ends with a parseable
 record: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": sf, ...}. The full detail is also written
-to BENCH_DETAIL.json. Each query is fully materialized (count + collect
-of the limited result) so lazy plans can't cheat.
+"queries": {name: sec}, "sf": sf, "engine_msgs_per_sec": ...,
+"streaming_msgs_per_sec": ..., ...}. The full detail is also written
+to BENCH_DETAIL.json. Each query is fully materialized (count) so lazy
+plans can't cheat. These are wall-clock numbers of one session; a
+performance A/B is decided on perfbench's interleaved runs
+(``python3 perfbench/run.py``, see perfbench/README.md).
 """
 
 from __future__ import annotations
@@ -21,22 +25,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Headline-subset policy (VERDICT r8 #4/#7): the `value` total covers the
-# CURRENT headline list, so its membership changes whenever entries are
-# added. Cross-round comparisons therefore NEVER use `value` vs a prior
-# round's `value`; they use the frozen prior-round subset totals below
-# (`value_r7_subset`, `value_r8_subset`, ...). Rule: when a round adds
-# headline entries, freeze the previous round's exact membership as
-# R{N}_SET and emit `value_r{N}_subset` forever after — BENCH_rM vs
-# BENCH_rM-1 is then a mechanical same-set comparison.
-#
-# HEADLINE CAP (VERDICT r10 #4): the headline is FROZEN at the 29 entries
-# below. New rounds do not append; a new marquee entry may only ROTATE IN by
-# replacing a cheap certified entry (keeping the count at 29), and the
-# replaced entry's membership stays frozen in the R{N}_SET it belongs to so
-# the cross-round subset chain never breaks. The ever-growing-total failure
-# mode this closes: `value` summing 25 -> 27 -> 29 -> ... entries reads as a
-# regression while actually measuring more work.
+# The headline is capped at the 29 entries below and `value` sums exactly
+# them. A new marquee entry may only rotate IN by replacing a cheap
+# certified entry, so the count stays 29. `value` is a same-session
+# number: wall clock is never compared across sessions, and every A/B
+# is decided on perfbench's interleaved runs (perfbench/README.md).
 #
 # Representative spread: scan-agg, broadcast join, window, stream parity,
 # dedup (hash + LSH), text, similarity.
@@ -50,70 +43,26 @@ HEADLINE = [
     "dedup_exact",
     "dedup_minhash_lsh",
     "dedup_embedding_cosine",
-    # text_quality rotated OUT in r14 (see ROTATED_OUT below; text
-    # representation stays via llm_prep_pipeline — which contains the
-    # quality-scoring stage — and text_jsd_source_divergence)
-    "llm_prep_pipeline",
+    "llm_prep_pipeline",  # text, with the quality-scoring stage
     "sim_topk_bruteforce",
     "sim_kmeans_cells",
     "sim_pq_adc_topk",
     "sim_ivfpq_topk",
     "dedup_semantic",
     "curation_contamination",
-    # scalar_datetime_json rotated OUT in r12 (see ROTATED_OUT below)
-    # streaming_tumbling_window rotated OUT in r13 (see ROTATED_OUT below;
-    # streaming-window representation stays via streaming_session_window)
     "streaming_session_window",
-    # r8 marquee additions: sampling sketch, embedding decontamination,
-    # KMV set algebra (new keys — prior-round totals remain comparable by
-    # summing their shared subset)
     "agg_reservoir_sample",
     "curation_contamination_embedding",
     "agg_kmv_set_ops",
-    # r8 continuation marquee: exact-recall set-similarity join and
-    # degree-oriented triangle counting (same subset rule applies)
     "dedup_setsim_prefix",
     "graph_triangle_counts",
-    # r9 marquee: the deterministic frequent-items summary and the
-    # deterministic synchronous LPA (per the frozen-subset policy above,
-    # cross-round r8 comparisons use value_r8_subset, which excludes
-    # these)
     "agg_topk_misra_gries",
     "graph_label_propagation",
-    # r10 marquee: teleport-vector PPR over the shared co-purchase edge
-    # frame, and the per-source unigram JSD (tokenize-once, three reads
-    # of one checkpointed term frame); r9<->r10 comparisons use
-    # value_r9_subset below
     "graph_personalized_pagerank",
     "text_jsd_source_divergence",
-    # r12 ROTATION (first use of the cap policy): the r11 marquee — the
-    # sequential-pattern miner (one per-user window exchange feeding both
-    # lookaheads) — rotates IN; scalar_datetime_json (a cheap r2-certified
-    # scan+scalar entry whose representative spread q1/q3 already cover)
-    # rotates OUT. Count stays 29.
     "events_sequence_patterns",
-    # r13 ROTATION: the Kaplan-Meier survival curve — the round's marquee
-    # (integer product fold over the packed day frame; Spark F.aggregate /
-    # DuckDB list_reduce) — rotates IN; streaming_tumbling_window (a cheap
-    # certified streaming-window entry whose spread streaming_session_window
-    # already covers) rotates OUT. Count stays 29.
     "events_survival_km",
-    # r14 ROTATION: the stratified log-rank — the round's marquee (the
-    # full survival machinery per stratum: 7 x 2 x days risk grids,
-    # two-stage integer variance, one corpus-touching per-user combine)
-    # — rotates IN; text_quality rotates OUT per the note above. Count
-    # stays 29.
     "events_survival_logrank_stratified",
-]
-
-# Rotated-out entries are STILL TIMED (not part of `value`): the frozen
-# R{N}_SET subtotals below sum over `timings`, so dropping a rotated
-# entry from measurement would silently shrink every prior-round subset
-# it belongs to — the cross-round chain would read as a fake speedup.
-ROTATED_OUT = [
-    "scalar_datetime_json",  # r12: member of R8/R9/R10 sets
-    "streaming_tumbling_window",  # r13: member of R7/R8/R9/R10 sets
-    "text_quality",  # r14: member of R7/R8/R9/R10 sets
 ]
 
 
@@ -137,7 +86,7 @@ def wait_for_quiet_box(threshold: float = 1.0, cap_sec: float = 120.0) -> tuple[
 
 def measure(loadavg: float, load_contaminated: bool) -> dict:
     """One full measurement pass: fresh SparkSession in, session stopped
-    on exit so a retry (or the A/B arms) starts from a cold JVM."""
+    on exit so a retry starts from a cold JVM."""
     from kinesis_stream_consumer_spark.plans import QUERIES
     from kinesis_stream_consumer_spark.session import get_spark
 
@@ -162,7 +111,7 @@ def measure(loadavg: float, load_contaminated: bool) -> dict:
     }
     timings: dict[str, float] = {}
     index_timing: dict[str, dict[str, float]] = {}
-    for name in HEADLINE + ROTATED_OUT:
+    for name in HEADLINE:
         spec = QUERIES[name]
         t0 = time.perf_counter()
         df = spec.fn(spark, SF_DIR)
@@ -178,20 +127,13 @@ def measure(loadavg: float, load_contaminated: bool) -> dict:
                 "query": round(q_sec, 3),
             }
 
-    # train = first invocation − second invocation, so it includes the
-    # first run's one-off Catalyst/codegen of the query plan (~0.5-1.5 s
-    # for a new plan shape) ON TOP of the model build; model_build_marks
-    # below isolates the true build phases — the difference between
-    # index_timing.train and the sum of that entry's build marks is
-    # first-run plan compilation, not model work.
-    # Per-phase attribution of the trained-index "train" marks (VERDICT r6
-    # #1): every model-cache MISS in the plans layer stamps its wall time
-    # into BUILD_MARKS, so a regression in one entry's train mark is
-    # traceable to the phase that moved (Lloyd train, fused encode+pack,
-    # model-row collects, IVF-PQ index build). A nested mark (e.g.
-    # ivfpq_build when models were cold) would include its children; in
-    # this bench the earlier entries build the models first, so each mark
-    # is the marginal cost of its own phase.
+    # train = first invocation − second invocation, so it also holds the
+    # first run's one-off plan compilation (~0.5-1.5 s for a new plan
+    # shape). Every model-cache MISS in the plans layer stamps its wall
+    # time into BUILD_MARKS (Lloyd train, fused encode+pack, model-row
+    # collects, IVF-PQ index build); the earlier entries build the models
+    # first, so each mark is the marginal cost of its own phase, and
+    # train minus an entry's marks is plan compilation, not model work.
     from kinesis_stream_consumer_spark.plans.llm_pipeline import BUILD_MARKS
 
     model_build_marks = dict(BUILD_MARKS)
@@ -212,51 +154,38 @@ def measure(loadavg: float, load_contaminated: bool) -> dict:
         if message["k2"] == "error":
             raise TaskRejectedError("error events rejected")
 
+    def engine(cfg: EngineConfig, root: str) -> Engine:
+        return Engine(
+            spark, cfg, f"{root}/state", f"{root}/drq", f"{root}/dmq",
+            [TaskDef("validate", validate)],
+        )
+
     # rebalance: ingest (base64+JSON parse+md5) is CPU-bound and fuses onto
     # the scan; the engine path measures faster with the fan-out.
     ev = _t(spark, SF_DIR, "events", rebalance=True).where(F.col("event_id") < 20000)
     recs = events_as_kinesis_records(ev).localCheckpoint(eager=True)
     n_msgs = recs.count()
-    tmp = tempfile.mkdtemp(prefix="ksc-bench-")
-    eng = Engine(
-        spark,
-        EngineConfig(
-            sequencing_per_key=True,
-            key_property_names=["k1", "k2"],
-            id_property_names=["id1"],
-            seq_no_property_names=["n1", "n2"],
-        ),
-        f"{tmp}/state",
-        f"{tmp}/drq",
-        f"{tmp}/dmq",
-        [TaskDef("validate", validate)],
+    cfg = EngineConfig(
+        sequencing_per_key=True,
+        key_property_names=["k1", "k2"],
+        id_property_names=["id1"],
+        seq_no_property_names=["n1", "n2"],
     )
-    # warm the engine path too (codegen + Arrow/task-runner spin-up), same
-    # policy as the query warm-up above: a throwaway batch into its own
-    # state dir, then time the real one. The warm batch is FULL-SIZE: a
-    # small one only spins up ~4 Python workers, so the timed batch's
-    # 32-task exec stage would pay ~28 cold worker forks + pandas imports
-    # (~2-4 s of spin-up, measured r5) — exactly the one-off cost the
-    # warm-up exists to exclude from the steady-state throughput number.
-    warm_tmp = tempfile.mkdtemp(prefix="ksc-bench-warm-")
-    Engine(
-        spark,
-        eng.config,
-        f"{warm_tmp}/state",
-        f"{warm_tmp}/drq",
-        f"{warm_tmp}/dmq",
-        [TaskDef("validate", validate)],
-    ).process_batch(recs, 0)
-
+    # warm the engine path too (codegen + Arrow/task-runner spin-up) with
+    # a throwaway batch into its own state dir, then time the real one.
+    # The warm batch is FULL-SIZE: a small one spins up only a few Python
+    # workers, and the timed batch would pay the rest of the cold worker
+    # forks + pandas imports (~2-4 s, measured r5).
+    engine(cfg, tempfile.mkdtemp(prefix="ksc-bench-warm-")).process_batch(recs, 0)
+    eng = engine(cfg, tempfile.mkdtemp(prefix="ksc-bench-"))
     t0 = time.perf_counter()
     eng.process_batch(recs, 1)
     engine_sec = round(time.perf_counter() - t0, 3)
 
     # sustained STREAMING throughput: the same lifecycle attached via
     # writeStream.foreachBatch, 4 micro-batches of 5k messages each
-    # (availableNow) through a fresh checkpoint — measures the steady
-    # micro-batch cadence including Spark's streaming machinery, not just
-    # one batch call
+    # (availableNow) through a fresh checkpoint — the steady micro-batch
+    # cadence including Spark's streaming machinery
     from kinesis_stream_consumer_spark.sources import stream_records
 
     sdir = tempfile.mkdtemp(prefix="ksc-bench-stream-")
@@ -265,161 +194,45 @@ def measure(loadavg: float, load_contaminated: bool) -> dict:
             (F.col("eventID").isNotNull())
             & (F.crc32(F.col("eventID").cast("binary")) % 4 == i)
         ).coalesce(1).write.mode("append").json(f"{sdir}/in")
-    # warm the STREAMING machinery too (query planning for the streaming
-    # sink, checkpoint log setup, state-store first-write) with a
-    # throwaway stream — the timed section then measures steady-state
-    # micro-batch cadence, not one-off spin-up. One full-size (5k)
-    # micro-batch for the same reason as the engine warm-up: it must
-    # exercise the exec stage at its real width so the Python worker pool
-    # is warm when the timed stream starts.
     # Split the ~3 MB micro-batch JSON files into ~12 scan partitions so
-    # the CPU-bound ingest fuses straight onto the scan at fan width — the
-    # engine skips its fan-out repartition (one fewer stage per
-    # micro-batch). This is the standard small-file/split tuning a real
-    # deployment sets for its source; it only affects the streaming
-    # sections below (the batch queries above are already read).
+    # the CPU-bound ingest fuses straight onto the scan at fan width (the
+    # engine skips its fan-out repartition): the standard small-file
+    # split tuning a real deployment sets for its source. Only the
+    # streaming sections read after this.
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(256 * 1024))
-    wdir = tempfile.mkdtemp(prefix="ksc-bench-stream-warm-")
-    recs.limit(5000).coalesce(1).write.mode("append").json(f"{wdir}/in")
-    # Deferred discard sinks for the SUSTAINED sections only (r8): the
-    # DRQ/DMQ appends ride the inter-batch gap and are drained after the
-    # stream terminates — the pipelined deployment mode the flag exists
-    # for. The single-batch engine number above stays synchronous: with
+    # Deferred discard sinks for the SUSTAINED sections only: the DRQ/DMQ
+    # appends ride the inter-batch gap and are drained after the stream
+    # terminates. The single-batch number above stays synchronous: with
     # no next batch to overlap, deferral would merely move a real write
     # outside the stopwatch.
     import dataclasses
 
-    stream_cfg = dataclasses.replace(eng.config, deferred_discard_sinks=True)
-    weng = Engine(
-        spark,
-        stream_cfg,
-        f"{wdir}/state",
-        f"{wdir}/drq",
-        f"{wdir}/dmq",
-        [TaskDef("validate", validate)],
-    )
-    wq = weng.attach(stream_records(spark, f"{wdir}/in"), f"{wdir}/ckpt").start()
-    wq.awaitTermination(120)
+    stream_cfg = dataclasses.replace(cfg, deferred_discard_sinks=True)
+    # warm the streaming machinery (sink planning, checkpoint log, first
+    # state write) with a throwaway stream of one full-size (5k)
+    # micro-batch, for the same reason as the engine warm-up
+    wdir = tempfile.mkdtemp(prefix="ksc-bench-stream-warm-")
+    recs.limit(5000).coalesce(1).write.mode("append").json(f"{wdir}/in")
+    weng = engine(stream_cfg, wdir)
+    weng.attach(stream_records(spark, f"{wdir}/in"), f"{wdir}/ckpt").start().awaitTermination(120)
     weng.drain_discard_sinks()
 
-    seng = Engine(
-        spark,
-        stream_cfg,
-        f"{sdir}/state",
-        f"{sdir}/drq",
-        f"{sdir}/dmq",
-        [TaskDef("validate", validate)],
-    )
+    seng = engine(stream_cfg, sdir)
     t0 = time.perf_counter()
     q = seng.attach(stream_records(spark, f"{sdir}/in"), f"{sdir}/ckpt").start()
     q.awaitTermination(600)
     seng.drain_discard_sinks()  # timed: durable envelopes, not in-flight
     stream_sec = round(time.perf_counter() - t0, 3)
 
-    # Drift-immune engine number (VERDICT r10 #2): end-to-end msg/s swings
-    # ±40% with host drift, so round-over-round engine claims adjudicate on
-    # the steady-batch MARKS median — recorded here in the official
-    # artifact next to msg/s. Runs LAST among the engine sections so its
-    # ~8 extra batches of residual load can't inflate the streaming
-    # number above (the CLAUDE.md never-immediately-after rule); the
-    # marks themselves are per-batch driver walls, insensitive to what
-    # ran before once the 2 warm batches complete. Restore the default
-    # scan split first — the streaming sections shrank maxPartitionBytes
-    # and the marks instrument must see the same scan behavior as its
-    # standalone/A/B invocations.
-    spark.conf.unset("spark.sql.files.maxPartitionBytes")
-    from tests.bench_engine_marks import BATCH_SIZE as MARKS_BATCH_SIZE
-    from tests.bench_engine_marks import N_BATCHES as MARKS_BATCHES
-    from tests.bench_engine_marks import run_marks
-
-    n_ev_avail = (
-        _t(spark, SF_DIR, "events")
-        .where(F.col("event_id") < MARKS_BATCHES * MARKS_BATCH_SIZE)
-        .count()
-    )
-    if n_ev_avail >= 3 * MARKS_BATCH_SIZE:  # >= 2 warm + 1 steady batch
-        engine_marks = run_marks(
-            spark,
-            SF_DIR,
-            n_batches=min(MARKS_BATCHES, n_ev_avail // MARKS_BATCH_SIZE),
-        )
-    else:
-        engine_marks = {
-            "skipped": f"only {n_ev_avail} events at this sf; need "
-            f"{3 * MARKS_BATCH_SIZE} for a steady batch"
-        }
-
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf_val = float(sf)
     except ValueError:
         sf_val = sf
-    R8_ADDITIONS = {
-        "agg_reservoir_sample",
-        "curation_contamination_embedding",
-        "agg_kmv_set_ops",
-        "dedup_setsim_prefix",
-        "graph_triangle_counts",
-    }
-    # frozen r8 headline membership (25 entries) — the r8↔r9 comparator;
-    # explicit so appending r9 entries to HEADLINE can't shift it
-    # frozen r9 headline membership (27 entries) — the r9↔r10 comparator
-    R9_SET = {
-        "q1_pricing_summary", "q5_region_revenue", "q3_top_orders",
-        "window_topk_per_group", "sequencing_chains_per_key",
-        "dedup_replayed_batch", "dedup_exact", "dedup_minhash_lsh",
-        "dedup_embedding_cosine", "text_quality", "llm_prep_pipeline",
-        "sim_topk_bruteforce", "sim_kmeans_cells", "sim_pq_adc_topk",
-        "sim_ivfpq_topk", "dedup_semantic", "curation_contamination",
-        "scalar_datetime_json", "streaming_tumbling_window",
-        "streaming_session_window", "agg_reservoir_sample",
-        "curation_contamination_embedding", "agg_kmv_set_ops",
-        "dedup_setsim_prefix", "graph_triangle_counts",
-        "agg_topk_misra_gries", "graph_label_propagation",
-    }
-    R8_SET = {
-        "q1_pricing_summary", "q5_region_revenue", "q3_top_orders",
-        "window_topk_per_group", "sequencing_chains_per_key",
-        "dedup_replayed_batch", "dedup_exact", "dedup_minhash_lsh",
-        "dedup_embedding_cosine", "text_quality", "llm_prep_pipeline",
-        "sim_topk_bruteforce", "sim_kmeans_cells", "sim_pq_adc_topk",
-        "sim_ivfpq_topk", "dedup_semantic", "curation_contamination",
-        "scalar_datetime_json", "streaming_tumbling_window",
-        "streaming_session_window", "agg_reservoir_sample",
-        "curation_contamination_embedding", "agg_kmv_set_ops",
-        "dedup_setsim_prefix", "graph_triangle_counts",
-    }
-    # frozen r10 headline membership (29 entries) — the r10↔r11 comparator.
-    # Equal to the full capped HEADLINE while no entry has rotated out; the
-    # explicit frozen copy keeps the comparison mechanical once one does.
-    R10_SET = R9_SET | {"graph_personalized_pagerank", "text_jsd_source_divergence"}
-    # r11 froze no new set (it added no headline entries): the r11↔r12
-    # comparator IS value_r10_subset. `value` sums the CURRENT 29-entry
-    # headline only; rotated-out entries are timed for the frozen subsets
-    # but excluded here.
     out = {
         "metric": "headline_queries_total",
         "value": round(sum(timings[k] for k in HEADLINE), 3),
         "unit": "sec",
-        # cross-round comparability: the r7 headline set's subtotal, so
-        # the new entries don't read as a regression of the old total
-        "value_r7_subset": round(
-            sum(
-                v
-                for k, v in timings.items()
-                if k in R8_SET and k not in R8_ADDITIONS
-            ),
-            3,
-        ),
-        "value_r8_subset": round(
-            sum(v for k, v in timings.items() if k in R8_SET), 3
-        ),
-        "value_r9_subset": round(
-            sum(v for k, v in timings.items() if k in R9_SET), 3
-        ),
-        "value_r10_subset": round(
-            sum(v for k, v in timings.items() if k in R10_SET), 3
-        ),
         "queries": timings,
         "index_timing": index_timing,
         "model_build_marks": model_build_marks,
@@ -431,7 +244,6 @@ def measure(loadavg: float, load_contaminated: bool) -> dict:
             "sec": engine_sec,
             "msgs_per_sec": round(n_msgs / engine_sec, 1),
         },
-        "engine_marks": engine_marks,
         "streaming": {
             "messages": n_msgs,
             "micro_batches": 4,
@@ -443,55 +255,10 @@ def measure(loadavg: float, load_contaminated: bool) -> dict:
     return out
 
 
-def _engine_paths_changed(base_ref: str) -> list[str]:
-    """Engine-relevant files differing from base_ref (committed or not).
-
-    Gates the A/B (VERDICT r9 #3): when nothing engine-side changed, the
-    instrument is skipped instead of emitting an unresolved-by-default
-    record; when something DID change, it runs with enough passes to
-    resolve a ~1.2x effect on this host.
-
-    Diff-gated on the BATCH-PATH modules only (VERDICT r12 #4): the A/B
-    measures process_batch marks, so only files on that path can move
-    them. streaming/stateful.py holds query-surface keepers (the
-    applyInPandasWithState twins) that never run inside process_batch —
-    an additive change there used to trigger a ~2-minute A/B that could
-    only measure host drift (r12 recorded exactly that, honestly
-    unresolved).
-    """
-    import subprocess
-
-    try:
-        r = subprocess.run(
-            [
-                "git", "diff", "--name-only", base_ref, "--",
-                "kinesis_stream_consumer_spark/streaming/engine.py",
-                "kinesis_stream_consumer_spark/streaming/state.py",
-                "kinesis_stream_consumer_spark/streaming/dlq.py",
-                "kinesis_stream_consumer_spark/streaming/ingest.py",
-                "kinesis_stream_consumer_spark/streaming/sequencing.py",
-                "kinesis_stream_consumer_spark/streaming/tasks.py",
-                "kinesis_stream_consumer_spark/streaming/__init__.py",
-                "kinesis_stream_consumer_spark/sources",
-                "kinesis_stream_consumer_spark/config.py",
-            ],
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            capture_output=True, text=True, timeout=30,
-        )
-        if r.returncode != 0:
-            return [f"git-diff-failed: {r.stderr.strip()[:200]}"]
-        return [ln for ln in r.stdout.splitlines() if ln.strip()]
-    except Exception as e:  # pragma: no cover - defensive
-        return [f"git-diff-failed: {e}"]
-
-
 def main() -> None:
-    # Contamination retry policy (VERDICT r9 #1): the r9 official record
-    # was taken at loadavg 2.42 and showed phantom regressions a clean
-    # rerun refuted. Retry the whole wait-and-measure cycle (fresh JVM
-    # each attempt, cool-down gate BEFORE the JVM starts so the measured
-    # load is residual external load) and ship the FIRST uncontaminated
-    # record; only if every attempt is contaminated, ship the fastest one
+    # Retry the whole wait-and-measure cycle (fresh JVM each attempt, the
+    # quiet gate BEFORE the JVM starts) and ship the FIRST uncontaminated
+    # record; if every attempt is contaminated, ship the fastest one,
     # flagged load_contaminated with the attempt count.
     max_attempts = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "3")))
     attempts: list[dict] = []
@@ -513,51 +280,10 @@ def main() -> None:
         out = min(attempts, key=lambda o: o["value"])
     out["attempts"] = len(attempts)
 
-    # Interleaved A/B of the engine sections vs the pinned base ref
-    # (tests/ab_base_ref.txt = last round's final commit; override with
-    # SPARK_GRAFT_AB_BASE, disable with SPARK_GRAFT_AB=0). Absolute msg/s
-    # on this host drifts 1.4× between identical runs hours apart, so
-    # THESE RATIOS — NEW/OLD medians from arms run back-to-back in the
-    # same window, each arm a fresh JVM behind the same quiet gate — are
-    # the regression signal, not the absolutes above (VERDICT r7 #1c).
-    # Runs AFTER spark.stop() so our own JVM isn't load under the arms.
-    ab_base = os.environ.get("SPARK_GRAFT_AB_BASE")
-    if ab_base is None:
-        ref_file = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "tests", "ab_base_ref.txt",
-        )
-        if os.path.exists(ref_file):
-            ab_base = open(ref_file).read().strip()
-    if ab_base and os.environ.get("SPARK_GRAFT_AB", "1") != "0":
-        # A/B gating (VERDICT r9 #3): run only when an engine-side change
-        # exists vs the base ref — then with 4 interleaved passes/arm so
-        # the marks instrument can actually resolve; otherwise record an
-        # explicit skip, never an unresolved-by-default.
-        changed = _engine_paths_changed(ab_base)
-        if not changed:
-            out["engine_ab"] = {
-                "base_ref": ab_base,
-                "skipped": "no batch-path changes (engine.py/state.py/"
-                "dlq.py/ingest.py/sequencing.py/tasks.py/sources/config)",
-            }
-        else:
-            try:
-                from tests.bench_engine_only import ab
-
-                passes = int(os.environ.get("SPARK_GRAFT_AB_PASSES", "4"))
-                out["engine_ab"] = ab(ab_base, marks_passes=passes)
-                out["engine_ab"]["changed_files"] = changed[:20]
-            except Exception as e:  # never fail the bench over the A/B extra
-                out["engine_ab"] = {"base_ref": ab_base, "error": str(e)[:500]}
-    # Artifact hygiene (VERDICT r8 #1): the fully-attributed record grew
-    # past the driver's tail-capture window in r8 and the official bench
-    # record became unparseable ("parsed": null). Emit THREE artifacts:
-    #   1. the full detail, written to a sidecar file (always complete),
-    #   2. the full detail line on stdout (may be tail-truncated — fine),
-    #   3. LAST, a compact line with the headline totals + per-query
-    #      seconds but none of the attribution payloads, so the tail
-    #      capture always ENDS with a parseable record.
+    # Three artifacts: the full record in the BENCH_DETAIL.json sidecar
+    # (always complete), the full record on stdout (may be cut by a
+    # bounded tail capture), and LAST a compact line without the
+    # attribution payloads, so a tail capture always ends parseable.
     try:
         with open(
             os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -570,28 +296,13 @@ def main() -> None:
     compact = {
         k: out[k]
         for k in (
-            "metric", "value", "unit", "value_r7_subset", "value_r8_subset",
-            "value_r9_subset", "value_r10_subset", "queries", "sf", "loadavg",
+            "metric", "value", "unit", "queries", "sf", "loadavg",
             "load_contaminated",
         )
     }
     compact["engine_msgs_per_sec"] = out["engine"]["msgs_per_sec"]
     compact["streaming_msgs_per_sec"] = out["streaming"]["msgs_per_sec"]
-    marks = out.get("engine_marks", {})
-    if "steady_median" in marks:
-        compact["engine_marks_median"] = marks["steady_median"]
-        compact["engine_marks_range"] = marks["steady_range"]
     compact["attempts"] = out.get("attempts", 1)
-    ab_out = out.get("engine_ab")
-    if isinstance(ab_out, dict):
-        compact["engine_ab"] = {
-            k: ab_out[k]
-            for k in (
-                "marks_ratio", "unresolved", "engine_ratio",
-                "streaming_ratio", "error", "skipped",
-            )
-            if k in ab_out
-        }
     print(json.dumps(compact))
 
 

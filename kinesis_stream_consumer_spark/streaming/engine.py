@@ -221,8 +221,26 @@ class _Ingested(NamedTuple):
         12k-record batch at 500 rows/task ran 25 exec tasks in 6-7
         waves. Capped at the slots, the exec+save stage went from 33
         tasks and 4.3 core-s to 12 tasks and 1.3 core-s per pass (exec
-        width 4, 8 and 25: ~1.5, 1.7 and 2.5 s per pass). The rows/500
-        bound keeps a tiny batch on a wide cluster to a few tasks."""
+        width 4, 8 and 25: ~1.5, 1.7 and 2.5 s per pass).
+
+        The rows/500 bound keeps a small batch to a few tasks, and it
+        pays. Measured on a 4-vCPU host against exec always at the
+        slots: steady per-key batches on 2 shards, one noop task, 12
+        timed after 4 warm, 3 interleaved runs per arm, median wall per
+        batch:
+
+            slots  batch  this rule     at the slots  executor run, rule -> slots
+            4      10     0.44-0.46 s   0.48-0.51 s   0.23 -> 0.6 core-s
+            4      200    0.50-0.53 s   0.56-0.64 s
+            16     10     0.48-0.51 s   0.95-1.00 s   0.7 -> 6.9 core-s
+            16     200    0.47-0.58 s   0.95-1.02 s
+
+        (16 slots: a ``local[16]`` session.) Sizing the speculative plan
+        at the slots instead of from the previous batch's count made no
+        resolved difference on perfbench's ``engine_large_replay`` (seed
+        1, 4 interleaved runs per arm: ``items_per_s`` 3230-3379 against
+        3237-3370; jobs per pass 9.33 -> 9.00), so the estimate stays
+        too."""
         return max(1, min(self.slots, -(-n_records // 500)))
 
 
@@ -1036,7 +1054,21 @@ class Engine:
         pre_process_batch gates it OFF: the build invokes the hook, and a
         discarded build would fire a side-effecting hook twice per batch
         where the reference calls preProcessBatch exactly once
-        (kinesis-processing.js:292-298)."""
+        (kinesis-processing.js:292-298).
+
+        A discarded plan is not free: planning its lazy checkpoint has
+        already run its AQE stages, so an uncovered warm batch runs more
+        jobs than a covered one. Two ways round that were measured on
+        perfbench's ``engine_large_replay`` (seed 1, interleaved runs)
+        and stay unbuilt:
+
+        - deciding keep or discard before those AQE stages run (the only
+          cheap way to stop an uncovered batch paying for its discarded
+          plan) made ``op_p50_s`` worse in 4 of 4 pairs, 1.43-1.65 s
+          against 1.40-1.46 s;
+        - letting AQE size the exec shuffle (``repartition("chain_key")``,
+          3-4 tasks per 12k-record pass) made ``op_p50_s`` worse in 5 of
+          6 pairs, median ``items_per_s`` 3127 against 3239."""
         speculative = None
         if (
             saved is not None
@@ -1181,11 +1213,17 @@ class Engine:
             )
             chain_col = "chain_key"
         else:
-            # Q5: no ordering ⇒ map straight over the scan; D1
-            # within-batch dedup needs one shuffle here (no chain sort
-            # to make duplicate identities adjacent), after which each
-            # identity is its own chain
-            ordered = revived.dropDuplicates(["identity"])
+            # Q5: no ordering; D1 within-batch dedup needs one shuffle
+            # here (no chain sort to make duplicate identities adjacent),
+            # after which each identity is its own chain. The explicit
+            # repartition is that shuffle: the dedup aggregate's
+            # distribution is already satisfied, so there is no second
+            # exchange, and the width is n_parts as on the sequenced path
+            # (left to AQE, the dedup shuffle coalesces below n_parts and
+            # the batch would report a width it did not run).
+            ordered = revived.repartition(n_parts, "identity").dropDuplicates(
+                ["identity"]
+            )
             chain_col = "identity"
         # _one_fully_finalised (processAll scoping, X2) is emitted by the
         # exec fn itself — the executor already holds the parsed task

@@ -1157,9 +1157,12 @@ def test_exec_width_is_the_task_slots(spark, tmp_path):
     Python stage wider than the slots pays its per-task launch cost again
     for every extra wave. Holds for the first batch's estimate, for the
     steady-state one (the previous batch's count) and right after a jump
-    from a small batch, whose count would size it at 1 task. One shard,
-    so the small batch's saved state covers the large batch and the
-    speculative plan is a candidate on every batch."""
+    from a small batch, whose count would size it at 1 task. A small
+    batch after a small one runs 1 task: the rows/500 term, which keeps
+    a small batch off the slots it cannot use (see
+    ``_Ingested.exec_width``). One shard, so each batch's saved state
+    covers the next and the speculative plan is a candidate on every
+    batch."""
     from kinesis_stream_consumer_spark.plans.queries import _t
 
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -1170,9 +1173,43 @@ def test_exec_width_is_the_task_slots(spark, tmp_path):
     large = events_as_kinesis_records(events.where(F.col("event_id") < n), n_shards=1)
     small = events_as_kinesis_records(events.where(F.col("event_id") < 10), n_shards=1)
     eng = make_engine(spark, tmp_path, one_defs=[TaskDef("noop", noop)])
-    for batch_id, recs, size in ((0, large, n), (1, large, n), (2, small, 10), (3, large, n)):
+    batches = ((0, large, n), (1, large, n), (2, small, 10), (3, small, 10), (4, large, n))
+    for batch_id, recs, size in batches:
         res = eng.process_batch(recs, batch_id)
         assert res.messages == size and res.fully_finalised == size
+        if recs is large:
+            assert res.exec_partitions == slots, (batch_id, res.exec_partitions, slots)
+        elif batch_id == 3:
+            assert res.exec_partitions == 1, (batch_id, res.exec_partitions)
+
+
+def test_unsequenced_exec_partitions_is_the_exec_width(spark, tmp_path, monkeypatch):
+    """Unsequenced (Q5) mode: ``BatchResult.exec_partitions`` is the
+    number of partitions the exec stage really ran, small batch or large.
+    The D1 dedup shuffle is the exec width's repartition, so AQE cannot
+    coalesce it below the reported width."""
+    from kinesis_stream_consumer_spark.plans.queries import _t
+
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    slots = min(width, spark.sparkContext.defaultParallelism)
+    n = 500 * (slots + 1)
+    events = _t(spark, SF_CORRECT, "events")
+    large = events_as_kinesis_records(events.where(F.col("event_id") < n))
+    small = events_as_kinesis_records(events.where(F.col("event_id") < 10))
+    eng = make_engine(spark, tmp_path, one_defs=[TaskDef("noop", noop)], **UNSEQUENCED)
+    ran = []
+    revive_and_exec = eng._revive_and_exec
+
+    def spy(*args, **kwargs):
+        plan, prior = revive_and_exec(*args, **kwargs)
+        ran.append(plan.frame.rdd.getNumPartitions())
+        return plan, prior
+
+    monkeypatch.setattr(eng, "_revive_and_exec", spy)
+    for batch_id, recs, size in ((0, small, 10), (1, large, n), (2, small, 10)):
+        res = eng.process_batch(recs, batch_id)
+        assert res.messages == size and res.fully_finalised == size
+        assert res.exec_partitions == ran[-1], (batch_id, res.exec_partitions, ran)
         if recs is large:
             assert res.exec_partitions == slots, (batch_id, res.exec_partitions, slots)
 

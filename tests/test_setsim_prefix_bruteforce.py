@@ -1,10 +1,10 @@
-"""Focused pin for the r14 optimization-round setsim-prefix rewrite.
+"""Focused pin for the setsim-prefix rewrite.
 
-``prefix_filter_jaccard_pairs`` changed internals this round: the global
-shingle document-frequency moved from a groupBy + join-back (which ran
-the shingle explode twice and added a broadcast join) to a single
-COUNT() OVER (PARTITION BY shingle) window — same df values, one
-Generate, one exchange fewer. Results must be identical; this pins the
+``prefix_filter_jaccard_pairs`` computes the global shingle
+document-frequency with a single COUNT() OVER (PARTITION BY shingle)
+window instead of a groupBy + join-back (which ran the shingle explode
+twice and added a broadcast join) — same df values, one Generate, one
+exchange fewer. Results must be identical; this pins the
 operator end-to-end against a structurally different pure-Python
 brute-force all-pairs Jaccard on a literal corpus (the same contract as
 the DuckDB oracle, but self-contained and explicit about the prefix

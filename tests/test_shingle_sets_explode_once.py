@@ -1,4 +1,4 @@
-"""Structural pin for the r14 lazy shingle-set checkpoint fusion (ADVICE r14).
+"""Structural pin for the lazy shingle-set checkpoint fusion.
 
 The three shingle pipelines (``minhash_lsh_candidate_pairs``,
 ``minhash_lsh_incremental_pairs``, ``prefix_filter_jaccard_pairs``) hold a

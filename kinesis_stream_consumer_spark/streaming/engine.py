@@ -31,7 +31,11 @@ Replay contract (F1): `process_batch` raising `BatchReplayError` after the
 state save is the Lambda-failure analogue — under `foreachBatch` Spark
 retries the micro-batch, the saved state makes the retry idempotent
 (completed tasks revive as Completed and are skipped, attempts preserved —
-test/kinesis-consumer.test.js:746-845).
+test/kinesis-consumer.test.js:746-845). A replay whose records are
+identical to the failed pass's (the same count and hash sums over their
+record JSON) reuses that pass's phase 1: no second ingest and no stats
+job, straight to phase 2 with the known stats. Only with no ingest seam
+configured: a user seam fn may be nondeterministic.
 """
 
 from __future__ import annotations
@@ -130,6 +134,59 @@ def _assign_rows(out: pd.DataFrame, names: List[str], rows: list) -> None:
 def _live(states: DataFrame) -> DataFrame:
     """The state rows a message can revive from."""
     return states.where(F.col("kind").isin("message", "rejected"))
+
+
+# The ingest seams (config fns). With any of them set, phase 1 is user
+# code that may be nondeterministic, so a replay re-ingests.
+_INGEST_SEAMS = (
+    "extract_messages_from_record",
+    "resolve_event_id_and_seq_nos",
+    "extract_message_from_record",
+    "generate_md5s",
+    "resolve_message_ids_and_seq_nos",
+)
+# the replay digest: the record count and two hash sums (_digest_sums)
+_DIGEST_COLS = ("n_rec", "_d_murmur", "_d_xx")
+
+
+def _replayable(config: EngineConfig) -> bool:
+    """Whether phase 1 is a function of the records and the config alone,
+    so a replay of identical records may reuse it."""
+    return all(getattr(config, seam) is None for seam in _INGEST_SEAMS)
+
+
+def _digest_sums(record_json: Column, head: Column) -> List[Column]:
+    """Two independent hash sums over the record JSON of the ``head``
+    rows; with their count, an order-free digest of a batch's records.
+    Murmur3's 32-bit ``hash`` and the top 32 bits of ``xxhash64`` each
+    sum in a long for any batch under 2^31 records; a plain sum of
+    64-bit hashes overflows under ANSI."""
+    return [
+        F.sum(F.when(head, F.hash(record_json)).otherwise(0)).alias("_d_murmur"),
+        F.sum(
+            F.when(head, F.shiftright(F.xxhash64(record_json), 32)).otherwise(0)
+        ).alias("_d_xx"),
+    ]
+
+
+def _digest(rows: list) -> Tuple[int, ...]:
+    """The digest from aggregate rows carrying ``_DIGEST_COLS``: the sum
+    over the rows (the stats job returns one row per shard key)."""
+    return tuple(sum(int(r[c] or 0) for r in rows) for c in _DIGEST_COLS)
+
+
+def _records_digest(records: DataFrame) -> Tuple[int, ...]:
+    """The digest of raw records, equal to the stats job's over the same
+    records: every default ingest path builds ``record_json`` as this
+    ``to_json`` of the record struct. One JVM job of one task (after
+    ``coalesce(1)`` the global aggregate needs no exchange)."""
+    record_json = F.to_json(F.struct(*records.columns))
+    row = (
+        records.coalesce(1)
+        .agg(F.count(F.lit(1)).alias("n_rec"), *_digest_sums(record_json, F.lit(True)))
+        .first()
+    )
+    return _digest([row])
 
 
 def _registers(
@@ -245,11 +302,13 @@ class _Ingested(NamedTuple):
 
 
 class _Stats(NamedTuple):
-    """The stats job's result: the batch's shard keys and counts."""
+    """The stats job's result: the batch's shard keys and counts, and,
+    with no ingest seam configured, the records' replay digest."""
 
     shards: frozenset
     n_records: int
     n_unusable: int
+    digest: Optional[Tuple[int, ...]] = None
 
 
 class _Exec(NamedTuple):
@@ -306,7 +365,7 @@ class BatchResult:
     # exec-stage width this batch ran at: min(task slots, ~rows/500),
     # where the slots are defaultParallelism capped by the session
     # shuffle width — a big batch runs at full cluster width, in one wave
-    # (see _build_exec's sizing comment)
+    # (see _Ingested.exec_width)
     exec_partitions: int = 0
 
 
@@ -372,6 +431,12 @@ class Engine:
         # batch's message-count seeds the next batch's exec task sizing so
         # the whole phase-2 plan can be built while the stats job runs.
         self._last_n_records: Optional[int] = None
+        # The replay cache: the phase 1 (frames over its materialized
+        # checkpoint, and the stats with their digest) of a pass that
+        # raised BatchReplayError. The next pass takes it, whatever it
+        # then does, and reuses it iff its records have the same digest
+        # (_replayed_phase1); a commit or close() leaves none.
+        self._replay_phase1: Optional[Tuple[_Ingested, _Stats]] = None
         # The engine's concurrent jobs: the stats collect during that
         # overlap, then the DRQ append beside the state save. Threads
         # start on first use; close() joins them.
@@ -833,9 +898,10 @@ class Engine:
             f.result()
 
     def close(self) -> None:
-        """Drain the deferred sinks, then stop the engine's thread pools
-        (joining their threads). Safe to call twice; the engine runs no
-        batch afterwards."""
+        """Drop the replay cache, drain the deferred sinks, then stop the
+        engine's thread pools (joining their threads). Safe to call twice;
+        the engine runs no batch afterwards."""
+        self._replay_phase1 = None
         try:
             self.drain_discard_sinks()
         finally:
@@ -860,7 +926,9 @@ class Engine:
         before its input exists:
 
         1. initiate: ``_ingest`` → ``_stats_and_speculate`` (the stats job,
-           overlapped with a speculative phase-2 plan);
+           overlapped with a speculative phase-2 plan), or, on a replay of
+           the records whose pass just raised ``BatchReplayError``, that
+           pass's phase 1 (``_replayed_phase1``);
         2. process: ``_revive_and_exec`` (T1 load, T2 revive, processOne
            exec), then ``_process_all`` when there are processAll defs;
         3. finalise: ``_count_finalised`` → ``_save_and_sink`` (DRQ and
@@ -888,9 +956,15 @@ class Engine:
             if remaining_time_ms is not None
             else None
         )
-        ing = self._ingest(records)
-        saved = self._reusable_state()
-        stats, speculative = self._stats_and_speculate(ing, saved, deadline)
+        phase1 = self._replayed_phase1(records)
+        if phase1 is None:
+            ing = self._ingest(records)
+            saved = self._reusable_state()
+            stats, speculative = self._stats_and_speculate(ing, saved, deadline)
+        else:
+            # no stats job, so no speculative plan: phase 2 is built once,
+            # at the known width
+            (ing, stats), saved, speculative = phase1, self._reusable_state(), None
         plan, prior_all = self._revive_and_exec(
             ing, stats, saved, speculative, deadline
         )
@@ -924,6 +998,7 @@ class Engine:
                 exec_partitions=plan.n_parts,
             ),
             counted.frame,
+            (ing, stats),
         )
 
     # ---- Phase 1: initiate -------------------------------------------------
@@ -1010,12 +1085,37 @@ class Engine:
         is_delivery_head = (
             F.col("event_sub_seq_no").isNull() | (F.col("event_sub_seq_no") == 0)
         )
+        # The replay digest rides the same job, over the same delivery
+        # heads: the record JSON of each record, once (_records_digest
+        # computes it from raw records).
+        digest = (
+            _digest_sums(F.col("record_json"), is_delivery_head)
+            if _replayable(cfg)
+            else []
+        )
         stats = tagged.groupBy(stats_key.alias("shardOrEventID")).agg(
             F.sum(F.when(is_delivery_head, 1).otherwise(0)).alias("n_rec"),
             F.sum(F.when(unusable, 1).otherwise(0)).alias("n_unus"),
+            *digest,
         )
         self._mark("phase1_plan")
         return _Ingested(msgs, tagged.where(unusable), stats, width, slots)
+
+    def _replayed_phase1(
+        self, records: DataFrame
+    ) -> Optional[Tuple[_Ingested, _Stats]]:
+        """The phase 1 of the last pass if that pass raised
+        ``BatchReplayError`` and ``records`` have its digest: phase 1 is
+        a function of the records and the config alone, and its
+        checkpoint is materialized already. The cache serves one pass:
+        taken here whatever the outcome, it is set again only by a pass
+        that fails (``_commit_or_replay``)."""
+        cached, self._replay_phase1 = self._replay_phase1, None
+        if cached is None:
+            return None
+        same = _records_digest(records) == cached[1].digest
+        self._mark("replay_digest")
+        return cached if same else None
 
     def _reusable_state(self) -> Optional[_SavedState]:
         """The prior state known before the stats job, with the default
@@ -1043,10 +1143,11 @@ class Engine:
         matches on identity, so rows from uninvolved shards never match);
         task sizing seeds from the last batch's count (steady
         micro-batches are same-sized; a mis-estimate only re-sizes tasks,
-        never changes results), or from full cluster width before the
-        first batch. ``_revive_and_exec`` keeps the plan only if the slice
-        covers the batch's shards and the plan is at least as wide as the
-        batch's real count calls for.
+        never changes results), or before the first batch from
+        ``ing.slots * 500`` rows, the count at which ``exec_width``
+        reaches the slots. ``_revive_and_exec`` keeps the plan only if
+        the slice covers the batch's shards and the plan is at least as
+        wide as the batch's real count calls for.
 
         Restricted to the fused path: the processAll variant runs an
         aggregate action during plan construction, which must not race
@@ -1077,7 +1178,7 @@ class Engine:
         ):
             rows_fut = self._pool.submit(ing.stats.collect)
             est = self._last_n_records
-            if est is None:  # first batch: full cluster width
+            if est is None:  # first batch: the width of the slots
                 est = ing.slots * 500
             speculative = self._build_exec(ing, saved.revive_slice, est, deadline)
             rows = rows_fut.result()
@@ -1090,6 +1191,7 @@ class Engine:
             frozenset(r["shardOrEventID"] for r in rows),
             int(sum(r["n_rec"] for r in rows)),
             int(sum(r["n_unus"] for r in rows)),
+            _digest(rows) if _replayable(self.config) else None,
         )
         self._last_n_records = stats.n_records
         return stats, speculative
@@ -1423,10 +1525,15 @@ class Engine:
                 dmq()
 
     def _commit_or_replay(
-        self, result: BatchResult, finalised: DataFrame
+        self,
+        result: BatchResult,
+        finalised: DataFrame,
+        phase1: Tuple[_Ingested, _Stats],
     ) -> BatchResult:
         """postFinaliseBatch, opt-in compaction, then F1/F2: commit, or
-        resubmit / raise so the incomplete messages are replayed."""
+        resubmit / raise so the incomplete messages are replayed. Before
+        the raise, ``phase1`` becomes the replay cache when it carries a
+        digest (no ingest seam), for the replay to reuse."""
         cfg = self.config
         # F3 hook: postFinaliseBatch
         if cfg.post_finalise_batch is not None:
@@ -1455,6 +1562,8 @@ class Engine:
                 .json(self.resubmit_path)
             )
             return result
+        if phase1[1].digest is not None:
+            self._replay_phase1 = phase1
         raise BatchReplayError(result)  # F1: fail ⇒ source replays batch
 
     # --- S1: streaming attachment ------------------------------------------

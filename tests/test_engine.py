@@ -1251,3 +1251,215 @@ def test_sample_sketch_register_bounded_and_compaction_immortal(spark, tmp_path)
     dropped = eng.state.compact(before_batch_id=99)
     assert dropped > 0
     assert regs() == before
+
+
+# --- a replay reuses the failed pass's phase 1 -------------------------------
+
+
+def _counting_ingest(monkeypatch) -> list:
+    """Record every call the engine makes into ``ingest``."""
+    import kinesis_stream_consumer_spark.streaming.engine as engine_mod
+
+    calls = []
+    real = engine_mod.ingest
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(engine_mod, "ingest", counted)
+    return calls
+
+
+def transient_or_reject(message, task):
+    """Every fourth message fails its first attempt; every fifth is
+    rejected. Blocked chain successors run on the replay."""
+    if message["id1"] % 4 == 1 and task.attempts < 2:
+        raise RuntimeError("transient")
+    if message["id1"] % 5 == 3:
+        task.reject("rejected")
+
+
+def _outcome(spark, eng) -> tuple:
+    """State, DMQ and DRQ, without the wall-clock fields."""
+    state = sorted(
+        (
+            r["kind"],
+            r["identity"],
+            r["batch_id"],
+            json.dumps(
+                {
+                    name: [t[k] for k in ("status", "attempts", "reason", "error")]
+                    for name, t in json.loads(r["tasks_json"]).items()
+                }
+                if r["tasks_json"]
+                else None
+            ),
+        )
+        for r in eng.state.read_all().collect()
+    )
+    dmq = Counter(
+        (r["eventID"], r["reasonRejected"])
+        for r in spark.read.parquet(eng.dmq_path).collect()
+    )
+    drq = Counter(
+        (r["eventID"], r["reasonUnusable"])
+        for r in spark.read.parquet(eng.drq_path).collect()
+    )
+    return state, dmq, drq
+
+
+def test_replay_of_same_records_reuses_phase1(spark, tmp_path, monkeypatch):
+    """A pass that raises BatchReplayError keeps its phase 1; the replay of
+    the same records reuses it (``ingest`` runs once for both passes) and
+    ends exactly where two passes on fresh engines end, which cannot
+    reuse anything: same state, DMQ, DRQ and result."""
+    from dataclasses import asdict
+
+    defs = [TaskDef("t1", transient_or_reject)]
+    fresh = []
+    for p in range(2):
+        eng = make_engine(spark, tmp_path / "fresh", one_defs=defs)
+        try:
+            fresh.append(eng.process_batch(records_df(spark, 12, bad=2), batch_id=1))
+        except BatchReplayError as e:
+            assert p == 0
+            fresh.append(e.result)
+    assert fresh[1].incomplete == 0 and fresh[1].rejected_to_dmq > 0
+    expected = _outcome(spark, eng)
+
+    calls = _counting_ingest(monkeypatch)
+    eng = make_engine(spark, tmp_path / "reuse", one_defs=defs)
+    with pytest.raises(BatchReplayError) as ei:
+        eng.process_batch(records_df(spark, 12, bad=2), batch_id=1)
+    assert eng._replay_phase1 is not None
+    res = eng.process_batch(records_df(spark, 12, bad=2), batch_id=1)
+    assert len(calls) == 1
+    assert eng._replay_phase1 is None  # a commit leaves no cache
+    assert [asdict(ei.value.result), asdict(res)] == [asdict(r) for r in fresh]
+    assert _outcome(spark, eng) == expected
+
+
+def test_replay_of_other_records_reingests(spark, tmp_path, monkeypatch):
+    """After a BatchReplayError, different records under the same batch_id
+    do not match the cached digest: they are ingested, and the result is
+    theirs."""
+    calls = _counting_ingest(monkeypatch)
+    eng = make_engine(spark, tmp_path, one_defs=[TaskDef("t1", transient_or_reject)])
+    with pytest.raises(BatchReplayError):
+        eng.process_batch(records_df(spark, 12), batch_id=1)
+    res = eng.process_batch(records_df(spark, 13), batch_id=1)
+    assert len(calls) == 2
+    assert res.records == 13 and res.messages == 13 and res.incomplete == 0
+    assert "id1:12" in tasks_of(eng)
+
+
+def test_replay_under_ingest_seam_reingests(spark, tmp_path, monkeypatch):
+    """With an ingest seam fn configured phase 1 is user code, which may
+    be nondeterministic: the replay of the same records ingests again."""
+    from kinesis_stream_consumer_spark.streaming.ingest import generate_kinesis_md5s
+
+    calls = _counting_ingest(monkeypatch)
+    eng = make_engine(
+        spark,
+        tmp_path,
+        one_defs=[TaskDef("t1", transient_or_reject)],
+        generate_md5s=generate_kinesis_md5s,
+    )
+    with pytest.raises(BatchReplayError):
+        eng.process_batch(records_df(spark, 12), batch_id=1)
+    assert eng._replay_phase1 is None
+    res = eng.process_batch(records_df(spark, 12), batch_id=1)
+    assert len(calls) == 2 and res.incomplete == 0
+
+
+def always_fails(message, task):
+    raise RuntimeError("keep failing")
+
+
+def _assert_stats_digest_is_records_digest(eng, records, n_records):
+    """The digest the stats job computed while ingesting ``records`` is
+    the one computed from the raw records. Were they to differ, every
+    replay would silently re-ingest."""
+    from kinesis_stream_consumer_spark.streaming.engine import _records_digest
+
+    with pytest.raises(BatchReplayError) as ei:
+        eng.process_batch(records, batch_id=1)
+    assert ei.value.result.records == n_records
+    digest = eng._replay_phase1[1].digest
+    assert digest[0] == n_records
+    assert digest == _records_digest(records)
+    assert digest != _records_digest(records.limit(n_records - 1))
+
+
+def test_stats_digest_equals_records_digest_kinesis(spark, tmp_path):
+    """Plain records, KPL aggregates (one of them failing de-aggregation),
+    unusable records and a duplicate delivery in one batch."""
+    msgs = [
+        {"id1": i, "k1": i % 2, "k2": "x", "n1": f"2024-01-01T00:00:{i:02d}", "n2": i}
+        for i in range(8)
+    ]
+
+    def b64(data: bytes) -> str:
+        return base64.b64encode(data).decode()
+
+    def blob(ms) -> bytes:
+        return kpl_aggregate([("1", json.dumps(m).encode()) for m in ms])
+
+    broken = bytearray(blob(msgs[6:]))
+    broken[-1] ^= 0xFF  # md5 trailer mismatch: de-aggregation fails
+    rows = [
+        ("shardId-0:1", b64(json.dumps(msgs[0]).encode()), "1"),
+        ("shardId-0:2", b64(blob(msgs[1:4])), "1"),
+        ("shardId-0:3", b64(blob([msgs[4], "not an object"])), "1"),
+        ("shardId-0:4", b64(bytes(broken)), "1"),
+        ("shardId-1:5", b64(b"this is not json"), "2"),
+        ("shardId-1:6", b64(json.dumps(msgs[5]).encode()), "2"),
+        ("shardId-1:6", b64(json.dumps(msgs[5]).encode()), "2"),  # duplicate
+    ]
+    records = kpl_records_df(spark, rows)
+    eng = make_engine(
+        spark, tmp_path, one_defs=[TaskDef("t1", always_fails)], kpl_encoded=True
+    )
+    _assert_stats_digest_is_records_digest(eng, records, len(rows))
+
+
+def test_stats_digest_equals_records_digest_dynamodb(spark, tmp_path):
+    """DynamoDB builds record_json the same way: an image that is not
+    JSON (unusable) and a duplicate delivery in one batch."""
+    from kinesis_stream_consumer_spark.config import StreamType
+    from kinesis_stream_consumer_spark.sources.records import DYNAMODB_RECORD_SCHEMA
+
+    def rec(i: int, image: str):
+        return {
+            "eventID": f"shardId-000000000000:{i:020d}",
+            "eventVersion": "1.1",
+            "eventName": "MODIFY",
+            "eventSource": "aws:dynamodb",
+            "eventSourceARN": "arn:aws:dynamodb:us-west-2:1:table/T/stream/S",
+            "awsRegion": "us-west-2",
+            "dynamodb": {
+                "Keys": json.dumps({"id1": i}),
+                "NewImage": image,
+                "OldImage": None,
+                "SequenceNumber": f"{i:021d}",
+                "SizeBytes": 100,
+                "StreamViewType": "NEW_AND_OLD_IMAGES",
+            },
+        }
+
+    def image(i: int) -> str:
+        return json.dumps(
+            {"id1": i, "k1": i % 2, "k2": "x", "n1": f"2024-01-01T00:00:{i:02d}", "n2": i}
+        )
+
+    rows = [rec(i, image(i)) for i in range(4)]
+    rows += [rec(4, "this is not json"), rec(3, image(3))]  # unusable, duplicate
+    records = spark.createDataFrame(rows, schema=DYNAMODB_RECORD_SCHEMA)
+    eng = make_engine(
+        spark,
+        tmp_path,
+        one_defs=[TaskDef("t1", always_fails)],
+        stream_type=StreamType.dynamodb,
+    )
+    _assert_stats_digest_is_records_digest(eng, records, len(rows))
